@@ -5,9 +5,8 @@ The tracer
 
 - gives every lane call its own Spark job group, covering the builder
   call and the action;
-- after each lane, outside the lane's timing, counts the lane's jobs
-  as the delta of the maximum job id and reads each of their stages'
-  metrics from the status store (per-stage lookups);
+- after each lane, outside the lane's timing, reads the stage metrics
+  of the lane's jobs from the status store (per-stage lookups);
 - collects `StreamingQueryProgress` through a query listener;
 - wraps the public store functions of `streaming/components` and
   `plans/materialize.ensure_materialized` to count calls and time;
@@ -40,6 +39,21 @@ STREAM_PHASES = {"addBatch": "add_batch_ms", "queryPlanning": "planning_ms",
                  "walCommit": "wal_commit_ms"}
 
 
+def max_job_id(spark) -> int:
+    """The scheduler's job-id counter: jobs from every thread and job
+    group, unlike the retained-job list. Every run, traced or not,
+    counts a lane's jobs as its delta."""
+    return spark.sparkContext._jsc.sc().dagScheduler().numTotalJobs() - 1
+
+
+def codegen_compiles(spark) -> int:
+    """Whole-stage and expression classes compiled so far
+    (`CodegenMetrics`); read by every run around the timed window."""
+    source = spark._jvm.org.apache.spark.metrics.source
+    return getattr(source, "CodegenMetrics$").__getattr__("MODULE$") \
+        .METRIC_COMPILATION_TIME().getCount()
+
+
 def _progress_listener(sink: list):
     from pyspark.sql.streaming.listener import StreamingQueryListener
 
@@ -70,7 +84,6 @@ class Tracer:
         self.fn_calls: dict[str, int] = defaultdict(int)
         self.fn_s: dict[str, float] = defaultdict(float)
         self.materialize_hits = 0
-        self.lane_jobs: dict[str, list[int]] = defaultdict(list)
         self.stage_totals: dict[str, float] = defaultdict(float)
         self.record = False  # count only inside the timed window
 
@@ -131,25 +144,17 @@ class Tracer:
         return wrapper
 
     # -- per lane ------------------------------------------------------
-    def max_job_id(self) -> int:
-        # the scheduler's id counter: jobs from every thread and job
-        # group, unlike the retained-job list
-        return self.jsc.dagScheduler().numTotalJobs() - 1
-
-    def lane_begin(self, pass_no: int, lane: str) -> int:
+    def lane_begin(self, pass_no: int, lane: str) -> None:
         self.sc.setJobGroup(f"pass{pass_no}:{lane}", lane)
-        return self.max_job_id()
 
-    def lane_end(self, lane: str, job0: int) -> None:
+    def lane_end(self, job0: int, job1: int) -> None:
         """Outside the lane's timing: wait for the listener bus, then
-        read the lane's jobs and stages from the status store."""
+        read the stages of jobs job0+1..job1 from the status store."""
         self.sc.setLocalProperty("spark.jobGroup.id", None)
         self.sc.setLocalProperty("spark.job.description", None)
         self.jsc.listenerBus().waitUntilEmpty()
-        job1 = self.max_job_id()
         if not self.record:
             return
-        self.lane_jobs[lane].append(job1 - job0)
         tracker, store = self.sc.statusTracker(), self.jsc.statusStore()
         stages = set()
         for jid in range(job0 + 1, job1 + 1):
@@ -175,7 +180,6 @@ class Tracer:
     # -- JVM counters --------------------------------------------------
     def jvm_counters(self) -> dict:
         jvm = self.spark._jvm
-        cm = getattr(jvm.org.apache.spark.metrics.source, "CodegenMetrics$").__getattr__("MODULE$")
         cg = getattr(jvm.org.apache.spark.sql.catalyst.expressions.codegen,
                      "CodeGenerator$").__getattr__("MODULE$")
         mf = jvm.java.lang.management.ManagementFactory
@@ -185,7 +189,6 @@ class Tracer:
             if usage is not None and str(pool.getType()) == "Heap memory":
                 live += usage.getUsed()
         return {
-            "compiles": cm.METRIC_COMPILATION_TIME().getCount(),
             "compile_ns": cg.compileTime(),
             "gc_ms": sum(b.getCollectionTime() for b in mf.getGarbageCollectorMXBeans()),
             "heap_live_bytes": live,

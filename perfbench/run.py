@@ -4,8 +4,10 @@
 
 Run from the repository root. Each run gets a fresh run directory
 under `perfbench/.state/` holding its TMPDIR, SPARK_LOCAL_DIRS, the
-generated inputs and the stores, and a worker process (`worker.py`)
-in which Spark runs. This process reaps every process the worker
+stores and the input tables, which this process generates from the
+fixed `workloads.DATA_SEED` before any timing starts (`--seed` sets
+only the lane order). Spark runs in a worker process (`worker.py`);
+`setup_s` is the time from its spawn until it is ready. This process reaps every process the worker
 leaves behind, removes the run directory and prints one JSON line:
 `{"correct", "attempted", "failed", "metrics"}` with the end-to-end
 metrics (`--trace 0`) or the per-layer metrics (`--trace 1`) named in
@@ -33,6 +35,7 @@ HERE = os.path.dirname(os.path.abspath(__file__))
 ROOT = os.path.dirname(HERE)
 sys.path.insert(0, HERE)
 
+import datagen  # noqa: E402
 import procstat  # noqa: E402
 import workloads  # noqa: E402
 
@@ -81,7 +84,7 @@ def main() -> int:
     ap.add_argument("--trace", type=int, choices=(0, 1), default=0)
     ap.add_argument("--smoke", action="store_true")
     a = ap.parse_args()
-    t_spawn = time.time()
+    t_start = time.time()
 
     if a.workload not in workloads.WORKLOADS:
         return _fail(f"unknown workload {a.workload!r}")
@@ -100,6 +103,8 @@ def main() -> int:
     run_dir = os.path.join(HERE, ".state", f"run-{os.getpid()}-{uuid.uuid4().hex[:8]}")
     for sub in ("tmp", "local"):
         os.makedirs(os.path.join(run_dir, sub))
+    sf = workloads.SMOKE_SCALE if a.smoke else workloads.SCALE
+    data = os.path.join(run_dir, "data")
     env = dict(os.environ)
     env.update({
         "TMPDIR": os.path.join(run_dir, "tmp"),
@@ -115,18 +120,19 @@ def main() -> int:
     })
     result_path = os.path.join(run_dir, "result.json")
     log_path = os.path.join(run_dir, "worker.log")
-    cmd = [sys.executable, os.path.join(HERE, "worker.py"),
-           "--workload", a.workload, "--seed", str(a.seed),
-           "--seconds", str(a.seconds), "--trace", str(a.trace),
-           "--run-dir", run_dir, "--t0", repr(t_spawn), "--result", result_path]
-    if a.smoke:
-        cmd.append("--smoke")
     try:
+        datagen.write_tables(data, sf, workloads.DATA_SEED)
         with open(log_path, "w") as log:
+            t_spawn = time.time()
+            cmd = [sys.executable, os.path.join(HERE, "worker.py"),
+                   "--workload", a.workload, "--seed", str(a.seed),
+                   "--seconds", str(a.seconds), "--trace", str(a.trace),
+                   "--run-dir", run_dir, "--data", data,
+                   "--t0", repr(t_spawn), "--result", result_path]
             proc = subprocess.Popen(cmd, cwd=run_dir, env=env, stdout=log,
                                     stderr=subprocess.STDOUT, start_new_session=True)
             try:
-                rc = proc.wait(timeout=RUN_LIMIT_S - (time.time() - t_spawn))
+                rc = proc.wait(timeout=RUN_LIMIT_S - (time.time() - t_start))
             except subprocess.TimeoutExpired:
                 os.killpg(proc.pid, signal.SIGKILL)
                 proc.wait()
@@ -152,14 +158,16 @@ def main() -> int:
     if set(values) != names:
         return _fail(f"metric set differs from BENCHMARK.json: "
                      f"missing {sorted(names - set(values))}, extra {sorted(set(values) - names)}")
+    result["record"]["sf"] = sf
     records = os.path.join(HERE, ".records")
     os.makedirs(records, exist_ok=True)
-    rec = f"{a.workload}-seed{a.seed}-trace{a.trace}-{int(t_spawn)}.json"
-    with open(os.path.join(records, rec), "w") as f:
+    rec = os.path.join(records, f"{a.workload}-seed{a.seed}-trace{a.trace}-{int(t_start)}.json")
+    with open(rec, "w") as f:
         json.dump(result, f)
     host = result["per_layer"]
     print(f"perfbench: host steal {host['host.steal_pct']:.2f}% load1 {host['host.load1']:.2f}; "
-          f"run {time.time() - t_spawn:.1f}s; record {rec}", file=sys.stderr)
+          f"run {time.time() - t_start:.1f}s; record {os.path.relpath(rec, ROOT)}",
+          file=sys.stderr)
     print(json.dumps({
         "correct": result["correct"],
         "attempted": result["attempted"],

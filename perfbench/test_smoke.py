@@ -1,4 +1,4 @@
-"""The benchmark's own tests: input determinism, lane order, and a
+"""The benchmark's own tests: input determinism, seeded lane order, and a
 smoke run of each workload at sf0.001 checked against the output
 contract in BENCHMARK.json.
 
@@ -34,12 +34,11 @@ def _digest(d: str) -> str:
     return h.hexdigest()
 
 
-def test_inputs_repeat_per_seed(tmp_path):
-    a, b, c = (str(tmp_path / x) for x in "abc")
-    datagen.write_tables(a, workloads.SMOKE_SCALE, 7)
-    datagen.write_tables(b, workloads.SMOKE_SCALE, 7)
-    datagen.write_tables(c, workloads.SMOKE_SCALE, 8)
-    assert _digest(a) == _digest(b) != _digest(c)
+def test_inputs_repeat(tmp_path):
+    a, b = (str(tmp_path / x) for x in "ab")
+    datagen.write_tables(a, workloads.SMOKE_SCALE, workloads.DATA_SEED)
+    datagen.write_tables(b, workloads.SMOKE_SCALE, workloads.DATA_SEED)
+    assert _digest(a) == _digest(b)
 
 
 def test_pass_order_is_seeded_and_alternates():
@@ -47,6 +46,7 @@ def test_pass_order_is_seeded_and_alternates():
         order = workloads.pass_order(wl, 3, 1)
         assert sorted(order) == sorted(workloads.lanes(wl))
         assert order == workloads.pass_order(wl, 3, 1)
+        assert len({tuple(workloads.pass_order(wl, seed, 1)) for seed in range(10)}) > 1
     order = workloads.pass_order("store_rw", 3, 1)
     writes = set(workloads.write_lanes("store_rw"))
     assert [lane in writes for lane in order] == [True, False] * 3

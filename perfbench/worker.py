@@ -3,7 +3,10 @@ passes, check every lane's result of the last pass against its DuckDB
 oracle, write a result file.
 
 Started by `run.py`, which gives it an isolated run directory
-(TMPDIR, SPARK_LOCAL_DIRS, inputs) and removes it afterwards.
+(TMPDIR, SPARK_LOCAL_DIRS, the generated inputs) and removes it
+afterwards. The process is ready, and `setup_s` ends, once the
+session is up, every input table has been scanned once and the
+workload's stores are built.
 """
 
 from __future__ import annotations
@@ -11,7 +14,6 @@ from __future__ import annotations
 import argparse
 import json
 import os
-import shutil
 import statistics
 import subprocess
 import sys
@@ -21,11 +23,9 @@ import traceback
 HERE = os.path.dirname(os.path.abspath(__file__))
 sys.path.insert(0, HERE)
 
-import datagen  # noqa: E402
 import procstat  # noqa: E402
 import workloads  # noqa: E402
-
-INPUT_SETUPS = 3
+from layertrace import codegen_compiles, max_job_id  # noqa: E402
 
 
 def _log(msg: str) -> None:
@@ -36,10 +36,12 @@ def build(run_dir: str):
     from patientdataintegration_spark.session import build_session
 
     tmp = os.path.join(run_dir, "tmp")
+    heap = os.environ["SPARK_GRAFT_DRIVER_MEM"]
     spark = build_session("perfbench", extra_conf={
-        # a fixed-size heap (-Xms = the 1g -Xmx run.py sets) so RSS does
-        # not follow the collector's grow/shrink decisions
-        "spark.driver.extraJavaOptions": f"-Djava.io.tmpdir={tmp} -XX:-UsePerfData -Xms1g",
+        # a fixed-size heap (-Xms = the -Xmx that build_session takes
+        # from SPARK_GRAFT_DRIVER_MEM) so RSS does not follow the
+        # collector's grow/shrink decisions
+        "spark.driver.extraJavaOptions": f"-Djava.io.tmpdir={tmp} -XX:-UsePerfData -Xms{heap}",
         "spark.sql.warehouse.dir": os.path.join(run_dir, "warehouse"),
     })
     spark.sparkContext.setLogLevel("ERROR")
@@ -57,9 +59,8 @@ def start_python_workers(spark) -> None:
         .write.format("noop").mode("overwrite").save()
 
 
-def setup_inputs(spark, run_dir: str, sf: float, seed: int) -> tuple[str, list[float]]:
-    """Generate the seeded inputs and scan every table once (one job),
-    INPUT_SETUPS times into fresh directories; keep the last one."""
+def warm_inputs(spark, data: str) -> None:
+    """Scan every input table once, in one job."""
     from functools import reduce
 
     from pyspark.sql import functions as F
@@ -67,17 +68,8 @@ def setup_inputs(spark, run_dir: str, sf: float, seed: int) -> tuple[str, list[f
     from patientdataintegration_spark.sources.catalog import load_table
     from patientdataintegration_spark.verify import TABLES
 
-    times, data = [], None
-    for rep in range(INPUT_SETUPS):
-        if data:
-            shutil.rmtree(data)
-        data = os.path.join(run_dir, f"data{rep}")
-        t0 = time.perf_counter()
-        datagen.write_tables(data, sf, seed)
-        scans = [load_table(spark, data, t).select(F.lit(1).alias("one")) for t in TABLES]
-        reduce(lambda x, y: x.unionAll(y), scans).count()
-        times.append(time.perf_counter() - t0)
-    return data, times
+    scans = [load_table(spark, data, t).select(F.lit(1).alias("one")) for t in TABLES]
+    reduce(lambda x, y: x.unionAll(y), scans).count()
 
 
 def duck(run_dir: str, data: str):
@@ -133,6 +125,7 @@ def timed_window(spark, data: str, workload: str, seed: int, seconds: float,
 
     writes = set(workloads.write_lanes(workload))
     lane_s: dict[str, list[float]] = {lane: [] for lane in workloads.lanes(workload)}
+    lane_jobs: dict[str, list[int]] = {lane: [] for lane in workloads.lanes(workload)}
     build_s = action_s = crud_s = serve_s = 0.0
     walls, failed = [], 0
     sampler = procstat.RssSampler(jvm_pid).start()
@@ -142,7 +135,9 @@ def timed_window(spark, data: str, workload: str, seed: int, seconds: float,
         pspan = tracer.open(f"pass{pass_no}", "pass") if tracer else None
         wall, ok, dfs = 0.0, True, {}
         for lane in workloads.pass_order(workload, seed, pass_no):
-            job0 = tracer.lane_begin(pass_no, lane) if tracer else None
+            job0 = max_job_id(spark)
+            if tracer:
+                tracer.lane_begin(pass_no, lane)
             lspan = tracer.open(lane, "lane", pass_no=pass_no) if tracer else None
             t0 = time.perf_counter()
             t1 = df = None
@@ -160,11 +155,13 @@ def timed_window(spark, data: str, workload: str, seed: int, seconds: float,
                 ok, df = False, None
                 _log(f"pass {pass_no} lane {lane} raised:\n{traceback.format_exc()}")
             t2 = time.perf_counter()
+            job1 = max_job_id(spark)
+            lane_jobs[lane].append(job1 - job0)
             if tracer:
                 while tracer._stack and tracer._stack[-1] != lspan:
                     tracer.close(tracer._stack[-1])
                 tracer.close(lspan)
-                tracer.lane_end(lane, job0)
+                tracer.lane_end(job0, job1)
             dfs[lane] = df
             dt = t2 - t0
             wall += dt
@@ -186,7 +183,8 @@ def timed_window(spark, data: str, workload: str, seed: int, seconds: float,
     rss = sampler.stop() or [procstat.tree_rss_mb(jvm_pid)]
     n = len(walls)
     return {
-        "walls": walls, "failed": failed, "window_s": window_s, "lane_s": lane_s, "dfs": dfs,
+        "walls": walls, "failed": failed, "window_s": window_s, "lane_s": lane_s,
+        "lane_jobs": lane_jobs, "dfs": dfs,
         "rss_p50_mb": statistics.median(j + w for j, w in rss),
         "per_op": {"suite.build_s": build_s / n, "suite.action_s": action_s / n,
                    "streaming.crud_s": crud_s / n, "streaming.serve_s": serve_s / n,
@@ -202,23 +200,23 @@ def main() -> int:
     ap.add_argument("--seconds", type=float, required=True)
     ap.add_argument("--trace", type=int, default=0)
     ap.add_argument("--run-dir", required=True)
+    ap.add_argument("--data", required=True)
     ap.add_argument("--t0", type=float, required=True, help="process spawn time (epoch s)")
     ap.add_argument("--result", required=True)
-    ap.add_argument("--smoke", action="store_true")
     a = ap.parse_args()
-    sf = workloads.SMOKE_SCALE if a.smoke else workloads.SCALE
 
     load_start = procstat.load1()
     spark = build(a.run_dir)
     boot_s = time.time() - a.t0
     jvm_pid = spark.sparkContext._gateway.proc.pid
 
-    data, input_s = setup_inputs(spark, a.run_dir, sf, a.seed)
     t0 = time.perf_counter()
-    workloads.prebuild(spark, data, a.workload)
-    prebuild_s = time.perf_counter() - t0
-    setup_s = boot_s + statistics.median(input_s) + prebuild_s
-    _log(f"setup {setup_s:.2f}s (boot {boot_s:.2f}, inputs {input_s}, prebuild {prebuild_s:.2f})")
+    warm_inputs(spark, a.data)
+    t1 = time.perf_counter()
+    workloads.prebuild(spark, a.data, a.workload)
+    inputs_s, prebuild_s = t1 - t0, time.perf_counter() - t1
+    setup_s = time.time() - a.t0
+    _log(f"setup {setup_s:.2f}s (boot {boot_s:.2f}, inputs {inputs_s:.2f}, prebuild {prebuild_s:.2f})")
 
     tracer = None
     if a.trace:
@@ -230,20 +228,22 @@ def main() -> int:
     c0 = procstat.cpu_times()
     cpu0 = (procstat.cpu_s(jvm_pid), procstat.tree_cpu_s(jvm_pid), procstat.cpu_s(os.getpid()))
     wb0 = procstat.write_bytes(jvm_pid)
+    comp0 = codegen_compiles(spark)
     if tracer:
         spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
         tracer.progress.clear()
         jc0 = tracer.jvm_counters()
         tracer.record = True
-    win = timed_window(spark, data, a.workload, a.seed, a.seconds, tracer, jvm_pid)
+    win = timed_window(spark, a.data, a.workload, a.seed, a.seconds, tracer, jvm_pid)
     if tracer:
         tracer.record = False
         jc1 = tracer.jvm_counters()
+    comp1 = codegen_compiles(spark)
     cpu1 = (procstat.cpu_s(jvm_pid), procstat.tree_cpu_s(jvm_pid), procstat.cpu_s(os.getpid()))
     wb1 = procstat.write_bytes(jvm_pid)
     c1 = procstat.cpu_times()
 
-    con = duck(a.run_dir, data)
+    con = duck(a.run_dir, a.data)
     t0 = time.perf_counter()
     chk = check(con, win["dfs"])
     check_s = time.perf_counter() - t0
@@ -252,6 +252,7 @@ def main() -> int:
          f"{len(chk['bad'])} lanes failed the check")
 
     n = len(win["walls"])
+    compiles = (comp1 - comp0) / n
     failed = n if chk["bad"] else win["failed"]
     ops_per_min = 60.0 * n / win["window_s"]
     cores = int(os.environ["SPARK_GRAFT_CPUS"])
@@ -262,26 +263,24 @@ def main() -> int:
         "cpu_s_per_op": sum(b - a for a, b in zip(cpu0, cpu1)) / n,
         "streaming.disk_write_mb": (wb1 - wb0) / 1e6 / n,
         "session.boot_s": boot_s,
-        "session.inputs_s": statistics.median(input_s),
+        "session.inputs_s": inputs_s,
         "session.prebuild_s": prebuild_s,
         "session.check_s": check_s,
         "host.steal_pct": procstat.steal_pct(c0, c1),
         "host.load1": load_start,
         "trace.ops_per_min": ops_per_min,
+        "spark.jobs": sum(map(sum, win["lane_jobs"].values())) / n,
+        "codegen.compiles": compiles,
     }
     all_lanes = [lane for w in workloads.WORKLOADS for lane in workloads.lanes(w)]
     for lane in all_lanes:
-        times = win["lane_s"].get(lane)
+        times, jobs = win["lane_s"].get(lane), win["lane_jobs"].get(lane)
         layer[f"suite.{lane}.p50_s"] = statistics.median(times) if times else 0.0
-        layer[f"suite.{lane}.jobs"] = 0.0
+        layer[f"suite.{lane}.jobs"] = statistics.median(jobs) if jobs else 0.0
     if tracer:
         st = tracer.stage_totals
-        jobs = sum(sum(v) for v in tracer.lane_jobs.values())
-        for lane, per in tracer.lane_jobs.items():
-            layer[f"suite.{lane}.jobs"] = statistics.median(per)
         mat_calls = tracer.fn_calls["materialize"]
         layer.update({
-            "spark.jobs": jobs / n,
             "spark.stages": st["stages"] / n,
             "spark.tasks": st["tasks"] / n,
             "spark.executor_run_s": st["executor_run_ms"] / 1e3 / n,
@@ -290,7 +289,6 @@ def main() -> int:
             "spark.shuffle_write_mb": st["shuffle_write_bytes"] / 1e6 / n,
             "spark.spill_mb": st["spill_bytes"] / 1e6 / n,
             "sources.input_mb": st["input_bytes"] / 1e6 / n,
-            "codegen.compiles": (jc1["compiles"] - jc0["compiles"]) / n,
             "codegen.compile_s": (jc1["compile_ns"] - jc0["compile_ns"]) / 1e9 / n,
             "jvm.gc_s": (jc1["gc_ms"] - jc0["gc_ms"]) / 1e3 / n,
             "jvm.heap_live_mb": jc1["heap_live_bytes"] / 1e6,
@@ -313,10 +311,10 @@ def main() -> int:
         },
         "per_layer": layer,
         "record": {
-            "workload": a.workload, "seed": a.seed, "trace": a.trace, "sf": sf,
+            "workload": a.workload, "seed": a.seed, "trace": a.trace,
             "pass_walls_s": win["walls"], "window_s": win["window_s"],
-            "input_setups_s": input_s, "check_failures": chk["bad"],
-            "lane_jobs": dict(tracer.lane_jobs) if tracer else None,
+            "check_failures": chk["bad"],
+            "lane_jobs": win["lane_jobs"], "codegen_compiles": compiles,
             "spans": tracer.spans if tracer else None,
         },
     }

@@ -13,6 +13,9 @@ import random
 # 500-row floor of the generator
 SCALE = 0.01
 SMOKE_SCALE = 0.001
+# every run reads the same tables; the run's --seed sets only the lane
+# order (`pass_order`)
+DATA_SEED = 1
 
 WORKLOADS: dict[str, dict] = {
     # the paper's experiment: cohort union -> imputation -> folds ->
