@@ -149,7 +149,7 @@ def _freeze_terms(terms: DataFrame) -> DataFrame:
     the probe, one job either way — so a build-scale batch whose
     vocabulary outgrows the cap keeps the r17 checkpoint shape
     automatically."""
-    from patientdataintegration_spark.streaming.components import freeze_small
+    from patientdataintegration_spark.streaming.store import freeze_small
 
     df, vals = freeze_small(terms, "term string")
     if vals is not None:

@@ -99,7 +99,7 @@ def run_tumbling_counts_stream(
     return spark.table(table_name)
 
 
-def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
+def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """File-source stream over the static events parquet (schema from
     a batch peek; ts normalization mirroring sources/catalog)."""
     enable_nanos_read(spark)  # vanilla sessions reject TIMESTAMP(NANOS) otherwise
@@ -133,7 +133,7 @@ def enrich_stream_static(
     dim = load_table(spark, sf_dir, "customer").select(
         F.col("c_custkey"), F.col("c_mktsegment")
     )
-    enriched = _events_stream(spark, sf_dir).join(
+    enriched = events_stream(spark, sf_dir).join(
         dim, F.col("user_id") == F.col("c_custkey")
     )
     agg = enriched.groupBy("c_mktsegment", "event_type").agg(
@@ -164,8 +164,8 @@ def dedup_stream(
     horizon are evicted, which is what makes streaming dedup viable
     on an unbounded 100 TB feed (plain dropDuplicates would pin
     every key ever seen)."""
-    doubled = _events_stream(spark, sf_dir).unionByName(
-        _events_stream(spark, sf_dir)
+    doubled = events_stream(spark, sf_dir).unionByName(
+        events_stream(spark, sf_dir)
     )
     deduped = (
         doubled.withWatermark("ts", "1 hour")
@@ -206,7 +206,7 @@ def session_window_stream(
     watermark horizon (open sessions per active user), merged
     in-place by the operator; output mode append emits each session
     exactly once."""
-    stream = _events_stream(spark, sf_dir)
+    stream = events_stream(spark, sf_dir)
     agg = (
         stream.withWatermark("ts", "1 hour")
         .groupBy("user_id", F.session_window("ts", gap).alias("sw"))

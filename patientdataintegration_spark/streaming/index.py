@@ -10,11 +10,13 @@ Why `foreachBatch`: same argument as `streaming/components.py` — the
 state is two RELATIONS maintained by joins against the batch, not
 per-key k-row state.
 
-Store layout — TERM-GRAIN UPSERT GENERATIONS. The dedup store's
-row-grain rules (insert rows, tombstone ids) don't fit the index: a
-maintenance verb REPLACES a dirty term's entire state (its postings
-array, its overflow rows — re-ranked, re-capped), so the natural
-delta is a keyed whole-row upsert. Under `store_dir`:
+The state lives in a delta-generation store (`streaming/store.py`:
+layout, commit protocol, compaction and retention) with TERM-GRAIN
+UPSERT generations. The store's row-grain rule (insert rows,
+tombstone ids) doesn't fit the index: a maintenance verb REPLACES a
+dirty term's entire state (its postings array, its overflow rows —
+re-ranked, re-capped), so the natural delta is a keyed whole-row
+upsert. Under `store_dir`:
 
     base_g{G}/{index,overflow}/   full snapshots: the seed (G=0) and
                                   periodic compactions
@@ -24,12 +26,10 @@ delta is a keyed whole-row upsert. Under `store_dir`:
                                   corpus marginal (BM25 serving,
                                   `indexing.bm25_from_store`) and
                                   positional postings (phrase
-                                  serving) — r13 verdict items 1+2
+                                  serving)
     delta_g{g}/terms/             batch g's DIRTY TERM set — every
                                   term whose state gen g rewrote;
-                                  written LAST, so it is the
-                                  generation's COMMIT MARKER
-                                  (r13 ADVICE)
+                                  the commit marker
     delta_g{g}/index/             those terms' repaired index rows
     delta_g{g}/overflow/          those terms' repaired overflow rows
     delta_g{g}/{tf,pos}/          those terms' repaired satellite
@@ -53,15 +53,8 @@ Per-batch write volume is O(dirty terms' rows) — the batch's terms
 plus the takedown's touched terms — matching the batch's COMPUTE
 (the q281/q277 delta-cost arguments), never the vocabulary.
 
-COMPACTION/GC: identical rule to the dedup store (fold retained
-deltas into a new base every `compact_every` batches; keep the newest
-two bases + deltas above the older kept base), so
-`streaming/components.store_disk_report` audits this store unchanged.
-
-Exactly-once across restarts: batch `batch_id` writes generation
-`batch_id + 1` by OVERWRITE — a replayed batch re-reads state at
-version `batch_id` (its own generation is above that version, hence
-invisible) and rewrites the same delta partition idempotently.
+The exported serving layout (`export_serving_layout`) follows the
+versioned-layout rules of `streaming/serving.py`.
 
 CRUD: with `op_col`, op > 0 rows are document INGESTS, op < 0 rows
 TAKEDOWNS (text may be NULL — only the id matters). Inserts apply
@@ -82,23 +75,27 @@ term filter (proven by q281's oracle).
 from __future__ import annotations
 
 import os
-import re
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from patientdataintegration_spark.streaming.components import (
-    _base_path,
-    _delta_path,
-    _resolve,
-    commit_base,
-    commit_delta,
+from patientdataintegration_spark.streaming.serving import (
+    link_untouched_buckets,
+    publish,
+    read_serving_meta,
+)
+from patientdataintegration_spark.streaming.store import (
+    base_path,
+    compact,
+    delta_path,
     freeze_small,
-    gc_generations,
     latest_generation,
+    overwrite,
     parallel_actions,
-    parallel_writes,
-    uncommit_delta,
+    resolve,
+    scan_gens,
+    write_base,
+    write_delta,
 )
 
 INDEX_SCHEMA = "term string, doc_freq bigint, postings array<bigint>"
@@ -139,47 +136,26 @@ def seed_index_store(
     exactly the satellites seeded here."""
     from patientdataintegration_spark.operators.indexing import corpus_stats
 
-    jobs = [
-        (index_init, _base_path(store_dir, 0, "index")),
-        (overflow_init, _base_path(store_dir, 0, "overflow")),
-    ]
+    rels = {"index": index_init, "overflow": overflow_init}
     if tf_init is not None:
         tf_init = tf_init.localCheckpoint()  # consumers: write + stats
-        jobs.append(
-            (
-                tf_init.select("term", "doc", "tf", "len_d"),
-                _base_path(store_dir, 0, "tf"),
-            )
-        )
-        jobs.append((corpus_stats(tf_init), _base_path(store_dir, 0, "stats")))
+        rels["tf"] = tf_init.select("term", "doc", "tf", "len_d")
+        rels["stats"] = corpus_stats(tf_init)
     if pos_init is not None:
-        jobs.append(
-            (
-                pos_init.select("term", "doc", "pos"),
-                _base_path(store_dir, 0, "pos"),
-            )
-        )
-    # independent relation writes run concurrently (guide §2.6); the
-    # commit sentinel goes down strictly after all of them
-    parallel_writes(jobs)
-    commit_base(store_dir, 0)
+        rels["pos"] = pos_init.select("term", "doc", "pos")
+    write_base(store_dir, 0, rels)
 
 
 def _store_features(store_dir: str) -> tuple[str, ...]:
     """Which serving satellites this store maintains — feature-
     detected from its newest base snapshot (the seed, or the last
     compaction, which folds every maintained relation)."""
-    import os
-
-    from patientdataintegration_spark.streaming.components import _scan_gens
-
-    bases, _deltas = _scan_gens(store_dir)
+    bases, _deltas = scan_gens(store_dir)
     if not bases:
         return ()
-    b = bases[-1]
     return tuple(
         n for n in _SATELLITES
-        if os.path.isdir(_base_path(store_dir, b, n))
+        if os.path.isdir(base_path(store_dir, bases[-1], n))
     )
 
 
@@ -197,11 +173,11 @@ def _read_upserts(
     rows: DataFrame | None = None
     for g in gens:
         t = spark.read.schema(_TERM_SCHEMA).parquet(
-            _delta_path(store_dir, g, "terms")
+            delta_path(store_dir, g, "terms")
         ).withColumn("_gen", F.lit(g).cast("bigint"))
         touched = t if touched is None else touched.unionByName(t)
         r = spark.read.schema(schema).parquet(
-            _delta_path(store_dir, g, name)
+            delta_path(store_dir, g, name)
         ).withColumn("_gen", F.lit(g).cast("bigint"))
         rows = r if rows is None else rows.unionByName(r)
     if touched is not None:
@@ -229,12 +205,9 @@ def read_index_store(
             f"unknown store relation {name!r} ({'/'.join(_SCHEMAS)})"
         )
     schema = _SCHEMAS[name]
-    # "terms" is written LAST in every generation, so it is the
-    # store's commit marker: a partial generation left by a crash
-    # stays invisible until replay overwrites it (r13 ADVICE)
-    version, base, gens = _resolve(store_dir, version, marker="terms")
+    version, base, gens = resolve(store_dir, version, marker="terms")
     base_df = spark.read.schema(schema).parquet(
-        _base_path(store_dir, base, name)
+        base_path(store_dir, base, name)
     )
     touched, rows = _read_upserts(spark, store_dir, name, schema, gens)
     if touched is None:
@@ -262,13 +235,11 @@ def read_index_stats(
     is simply the newest stats at or below `version`: BM25's avgdl
     folds in at query time from these two exact counters (the Lucene
     treatment — nothing corpus-sized is read or aggregated)."""
-    import os
-
-    version, base, gens = _resolve(store_dir, version, marker="terms")
+    version, base, gens = resolve(store_dir, version, marker="terms")
     path = (
-        _delta_path(store_dir, gens[-1], "stats")
+        delta_path(store_dir, gens[-1], "stats")
         if gens
-        else _base_path(store_dir, base, "stats")
+        else base_path(store_dir, base, "stats")
     )
     if not os.path.isdir(path):
         raise ValueError(
@@ -279,32 +250,17 @@ def read_index_stats(
     return spark.read.schema(STATS_SCHEMA).parquet(path)
 
 
-def _compact_index(spark: SparkSession, store_dir: str, gen: int) -> None:
-    """Fold the retained upsert generations into a full base_g{gen}
-    snapshot — every maintained relation, seeded satellites and the
-    stats marginal included — then GC with the dedup store's exact
-    retention rule: keep the newest TWO bases (a replayed in-flight
-    batch reads state gen-1, which needs the previous base) and the
-    deltas above the OLDER kept base."""
+def _fold(spark: SparkSession, store_dir: str, gen: int) -> dict:
+    # every maintained relation, seeded satellites and the stats
+    # marginal included
     feats = _store_features(store_dir)
-    # pin every reconstruction before the first write (the _compact
-    # ordering hazard: once base_g{gen}/index exists, a fresh _resolve
-    # at `gen` would pick the half-written base for the other side)
     folded = {
         name: read_index_store(spark, store_dir, name, version=gen)
         for name in ("index", "overflow", *feats)
     }
     if "tf" in feats:
         folded["stats"] = read_index_stats(spark, store_dir, version=gen)
-    parallel_writes([
-        (df, _base_path(store_dir, gen, name)) for name, df in folded.items()
-    ])
-    # sentinel LAST (r14 ADVICE): a crash mid-fold leaves an invisible
-    # partial base — reads keep resolving to the previous base, and
-    # `_store_features` cannot mis-detect fewer satellites off a base
-    # whose tf/pos writes never ran
-    commit_base(store_dir, gen)
-    gc_generations(store_dir)
+    return folded
 
 
 def term_bucket(term, n_buckets: int):
@@ -329,127 +285,6 @@ def term_bucket_py(term: str, n_buckets: int) -> int:
     return int(hashlib.md5(term.encode("utf-8")).hexdigest()[:14], 16) % (
         n_buckets
     )
-
-
-def _read_serving_meta(out_dir: str) -> dict:
-    import json
-    import os
-
-    with open(os.path.join(out_dir, "serving_meta.json")) as f:
-        return json.load(f)
-
-
-def _write_serving_meta(out_dir: str, meta: dict) -> None:
-    """Atomic meta flip (r14 ADVICE): write to a temp file in the
-    same directory and `os.replace` it over the live one, so a
-    reader never sees a half-written meta and a crash mid-export
-    leaves the OLD meta (old version) in place, not a torn file.
-    On an object store this is the usual single-key put — object
-    puts are already atomic."""
-    import json
-    import os
-
-    path = os.path.join(out_dir, "serving_meta.json")
-    tmp = path + ".tmp"
-    with open(tmp, "w") as f:
-        json.dump(meta, f)
-    os.replace(tmp, path)
-
-
-def _gc_versioned_dirs(
-    out_dir: str,
-    prefixes: tuple[str, ...],
-    current_version: int,
-    keep_old_versions: int,
-    legacy: tuple[str, ...] = (),
-    protect: tuple[str, ...] = (),
-) -> None:
-    """Post-flip GC with a RETENTION WINDOW: delete version-tagged
-    relation directories (`{prefix}_v{V}`) except the current version
-    and the `keep_old_versions` newest versions below it. keep=0 is
-    the tight-disk default; keep>=1 closes the snapshot-GC race — a
-    reader that planned against the pre-flip meta can finish its scan
-    against the retained old version instead of racing the rmtree
-    (the Iceberg-style retention stance). Legacy (pre-versioning)
-    bare-name directories count as one implicit old version: they
-    are deleted only when keep_old_versions == 0.
-
-    `protect` retains BY REFERENCE (r16 ADVICE): after incremental
-    refreshes a meta's relation dirs keep their original export tag
-    while the version/stats tags advance, so newest-tag retention
-    alone can delete the very directories the PRE-FLIP meta points at
-    while retaining newer-tagged ones no reader references. Callers
-    with keep_old_versions >= 1 pass the previous meta's directory
-    entries here; those names never delete, whatever their tag."""
-    import shutil
-
-    tagged: dict[int, list[str]] = {}
-    pat = re.compile(
-        r"^(" + "|".join(map(re.escape, prefixes)) + r")_v(\d+)$"
-    )
-    try:
-        entries = os.listdir(out_dir)
-    except OSError:
-        return
-    for entry in entries:
-        m = pat.match(entry)
-        if m:
-            tagged.setdefault(int(m.group(2)), []).append(entry)
-    old = sorted((v for v in tagged if v != current_version), reverse=True)
-    keep_names = set(protect)
-    for v in old[keep_old_versions:]:
-        for entry in tagged[v]:
-            if entry in keep_names:
-                continue
-            shutil.rmtree(os.path.join(out_dir, entry), ignore_errors=True)
-    if keep_old_versions == 0:
-        for entry in legacy:
-            if entry in entries and entry not in keep_names:
-                shutil.rmtree(
-                    os.path.join(out_dir, entry), ignore_errors=True
-                )
-
-
-def _link_untouched_buckets(
-    old_dir: str, new_dir: str, dirty_buckets: set
-) -> None:
-    """Carry every UNTOUCHED `tb=` bucket of a serving relation into
-    its copy-on-write staging directory without reading a byte of
-    data: hardlink each file (same inode — byte-identical content and
-    mtime, which is what the byte-identity test asserts), falling
-    back to a metadata-preserving copy on filesystems without link
-    support. Parquet files are immutable once written and every
-    future refresh stages to yet another fresh directory, so the
-    shared inodes are never mutated. On an object store this becomes
-    a server-side copy or a manifest reference — either way
-    metadata-sized, never a data pass."""
-    import shutil
-
-    try:
-        entries = os.listdir(old_dir)
-    except OSError:
-        return
-    for entry in entries:
-        if not entry.startswith("tb="):
-            continue
-        try:
-            b = int(entry[3:])
-        except ValueError:
-            continue
-        if b in dirty_buckets:
-            continue
-        src_b = os.path.join(old_dir, entry)
-        dst_b = os.path.join(new_dir, entry)
-        os.makedirs(dst_b, exist_ok=True)
-        for f in os.listdir(src_b):
-            src_f = os.path.join(src_b, f)
-            dst_f = os.path.join(dst_b, f)
-            if not os.path.isfile(src_f) or os.path.exists(dst_f):
-                continue
-            try:
-                os.link(src_f, dst_f)
-            except OSError:
-                shutil.copy2(src_f, dst_f)
 
 
 def export_serving_layout(
@@ -478,48 +313,24 @@ def export_serving_layout(
     scoring stats marginal is copied alongside when "tf" exports.
     Returns the exported version.
 
-    Atomicity (r14 ADVICE): `n_buckets` is FROZEN per layout
-    directory — re-exporting in place with a different bucket count
-    is refused, because a reader racing the rewrite would pair one
-    bucket mapping with the other's partitions and silently drop
-    queried terms' rows. Changing the bucket count means exporting
-    to a FRESH directory and flipping the serving pointer.
+    `n_buckets` is FROZEN per layout directory — re-exporting in
+    place with a different bucket count is refused, because a reader
+    racing the rewrite would pair one bucket mapping with the other's
+    partitions and silently drop queried terms' rows. Changing the
+    bucket count means exporting to a FRESH directory and flipping
+    the serving pointer.
 
-    Crash/reader safety (r15 ADVICE): every relation writes to a
-    STAGED, version-tagged directory (`{name}_v{V}`, `stats_v{V}`)
-    that the atomically-flipped meta then points at — never an
-    in-place static overwrite of the directory the OLD meta serves.
-    A crash mid-export (including the GC-triggered full fallback in
-    `refresh_serving_layout`, which can fire inline from a live
-    stream) leaves the old meta pointing at intact old directories;
-    a reader planning a scan during the export never sees a
-    truncated relation. Orphan staging dirs from a crashed attempt
-    are overwritten by the retry (same version → same name) and
-    GC'd after the next successful flip — where `keep_old_versions`
-    sets the retention window (`_gc_versioned_dirs`): 0 reclaims
-    disk immediately, >=1 lets a reader that planned against the
-    pre-flip meta finish against the retained old version instead of
-    racing the delete. The one residual in-place
-    case: re-exporting at the SAME already-served version (e.g.
-    growing the relation set with no new store generation) rewrites
-    that version's directories under readers — run that shape as an
-    offline job; every version-advancing export (the stream-inline
-    fallback included) stages to fresh names."""
-    import os
-    import shutil
-
-    version, _base, _gens = _resolve(store_dir, version, marker="terms")
-    meta_path = os.path.join(out_dir, "serving_meta.json")
-    prev_refs: tuple[str, ...] = ()
-    if os.path.isfile(meta_path):
-        old_meta = _read_serving_meta(out_dir)
-        # the directories the PRE-FLIP meta references — retained by
-        # reference when keep_old_versions >= 1 (r16 ADVICE: after
-        # incremental refreshes their tags lag the meta version, so
-        # newest-tag retention would delete exactly these)
-        prev_refs = tuple(old_meta.get("dirs", {}).values()) + (
-            (old_meta["stats"],) if "stats" in old_meta else ()
-        )
+    Every relation (and `stats_v{V}`) writes to a STAGED
+    `{name}_v{V}` directory that `serving.publish` then flips the
+    meta to — including the full fallback `refresh_serving_layout`
+    can fire inline from a live stream; `keep_old_versions` sets the
+    retention window. The one residual in-place case: re-exporting at
+    the SAME already-served version (e.g. growing the relation set
+    with no new store generation) rewrites that version's directories
+    under readers — run that shape as an offline job."""
+    version, _base, _gens = resolve(store_dir, version, marker="terms")
+    if os.path.isfile(os.path.join(out_dir, "serving_meta.json")):
+        old_meta = read_serving_meta(out_dir)
         if old_meta["n_buckets"] != n_buckets:
             raise ValueError(
                 f"serving layout at {out_dir!r} was exported with "
@@ -541,15 +352,12 @@ def export_serving_layout(
                 "stale-but-readable — export to a fresh directory instead"
             )
     dirs = {name: f"{name}_v{version}" for name in relations}
-    # the staged per-relation writes are independent of each other
-    # (the atomic meta flip below is what publishes them), so they run
-    # concurrently (guide §2.6)
-    jobs: list[tuple] = [
-        (
+    writes = [
+        overwrite(
             read_index_store(spark, store_dir, name, version=version)
             .withColumn("tb", term_bucket(F.col("term"), n_buckets)),
             os.path.join(out_dir, dirs[name]),
-            ("tb",),
+            "tb",
         )
         for name in relations
     ]
@@ -561,39 +369,21 @@ def export_serving_layout(
     }
     if "tf" in relations:
         meta["stats"] = f"stats_v{version}"
-        jobs.append(
-            (
-                read_index_stats(spark, store_dir, version=version),
-                os.path.join(out_dir, meta["stats"]),
-            )
-        )
-    parallel_writes(jobs)
-    _write_serving_meta(out_dir, meta)
-    # GC: everything outside the retention window — old version-
-    # tagged dirs beyond keep_old_versions, pre-versioning legacy
-    # dirs ("tf", "stats") when the window is 0
-    _gc_versioned_dirs(
-        out_dir,
-        prefixes=("stats", *relations),
-        current_version=version,
-        keep_old_versions=keep_old_versions,
-        legacy=(*relations, "stats"),
-        protect=prev_refs if keep_old_versions >= 1 else (),
-    )
+        writes.append(overwrite(
+            read_index_stats(spark, store_dir, version=version),
+            os.path.join(out_dir, meta["stats"]),
+        ))
+    parallel_actions(writes)
+    publish(out_dir, meta, ("stats", *relations), keep_old_versions)
     return version
 
 
 def read_serving_stats(spark: SparkSession, out_dir: str) -> DataFrame:
     """The exported layout's 1-row scoring marginal, resolved through
-    the meta so a reader always pairs the stats with the meta version
-    it planned against (r15 ADVICE: the pre-versioned layout rewrote
-    `stats/` in place before the flip, so a racing reader could score
-    v_exp tf rows with v_new stats). Falls back to the legacy
-    unversioned name for layouts exported by earlier releases."""
-    meta = _read_serving_meta(out_dir)
-    rel = meta.get("stats", "stats")
+    the meta so a reader always pairs the stats with the row
+    directories of the meta version it planned against."""
     return spark.read.schema(STATS_SCHEMA).parquet(
-        os.path.join(out_dir, rel)
+        os.path.join(out_dir, read_serving_meta(out_dir)["stats"])
     )
 
 
@@ -651,22 +441,20 @@ def refresh_serving_layout(
     spanning other generations ignores it), so it can narrow cost,
     never results.
 
-    COPY-ON-WRITE staging (r16 verdict item 2 / r17 weak item): the
-    refresh never writes into a directory the live meta references.
+    COPY-ON-WRITE staging: the refresh never writes into a directory
+    the live meta references.
     Each relation stages to a FRESH `{name}_v{v_new}` directory —
     dirty buckets written by the job, untouched buckets HARDLINKED
     from the old directory (metadata-sized: same inode, same bytes,
     same mtime; an object-store deployment would server-side-copy or
     manifest-reference them) — and the atomic meta flip publishes
-    all relations + stats together. A reader therefore resolves
-    EITHER the old meta (old dirs, old stats — intact, byte-
-    identical) OR the new meta (new dirs, new stats), never a
-    pre/post hybrid; a crash anywhere before the flip leaves the old
-    layout serving (pinned by
-    tests/test_scoring_store.py::test_refresh_crash_before_flip_-
-    leaves_old_layout_intact). The old directories fall to the
-    post-flip GC under the `keep_old_versions` retention window."""
-    meta = _read_serving_meta(out_dir)
+    all relations + stats together (`serving.publish`). A reader
+    therefore resolves EITHER the old meta (old dirs, old stats —
+    intact, byte-identical) OR the new meta, never a pre/post hybrid,
+    and a crash anywhere before the flip leaves the old layout
+    serving. The old directories fall to the post-flip GC under the
+    `keep_old_versions` retention window."""
+    meta = read_serving_meta(out_dir)
     n_buckets = int(meta["n_buckets"])
     v_exp = int(meta["version"])
     if "relations" not in meta:
@@ -679,7 +467,7 @@ def refresh_serving_layout(
             "refreshing incrementally"
         )
     relations = tuple(meta["relations"])
-    # validate BEFORE any write (r15 ADVICE): a layout exported with
+    # validate BEFORE any write: a layout exported with
     # relations the store no longer maintains (e.g. reseeded tf-only
     # under a ('tf','pos') meta) must fail here, loudly — not midway
     # through a rewrite, and not inside the full-export fallback
@@ -693,7 +481,7 @@ def refresh_serving_layout(
             "re-seed the store with the missing satellites or export a "
             "reduced layout to a fresh directory"
         )
-    v_new, _base, _gens = _resolve(store_dir, version, marker="terms")
+    v_new, _base, _gens = resolve(store_dir, version, marker="terms")
     if v_new < v_exp:
         raise ValueError(
             f"serving layout at {out_dir!r} is at version {v_exp}, ahead of "
@@ -702,10 +490,8 @@ def refresh_serving_layout(
         )
     if v_new == v_exp:
         return {"version": v_exp, "mode": "noop", "dirty_buckets": []}
-    from patientdataintegration_spark.streaming.components import _scan_gens
-
     needed = list(range(v_exp + 1, v_new + 1))
-    _bases, committed = _scan_gens(store_dir, marker="terms")
+    _bases, committed = scan_gens(store_dir, marker="terms")
     if not set(needed) <= set(committed):
         export_serving_layout(
             spark, store_dir, out_dir, relations, n_buckets, version=v_new,
@@ -734,7 +520,7 @@ def refresh_serving_layout(
         dirty = None
         for g in needed:
             t = spark.read.schema(_TERM_SCHEMA).parquet(
-                _delta_path(store_dir, g, "terms")
+                delta_path(store_dir, g, "terms")
             )
             dirty = t if dirty is None else dirty.unionByName(t)
         # consumers: the bucket collect + one anti-join per relation
@@ -748,22 +534,14 @@ def refresh_serving_layout(
             .collect()
         )
 
-    dirs = meta.get("dirs", {})
-    # copy-on-write staging: every relation's new content lands in a
-    # fresh version-tagged directory the flipped meta then points at
-    # (module contract above) — built BEFORE the per-relation threads
-    # fan out, so new_meta never mutates concurrently
+    # built BEFORE the per-relation threads fan out, so new_meta never
+    # mutates concurrently
     new_dirs = {name: f"{name}_v{v_new}" for name in relations}
     new_meta = {**meta, "version": v_new, "dirs": new_dirs}
     if "tf" in relations:
-        # versioned stats (r15 ADVICE): stats_v{v_new} at a fresh
-        # path, published by the same atomic flip as the rows — a
-        # reader always pairs its stats with the row directories it
-        # planned against, never a half-flipped hybrid
         new_meta["stats"] = f"stats_v{v_new}"
 
     def _refresh_rel(name: str) -> None:
-        rel_dir = dirs.get(name, name)
         if len(needed) == 1:
             # single-generation range (the inline continuous-serving
             # cadence): every delta row's generation IS its term's
@@ -771,7 +549,7 @@ def refresh_serving_layout(
             # to reading the generation's rows — no per-relation
             # touched/rows bookkeeping join
             fresh = spark.read.schema(_SCHEMAS[name]).parquet(
-                _delta_path(store_dir, needed[0], name)
+                delta_path(store_dir, needed[0], name)
             )
         else:
             touched, rows = _read_upserts(
@@ -798,22 +576,20 @@ def refresh_serving_layout(
             # bucket across from the old directory — a dirty bucket
             # whose terms all vanished is simply never created
             new_path = os.path.join(out_dir, new_dirs[name])
-            content.write.mode("overwrite").partitionBy("tb").parquet(
-                new_path
-            )
-            _link_untouched_buckets(
-                os.path.join(out_dir, rel_dir), new_path, set(buckets)
+            overwrite(content, new_path, "tb")()
+            link_untouched_buckets(
+                os.path.join(out_dir, meta["dirs"][name]), new_path,
+                set(buckets),
             )
 
         wjobs = [_content_write]
         if name == "tf":
             # the stats write is independent of the bucket rewrite
             # (both published only by the meta flip) — overlap them
-            wjobs.append(
-                lambda: read_index_stats(spark, store_dir, version=v_new)
-                .write.mode("overwrite")
-                .parquet(os.path.join(out_dir, new_meta["stats"]))
-            )
+            wjobs.append(overwrite(
+                read_index_stats(spark, store_dir, version=v_new),
+                os.path.join(out_dir, new_meta["stats"]),
+            ))
         parallel_actions(wjobs)
 
     # relations rewrite independently of each other (the meta flip
@@ -821,22 +597,7 @@ def refresh_serving_layout(
     parallel_actions([
         (lambda n=name: _refresh_rel(n)) for name in relations
     ])
-    _write_serving_meta(out_dir, new_meta)
-    # post-flip GC of the superseded relation + stats directories,
-    # under the retention window; keep_old_versions >= 1 retains the
-    # PRE-FLIP meta's directories BY REFERENCE (r16 ADVICE) — their
-    # tags can lag v_new by several refreshes
-    prev_refs = tuple(dirs.values()) + (
-        (meta["stats"],) if "stats" in meta else ()
-    )
-    _gc_versioned_dirs(
-        out_dir,
-        prefixes=("stats", *relations),
-        current_version=v_new,
-        keep_old_versions=keep_old_versions,
-        legacy=(*relations, "stats"),
-        protect=prev_refs if keep_old_versions >= 1 else (),
-    )
+    publish(out_dir, new_meta, ("stats", *relations), keep_old_versions)
     return {"version": v_new, "mode": "incremental", "dirty_buckets": buckets}
 
 
@@ -863,7 +624,7 @@ def read_serving_relation(
     batch's vocabulary stops being "point read"-sized."""
     if terms is None:
         return _read_serving_parquet(spark, out_dir, name).drop("tb")
-    n_buckets = int(_read_serving_meta(out_dir)["n_buckets"])
+    n_buckets = int(read_serving_meta(out_dir)["n_buckets"])
     buckets = sorted({term_bucket_py(t, n_buckets) for t in terms})
     return (
         _read_serving_parquet(spark, out_dir, name)
@@ -907,10 +668,8 @@ def _read_serving_parquet(
     write leaves no part files at all — e.g. a small store whose
     overflow never filled — and schema inference would fail on the
     bare directory where an empty frame is the correct answer. The
-    physical directory resolves through the meta's `dirs` map
-    (version-tagged staging, r15 ADVICE), falling back to the bare
-    relation name for layouts exported by earlier releases."""
-    rel_dir = _read_serving_meta(out_dir).get("dirs", {}).get(name, name)
+    physical directory resolves through the meta's `dirs` map."""
+    rel_dir = read_serving_meta(out_dir)["dirs"][name]
     return spark.read.schema(f"{_SCHEMAS[name]}, tb int").parquet(
         os.path.join(out_dir, rel_dir)
     )
@@ -918,19 +677,10 @@ def _read_serving_parquet(
 
 def compact_index_store(spark: SparkSession, store_dir: str) -> int:
     """Compaction as a SCHEDULED MAINTENANCE JOB for the index store
-    (r13 verdict item 5) — `components.compact_store`'s contract
-    applied here: fold at the latest committed generation outside the
-    ingest hot path (run the stream with `compact_every=0`), no-op if
-    that generation already has a base, GC keeps the replay window.
+    (`store.compact`): fold at the latest committed generation outside
+    the ingest hot path (run the stream with `compact_every=0`).
     Returns the folded generation."""
-    from patientdataintegration_spark.streaming.components import _scan_gens
-
-    gen = latest_generation(store_dir, marker="terms")
-    bases, _deltas = _scan_gens(store_dir)
-    if gen in bases:
-        return gen
-    _compact_index(spark, store_dir, gen)
-    return gen
+    return compact(spark, store_dir, "terms", _fold)
 
 
 def index_stream(
@@ -976,9 +726,9 @@ def index_stream(
     ends deleted. The two dirty sets merge into one net term-grain
     upsert generation (takedown-repaired terms win); writes are
     O(dirty terms' rows). Every `compact_every` batches the deltas
-    fold into a new base and old generations GC (`_compact_index`),
+    fold into a new base and old generations GC (`store.write_delta`),
     bounding read fan-in and disk
-    (`streaming/components.store_disk_report`).
+    (`store.store_disk_report`).
 
     `max_files_per_trigger` is the file source's rate limit
     (`maxFilesPerTrigger`): under `availableNow` the backlog then
@@ -1013,11 +763,8 @@ def index_stream(
         index_old = read_index_store(s, store_dir, "index", version=v)
         overflow_old = read_index_store(s, store_dir, "overflow", version=v)
         if op_col is not None:
-            # bounded driver materialization of the takedown set
-            # (freeze_small — r17 verdict item 2): the emptiness test
-            # below is free (the old spelling paid one isEmpty job per
-            # batch), and every dele broadcast builds from a local
-            # relation instead of re-scanning the batch subtree
+            # bounded driver materialization of the takedown set: one
+            # job, and the emptiness test below is free
             deleted, _del_ids = freeze_small(
                 batch.filter(F.col(op_col) < 0).select(F.col(id_col))
                 .distinct(),
@@ -1031,7 +778,7 @@ def index_stream(
             ingest = batch
 
         # OVERLAP the batch's independent materializations (guide
-        # §2.6, the parallel_writes discipline applied to the repair
+        # §2.6, the parallel_actions discipline applied to the repair
         # reads): the repair's dirty collect + ranked checkpoint and
         # the tf satellite's doc_term_stats checkpoint have no
         # ordering constraint between them. A batch carrying both
@@ -1191,37 +938,17 @@ def index_stream(
                 pos_rows = pos_rows.join(dele_docs, "doc", "left_anti")
             sat_rows["pos"] = pos_rows.select("term", "doc", "pos")
 
-        # one upsert generation per batch: a replayed batch overwrites
-        # its own generation — idempotent under checkpoint replay.
-        # "terms" goes LAST: it is the generation's commit marker, so
-        # a crash between these writes leaves an uncommitted partial
-        # that every read skips (r13 ADVICE; components._scan_gens);
-        # the explicit sentinel covers committers with _SUCCESS off;
-        # uncommit clears BOTH commit evidences before the rewrite
-        uncommit_delta(store_dir, g, marker="terms")
-        # independent relation writes run concurrently; "terms" (the
-        # commit marker) stays a strictly-after sequential write
-        jobs = [
-            (
-                index_rows.select("term", "doc_freq", "postings"),
-                _delta_path(store_dir, g, "index"),
-            ),
-            (
-                overflow_rows.select("term", "doc"),
-                _delta_path(store_dir, g, "overflow"),
-            ),
-        ]
-        for name, rows in sat_rows.items():
-            jobs.append((rows, _delta_path(store_dir, g, name)))
+        # one upsert generation per batch, "terms" (the commit marker)
+        # written last
+        rels = {
+            "index": index_rows.select("term", "doc_freq", "postings"),
+            "overflow": overflow_rows.select("term", "doc"),
+            **sat_rows,
+        }
         if stats_new is not None:
-            jobs.append((stats_new, _delta_path(store_dir, g, "stats")))
-        parallel_writes(jobs)
-        dirty.select("term").write.mode("overwrite").parquet(
-            _delta_path(store_dir, g, "terms")
-        )
-        commit_delta(store_dir, g)
-        if compact_every and g % compact_every == 0:
-            _compact_index(s, store_dir, g)
+            rels["stats"] = stats_new
+        rels["terms"] = dirty.select("term")
+        write_delta(s, store_dir, g, rels, "terms", compact_every, _fold)
         if serving_out is not None:
             # the batch's own dirty terms (when collected locally)
             # let the inline refresh plan its buckets driver-side —

@@ -7,11 +7,12 @@ file under the streaming exactly-once machinery. With
 (retrieval), every maintained artifact in the engine now has a
 streaming path.
 
-Store layout — ROW-GRAIN generations, the dedup store's sigs rule
-verbatim (`components.read_rowstore`): the inverted file's state is
-plain per-vector rows, inserted by assignment and deleted by id —
-no term-grain upserts (the index store) and no label algebra (the
-dedup store). Under `store_dir`:
+The state lives in a delta-generation store (`streaming/store.py`:
+layout, commit protocol, compaction and retention) read by the
+store's ROW-GRAIN rule (`store.read_rowstore`): the inverted file's
+state is plain per-vector rows, inserted by assignment and deleted by
+id — no term-grain upserts (the index store) and no label algebra
+(the dedup store). Under `store_dir`:
 
     centroids/                    the frozen coarse quantizer —
                                   OUTSIDE the generations: centroids
@@ -21,17 +22,8 @@ dedup store). Under `store_dir`:
     base_g{G}/assigned/           inverted-file snapshots: the seed
                                   (G=0) and periodic compactions
     delta_g{g}/assigned/          batch g's newly-assigned rows
-    delta_g{g}/tombs/             batch g's vector takedowns —
-                                  written LAST (even when empty), so
-                                  it is the generation's COMMIT
-                                  MARKER: reads skip a crash-partial
-                                  generation until replay overwrites
-                                  it (r13 ADVICE)
-
-Reconstruction: base ∖ tombstoned ids ∪ delta rows above their id's
-latest tombstone — same-batch ingest+takedown dies, later re-ingest
-lives (`components._reconstruct_rowstore`). The corpus-sized base
-streams once behind broadcast probes; everything else is delta-sized.
+    delta_g{g}/tombs/             batch g's vector takedowns (even
+                                  when empty); the commit marker
 
 The per-batch cost is the striking part: because centroids are frozen
 and assignment is a pure per-row argmin, the insert path never reads
@@ -44,14 +36,8 @@ and serve zero rows — search-after-maintenance is bit-identical to a
 rebuild over the net corpus against the same frozen quantizer, which
 is what q284's oracle proves.
 
-COMPACTION/GC: the dedup store's retention rule (fold every
-`compact_every` batches, keep the newest two bases + deltas above
-the older kept base), so `components.store_disk_report` audits this
-store unchanged.
-
-Exactly-once: batch `batch_id` writes generation `batch_id + 1` by
-overwrite — idempotent under checkpoint replay, identical to the
-other two streams.
+The exported serving layout (`export_ivf_serving_layout`) follows the
+versioned-layout rules of `streaming/serving.py`.
 """
 
 from __future__ import annotations
@@ -61,17 +47,22 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from patientdataintegration_spark.streaming.components import (
-    _base_path,
-    _delta_path,
-    commit_base,
-    commit_delta,
-    gc_generations,
+from patientdataintegration_spark.streaming.serving import (
+    publish,
+    read_serving_meta,
+)
+from patientdataintegration_spark.streaming.store import (
+    compact,
+    delta_path,
     latest_generation,
+    overwrite,
     parallel_actions,
-    parallel_writes,
     read_rowstore,
-    uncommit_delta,
+    resolve,
+    scan_gens,
+    tombs_by_id,
+    write_base,
+    write_delta,
 )
 
 CENTROID_SCHEMA = "cell bigint, centroid array<double>"
@@ -79,7 +70,7 @@ ASSIGNED_SCHEMA = (
     "neighbor_id bigint, c_vec array<double>, c_norm double, cell bigint"
 )
 # the serving export's delete-file side relation: (id, latest
-# tombstone generation) — `components._tombs_by_id`'s shape
+# tombstone generation) — `store.tombs_by_id`'s shape
 TOMB_SCHEMA = "neighbor_id bigint, _tg bigint"
 
 
@@ -88,14 +79,13 @@ def seed_ivf_store(
 ) -> None:
     """Write generation 0 of the inverted file plus the FROZEN
     centroid table (outside the generations — it never changes and
-    must survive GC)."""
-    parallel_writes([
-        (centroids, os.path.join(store_dir, "centroids")),
-        (assigned_init, _base_path(store_dir, 0, "assigned")),
-    ])
-    # sentinel strictly last — a crash anywhere above leaves an
-    # unseeded-looking store that fails loudly, never a torn seed
-    commit_base(store_dir, 0)
+    must survive GC). The sentinel goes down after both, so a crash
+    leaves an unseeded-looking store that fails loudly, never a torn
+    seed."""
+    write_base(
+        store_dir, 0, {"assigned": assigned_init},
+        overwrite(centroids, os.path.join(store_dir, "centroids")),
+    )
 
 
 def read_ivf_centroids(spark: SparkSession, store_dir: str) -> DataFrame:
@@ -105,36 +95,19 @@ def read_ivf_centroids(spark: SparkSession, store_dir: str) -> DataFrame:
     )
 
 
-def _compact_ivf(spark: SparkSession, store_dir: str, gen: int) -> None:
-    """Fold retained generations into a full base_g{gen} snapshot of
-    the inverted file, then GC with the shared retention rule (keep
-    the newest two bases + deltas above the older kept base). The
-    centroid table lives outside the generations and is untouched."""
-    folded = read_rowstore(
+def _fold(spark: SparkSession, store_dir: str, gen: int) -> dict:
+    # the centroid table lives outside the generations, untouched
+    return {"assigned": read_rowstore(
         spark, store_dir, "assigned", version=gen, id_col="neighbor_id",
         marker="tombs",
-    )
-    folded.write.mode("overwrite").parquet(
-        _base_path(store_dir, gen, "assigned")
-    )
-    commit_base(store_dir, gen)  # marker-last (r14 ADVICE)
-    gc_generations(store_dir)
+    )}
 
 
 def compact_ivf_store(spark: SparkSession, store_dir: str) -> int:
-    """Compaction as a SCHEDULED MAINTENANCE JOB for the IVF store —
-    `components.compact_store`'s contract (fold at the latest
-    committed generation outside the ingest hot path, no-op when that
-    generation already has a base, GC keeps the replay window).
-    Returns the folded generation."""
-    from patientdataintegration_spark.streaming.components import _scan_gens
-
-    gen = latest_generation(store_dir, marker="tombs")
-    bases, _deltas = _scan_gens(store_dir)
-    if gen in bases:
-        return gen
-    _compact_ivf(spark, store_dir, gen)
-    return gen
+    """Compaction as a SCHEDULED MAINTENANCE JOB for the IVF store
+    (`store.compact`): fold at the latest committed generation outside
+    the ingest hot path. Returns the folded generation."""
+    return compact(spark, store_dir, "tombs", _fold)
 
 
 def export_ivf_serving_layout(
@@ -156,10 +129,11 @@ def export_ivf_serving_layout(
     plan time, instead of streaming the whole inverted file behind
     the broadcast probe join.
 
-    Pins one committed store version and records it in an atomically-
-    flipped meta file (the `export_serving_layout` staleness/commit
-    contract verbatim). The layout is MERGE-ON-READ refreshable
-    (`refresh_ivf_serving_layout`): every exported row carries its
+    Pins one committed store version and publishes it through the
+    atomically-flipped meta (`serving.publish`; the
+    `export_serving_layout` staleness contract verbatim). The layout
+    is MERGE-ON-READ refreshable (`refresh_ivf_serving_layout`):
+    every exported row carries its
     assignment generation `_gen` (a full export folds the whole state,
     so all rows take the exported version), and a delta-sized
     `tombs_v{V}` side relation (empty at full export) records
@@ -168,92 +142,32 @@ def export_ivf_serving_layout(
     Iceberg/Hudi delete-file pattern, so a refresh never has to FIND
     a tombstoned id's cell partition. Returns the exported
     version."""
-    from patientdataintegration_spark.streaming.components import _resolve
-
-    version, _base, _gens = _resolve(store_dir, version, marker="tombs")
-    # staged, version-tagged relation dirs + atomic meta flip (r15
-    # ADVICE): a full export — including the GC-triggered fallback
-    # `refresh_ivf_serving_layout` can fire INLINE from a live stream
-    # — must never static-overwrite the directory the old meta
-    # serves. A crash mid-export leaves the old meta pointing at
-    # intact old dirs; orphan staging dirs from a crashed attempt are
-    # overwritten by the retry (same version → same name) and GC'd
-    # after the next successful flip.
-    assigned_rel = f"assigned_v{version}"
-    cent_rel = f"centroids_v{version}"
-    tombs_rel = f"tombs_v{version}"
-    # the directories the PRE-FLIP meta references, retained by
-    # reference when keep_old_versions >= 1 (r16 ADVICE — see
-    # index._gc_versioned_dirs)
-    prev_refs: tuple[str, ...] = ()
-    if os.path.isfile(os.path.join(out_dir, "serving_meta.json")):
-        old_meta = _read_ivf_serving_meta(out_dir)
-        prev_refs = tuple(
-            old_meta[k]
-            for k in ("assigned", "centroids", "tombs")
-            if k in old_meta
-        )
+    version, _base, _gens = resolve(store_dir, version, marker="tombs")
+    meta = {
+        "version": version,
+        "tombs": f"tombs_v{version}",
+        "assigned": f"assigned_v{version}",
+        "centroids": f"centroids_v{version}",
+    }
     assigned = read_rowstore(
         spark, store_dir, "assigned", version=version,
         id_col="neighbor_id", marker="tombs",
     ).withColumn("_gen", F.lit(int(version)).cast("int"))
-    # staged writes are independent (the meta flip publishes them) —
-    # run them concurrently (guide §2.6)
-    parallel_writes([
-        (assigned, os.path.join(out_dir, assigned_rel), ("cell",)),
-        (
+    parallel_actions([
+        overwrite(assigned, os.path.join(out_dir, meta["assigned"]), "cell"),
+        overwrite(
             read_ivf_centroids(spark, store_dir),
-            os.path.join(out_dir, cent_rel),
+            os.path.join(out_dir, meta["centroids"]),
         ),
-        (
+        overwrite(
             spark.createDataFrame([], TOMB_SCHEMA),
-            os.path.join(out_dir, tombs_rel),
+            os.path.join(out_dir, meta["tombs"]),
         ),
     ])
-    _write_ivf_serving_meta(
-        out_dir,
-        {
-            "version": version,
-            "tombs": tombs_rel,
-            "assigned": assigned_rel,
-            "centroids": cent_rel,
-        },
-    )
-    # GC everything outside the retention window: older version-
-    # tagged dirs beyond keep_old_versions, pre-versioning legacy
-    # names when the window is 0 (`index._gc_versioned_dirs` — one
-    # retention discipline for every serving layout)
-    from patientdataintegration_spark.streaming.index import (
-        _gc_versioned_dirs,
-    )
-
-    _gc_versioned_dirs(
-        out_dir,
-        prefixes=("assigned", "centroids", "tombs"),
-        current_version=version,
-        keep_old_versions=keep_old_versions,
-        legacy=("assigned", "centroids"),
-        protect=prev_refs if keep_old_versions >= 1 else (),
+    publish(
+        out_dir, meta, ("assigned", "centroids", "tombs"), keep_old_versions
     )
     return version
-
-
-def _write_ivf_serving_meta(out_dir: str, meta: dict) -> None:
-    """Atomic meta flip — `index._write_serving_meta` verbatim (one
-    flip discipline for every serving layout, not two copies)."""
-    from patientdataintegration_spark.streaming.index import (
-        _write_serving_meta,
-    )
-
-    _write_serving_meta(out_dir, meta)
-
-
-def _read_ivf_serving_meta(out_dir: str) -> dict:
-    from patientdataintegration_spark.streaming.index import (
-        _read_serving_meta,
-    )
-
-    return _read_serving_meta(out_dir)
 
 
 def refresh_ivf_serving_layout(
@@ -284,7 +198,7 @@ def refresh_ivf_serving_layout(
       `tombs_v{v_new}` so a crash never truncates the live one; the
       pruned read applies them with the store's liveness rule
       (`_tg < _gen` keeps re-inserts above their tombstone alive,
-      exactly `components._reconstruct_rowstore`).
+      exactly `store.read_rowstore`).
 
     Refresh cost is O(inserted rows + their cells' rows + tombstone
     ids) — the maintenance window's size, never the inverted file's.
@@ -293,19 +207,14 @@ def refresh_ivf_serving_layout(
     v_new (which also resets the tombs relation to empty — the
     natural fold point, compaction-aligned). The meta version flips
     atomically after the last data write. Returns {"version",
-    "mode": "noop"|"incremental"|"full", "dirty_cells"}."""
-    import shutil
+    "mode": "noop"|"incremental"|"full", "dirty_cells"}.
 
-    from patientdataintegration_spark.streaming.components import (
-        _scan_gens,
-        _tombs_by_id,
-    )
-
-    meta = _read_ivf_serving_meta(out_dir)
+    The cell rewrite is the one in-place write of the serving layouts:
+    it dynamically overwrites the dirty cells of the live `assigned`
+    directory, which the meta flip does not stage."""
+    meta = read_serving_meta(out_dir)
     v_exp = int(meta["version"])
-    from patientdataintegration_spark.streaming.components import _resolve
-
-    v_new, _base, _gens = _resolve(store_dir, version, marker="tombs")
+    v_new, _base, _gens = resolve(store_dir, version, marker="tombs")
     if v_new < v_exp:
         raise ValueError(
             f"IVF serving layout at {out_dir!r} is at version {v_exp}, "
@@ -316,7 +225,7 @@ def refresh_ivf_serving_layout(
     if v_new == v_exp:
         return {"version": v_exp, "mode": "noop", "dirty_cells": []}
     needed = list(range(v_exp + 1, v_new + 1))
-    _bases, committed = _scan_gens(store_dir, marker="tombs")
+    _bases, committed = scan_gens(store_dir, marker="tombs")
     if not set(needed) <= set(committed):
         export_ivf_serving_layout(
             spark, store_dir, out_dir, version=v_new,
@@ -327,10 +236,10 @@ def refresh_ivf_serving_layout(
     inserts: DataFrame | None = None
     for g in needed:
         d = spark.read.schema(ASSIGNED_SCHEMA).parquet(
-            _delta_path(store_dir, g, "assigned")
+            delta_path(store_dir, g, "assigned")
         ).withColumn("_gen", F.lit(int(g)).cast("int"))
         inserts = d if inserts is None else inserts.unionByName(d)
-    new_tombs = _tombs_by_id(spark, store_dir, needed, "neighbor_id")
+    new_tombs = tombs_by_id(spark, store_dir, needed, "neighbor_id")
     live = (
         inserts.join(F.broadcast(new_tombs), "neighbor_id", "left")
         .filter(F.col("_tg").isNull() | (F.col("_tg") < F.col("_gen")))
@@ -363,10 +272,9 @@ def refresh_ivf_serving_layout(
         # vanish): a cell is dirty only because a live insert lands in
         # it, so every rewritten partition is non-empty by construction
         content = kept.unionByName(live).localCheckpoint()
-    old_rel = meta["tombs"]
     merged = (
         spark.read.schema(TOMB_SCHEMA)
-        .parquet(os.path.join(out_dir, old_rel))
+        .parquet(os.path.join(out_dir, meta["tombs"]))
         .unionByName(new_tombs)
         .groupBy("neighbor_id")
         .agg(F.max("_tg").alias("_tg"))
@@ -375,32 +283,19 @@ def refresh_ivf_serving_layout(
     # the cell rewrite and the delete-file fold are independent (the
     # meta flip below is the single publish point) — overlap them
     # (guide §2.6)
-    wjobs = [
-        lambda: merged.write.mode("overwrite").parquet(
-            os.path.join(out_dir, new_rel)
-        )
-    ]
+    wjobs = [overwrite(merged, os.path.join(out_dir, new_rel))]
     if dirty:
         wjobs.append(
             lambda: content.write.mode("overwrite").option(
                 "partitionOverwriteMode", "dynamic"
             ).partitionBy("cell").parquet(
-                os.path.join(out_dir, meta.get("assigned", "assigned"))
+                os.path.join(out_dir, meta["assigned"])
             )
         )
     parallel_actions(wjobs)
-    _write_ivf_serving_meta(out_dir, {**meta, "version": v_new, "tombs": new_rel})
-    from patientdataintegration_spark.streaming.index import (
-        _gc_versioned_dirs,
-    )
-
-    _gc_versioned_dirs(
-        out_dir,
-        prefixes=("tombs",),
-        current_version=v_new,
-        keep_old_versions=keep_old_versions,
-        # retain the PRE-FLIP meta's tombs by reference (r16 ADVICE)
-        protect=(old_rel,) if keep_old_versions >= 1 else (),
+    publish(
+        out_dir, {**meta, "version": v_new, "tombs": new_rel}, ("tombs",),
+        keep_old_versions,
     )
     return {"version": v_new, "mode": "incremental", "dirty_cells": dirty}
 
@@ -449,7 +344,7 @@ def read_ivf_serving(
     store's liveness rule (`_tg < _gen` keeps re-inserts above their
     tombstone), so a refreshed layout serves takedowns without ever
     having rewritten their cells."""
-    meta = _read_ivf_serving_meta(out_dir)
+    meta = read_serving_meta(out_dir)
     tombs = spark.read.schema(TOMB_SCHEMA).parquet(
         os.path.join(out_dir, meta["tombs"])
     )
@@ -466,7 +361,7 @@ def read_ivf_serving(
     centroids = (
         spark.read.schema(CENTROID_SCHEMA)
         .parquet(
-            os.path.join(out_dir, meta.get("centroids", "centroids"))
+            os.path.join(out_dir, meta["centroids"])
         )
         .groupBy("cell")
         .agg(F.min("centroid").alias("centroid"))
@@ -479,12 +374,9 @@ def read_ivf_serving_centroids(
 ) -> DataFrame:
     """The exported layout's (tiny) centroid table — the driver-side
     probe planner's input — resolved through the meta so planners
-    and the pruned read pair with one committed export version
-    (version-tagged staging, r15 ADVICE); legacy fallback as in
-    `_read_ivf_export`."""
-    rel = _read_ivf_serving_meta(out_dir).get("centroids", "centroids")
+    and the pruned read pair with one committed export version."""
     return spark.read.schema(CENTROID_SCHEMA).parquet(
-        os.path.join(out_dir, rel)
+        os.path.join(out_dir, read_serving_meta(out_dir)["centroids"])
     )
 
 
@@ -494,13 +386,11 @@ def _read_ivf_export(spark: SparkSession, out_dir: str) -> DataFrame:
     leaves no part files, and schema inference would fail on the bare
     directory where an empty frame is the correct answer
     (`index._read_serving_parquet`'s rule). The physical directory
-    resolves through the meta (version-tagged staging, r15 ADVICE),
-    falling back to the legacy bare name for older layouts."""
-    rel = _read_ivf_serving_meta(out_dir).get("assigned", "assigned")
+    resolves through the meta."""
     return spark.read.schema(
         "neighbor_id bigint, c_vec array<double>, c_norm double, "
         "_gen int, cell bigint"
-    ).parquet(os.path.join(out_dir, rel))
+    ).parquet(os.path.join(out_dir, read_serving_meta(out_dir)["assigned"]))
 
 
 def ivf_stream(
@@ -541,7 +431,7 @@ def ivf_stream(
     (vector columns may be NULL — only the id matters), applied by
     the read rule's anti-join semantics. Without `op_col` every row
     ingests. Every `compact_every` batches the generations fold and
-    GC (`_compact_ivf`)."""
+    GC (`store.write_delta`)."""
     from patientdataintegration_spark.operators.similarity import ivf_assign
 
     latest_generation(store_dir)  # fail fast on an unseeded store
@@ -573,19 +463,10 @@ def ivf_stream(
             ingest = batch
         cent = read_ivf_centroids(s, store_dir)
         assigned_delta = ivf_assign(ingest, cent, id_col, vec_col)
-        # one generation per batch, overwrite = replay-idempotent;
-        # commit evidence (sentinel AND the marker's _SUCCESS)
-        # cleared first, stamped after the marker ("tombs")
-        uncommit_delta(store_dir, g, marker="tombs")
-        assigned_delta.write.mode("overwrite").parquet(
-            _delta_path(store_dir, g, "assigned")
+        write_delta(
+            s, store_dir, g, {"assigned": assigned_delta, "tombs": deleted},
+            "tombs", compact_every, _fold,
         )
-        deleted.write.mode("overwrite").parquet(
-            _delta_path(store_dir, g, "tombs")
-        )
-        commit_delta(store_dir, g)
-        if compact_every and g % compact_every == 0:
-            _compact_ivf(s, store_dir, g)
         if serving_out is not None:
             refresh_ivf_serving_layout(s, store_dir, serving_out)
 

@@ -22,6 +22,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.streaming import StreamingQuery
 
+from patientdataintegration_spark.streaming.events import events_stream
+
 
 def stream_to_parquet(
     spark: SparkSession,
@@ -33,7 +35,6 @@ def stream_to_parquet(
     foreachBatch (availableNow: drain the backlog, then stop).
     Restarting with the same checkpoint processes nothing new —
     exactly-once per input file."""
-    from patientdataintegration_spark.streaming.events import _events_stream
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
         (
@@ -43,7 +44,7 @@ def stream_to_parquet(
         )
 
     return (
-        _events_stream(spark, sf_dir)
+        events_stream(spark, sf_dir)
         .writeStream.foreachBatch(write_batch)
         .option("checkpointLocation", checkpoint_path)
         .trigger(availableNow=True)
@@ -167,8 +168,6 @@ def stream_cdc_upsert(
     """
     from pyspark.sql import Window
 
-    from patientdataintegration_spark.streaming.events import _events_stream
-
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
         changes = batch_df.select(
             F.col("user_id").alias("key"),
@@ -196,7 +195,7 @@ def stream_cdc_upsert(
         merged.write.mode("overwrite").parquet(f"{table_path}/v={version}")
 
     return (
-        _events_stream(spark, sf_dir)
+        events_stream(spark, sf_dir)
         .writeStream.foreachBatch(apply_batch)
         .option("checkpointLocation", checkpoint_path)
         .trigger(availableNow=True)
@@ -217,9 +216,7 @@ def stream_with_observed_metrics(
     accounting with no second pass over the stream. Returns
     (result_df, observed) where `observed` is the list of per-batch
     metric rows in batch order."""
-    from patientdataintegration_spark.streaming.events import _events_stream
-
-    stream = _events_stream(spark, sf_dir).observe(
+    stream = events_stream(spark, sf_dir).observe(
         "gauges",
         F.count(F.lit(1)).alias("n_rows"),
         F.sum(F.col("value").cast("decimal(18,6)")).cast("double").alias("sum_value"),

@@ -31,9 +31,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from patientdataintegration_spark.streaming.events import (
-    _events_stream,
+    events_stream,
     tumbling_counts,
 )
+from patientdataintegration_spark.streaming.sessions import sessionize_stream
 
 
 def run_tumbling_with_state(
@@ -56,7 +57,7 @@ def run_tumbling_with_state(
     from patientdataintegration_spark.scratch import scratch_dir
 
     ckpt = scratch_dir("statestore_ckpt", table_name, sf_dir)
-    stream = _events_stream(spark, sf_dir)
+    stream = events_stream(spark, sf_dir)
     agg = tumbling_counts(
         stream, window_duration=window_duration, watermark=watermark, streaming=True
     )
@@ -133,9 +134,6 @@ def sessionize_statestore_audit(
     frontier calibration), so the whole relation carries a FULL hash
     oracle."""
     from patientdataintegration_spark.scratch import scratch_dir
-    from patientdataintegration_spark.streaming.sessions import (
-        sessionize_stream,
-    )
 
     ckpt = scratch_dir("sess_state_ckpt", table_name, sf_dir)
     emitted = sessionize_stream(

@@ -589,9 +589,7 @@ def q289_bm25_drift_certificate(spark: SparkSession, sf_dir: str) -> DataFrame:
     # until the full-outer join — overlap the two materializations so
     # one side's stage tail back-fills the other's executors (guide
     # §2.6, the parallel_actions discipline; r17 verdict item 3)
-    from patientdataintegration_spark.streaming.components import (
-        parallel_actions,
-    )
+    from patientdataintegration_spark.streaming.store import parallel_actions
 
     res: dict = {}
 

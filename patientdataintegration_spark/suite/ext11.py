@@ -857,10 +857,12 @@ def _continuous_serving_export(spark: SparkSession, sf_dir: str) -> str:
     two incremental refreshes). Built once per process."""
     from patientdataintegration_spark.scratch import scratch_dir
     from patientdataintegration_spark.streaming.index import (
-        _read_serving_meta,
         export_serving_layout,
         index_stream,
         seed_index_store,
+    )
+    from patientdataintegration_spark.streaming.serving import (
+        read_serving_meta,
     )
     from patientdataintegration_spark.suite.ext import (
         cached_stream_seed_inverted_index,
@@ -906,7 +908,7 @@ def _continuous_serving_export(spark: SparkSession, sf_dir: str) -> str:
     ).unionByName(takedowns)
     batch2.coalesce(1).write.mode("append").parquet(src)
     run()
-    v = int(_read_serving_meta(out)["version"])
+    v = int(read_serving_meta(out)["version"])
     if v != 2:
         raise RuntimeError(
             f"continuous serving left the layout at version {v}, "
@@ -967,10 +969,12 @@ def _ivf_continuous_export(spark: SparkSession, sf_dir: str) -> str:
     refresh advances the layout. Built once per process."""
     from patientdataintegration_spark.scratch import scratch_dir
     from patientdataintegration_spark.streaming.ivf import (
-        _read_ivf_serving_meta,
         export_ivf_serving_layout,
         ivf_stream,
         seed_ivf_store,
+    )
+    from patientdataintegration_spark.streaming.serving import (
+        read_serving_meta,
     )
     from patientdataintegration_spark.suite.ext import cached_stream_seed_ivf
 
@@ -1010,7 +1014,7 @@ def _ivf_continuous_export(spark: SparkSession, sf_dir: str) -> str:
     ).unionByName(takedowns)
     batch2.coalesce(1).write.mode("append").parquet(src)
     run()
-    v = int(_read_ivf_serving_meta(out)["version"])
+    v = int(read_serving_meta(out)["version"])
     if v != 2:
         raise RuntimeError(
             f"IVF continuous serving left the layout at version {v}, "

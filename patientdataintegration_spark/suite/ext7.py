@@ -335,9 +335,7 @@ def q246_nightly_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     hist_fp = (
         fp.filter(F.col("doc_id") % 10 < 7).select("fingerprint").distinct()
     )
-    from patientdataintegration_spark.streaming.components import (
-        parallel_actions,
-    )
+    from patientdataintegration_spark.streaming.store import parallel_actions
 
     res: dict = {}
 

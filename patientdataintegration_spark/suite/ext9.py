@@ -642,9 +642,7 @@ def q274_takedown_certificate(spark: SparkSession, sf_dir: str) -> DataFrame:
     # MAINTAINED repair — overlap them so one chain's stage tails
     # back-fill the other's executors (guide §2.6, the r17
     # parallel_actions discipline; r17 verdict item 3)
-    from patientdataintegration_spark.streaming.components import (
-        parallel_actions,
-    )
+    from patientdataintegration_spark.streaming.store import parallel_actions
 
     res: dict = {}
 

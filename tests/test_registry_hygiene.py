@@ -11,6 +11,7 @@ exactly the discipline the r7 verdict asked the gate to keep.
 
 from __future__ import annotations
 
+import ast
 import json
 import re
 from pathlib import Path
@@ -100,3 +101,56 @@ def test_priority_window_shape():
         n for n in suite.PRIORITY if n in suite.ROWS_ONLY_REASONS
     ]
     assert rows_only_in_window == []
+
+
+def _streaming_imports():
+    """(file, line, sibling module, imported names, inside a function?)
+    for every import of one `streaming/` module by another."""
+    pkg = REPO / "patientdataintegration_spark" / "streaming"
+    siblings = {p.stem for p in pkg.glob("*.py")} - {"__init__"}
+    prefix = "patientdataintegration_spark.streaming."
+    found = []
+    for path in sorted(pkg.glob("*.py")):
+        tree = ast.parse(path.read_text())
+        in_func = {
+            id(node)
+            for fn in ast.walk(tree)
+            if isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef))
+            for node in ast.walk(fn)
+        }
+        for node in ast.walk(tree):
+            if isinstance(node, ast.ImportFrom):
+                mod = node.module or ""
+                if node.level:
+                    mod = prefix + mod
+                targets = [(mod, [a.name for a in node.names])]
+            elif isinstance(node, ast.Import):
+                targets = [(a.name, []) for a in node.names]
+            else:
+                continue
+            for mod, names in targets:
+                sib = mod[len(prefix):] if mod.startswith(prefix) else None
+                if sib in siblings:
+                    found.append(
+                        (path.name, node.lineno, sib, names, id(node) in in_func)
+                    )
+    return found
+
+
+def test_streaming_modules_import_siblings_publicly_at_top_level():
+    """The store and serving-layout rules each live in one module
+    (`streaming/store.py`, `streaming/serving.py`); the streams are
+    clients of their public names. A private name imported from a
+    sibling, or a sibling imported inside a function body (the usual
+    way round an import cycle), means a rule has leaked back into the
+    wrong module."""
+    imports = _streaming_imports()
+    private = [
+        (f, line, sib, n)
+        for f, line, sib, names, _ in imports
+        for n in names
+        if n.startswith("_")
+    ]
+    assert private == [], f"private names imported across streaming/: {private}"
+    nested = [(f, line, sib) for f, line, sib, _, inner in imports if inner]
+    assert nested == [], f"streaming/ siblings imported in a function: {nested}"

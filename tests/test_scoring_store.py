@@ -199,9 +199,7 @@ def test_offline_compaction_job_keeps_ingest_delta_sized(spark, tmp_path):
     the replay window, reads straddling the fold still converge —
     and the NEXT ingest batch still writes a delta-generation orders
     below the base (ingest never pays the fold)."""
-    from patientdataintegration_spark.streaming.components import (
-        store_disk_report,
-    )
+    from patientdataintegration_spark.streaming.store import store_disk_report
 
     src, store, ckpt = (str(tmp_path / p) for p in ("src", "store", "ckpt"))
     os.makedirs(src)
@@ -927,10 +925,10 @@ def test_continuous_serving_layout_follows_the_stream(spark, tmp_path):
     batch's dirty buckets rewritten; a restart run with no new files
     advances nothing and rewrites nothing."""
     from patientdataintegration_spark.streaming.index import (
-        _read_serving_meta,
         export_serving_layout,
         term_bucket_py,
     )
+    from patientdataintegration_spark.streaming.serving import read_serving_meta
 
     src, store, ckpt = (str(tmp_path / p) for p in ("src", "store", "ckpt"))
     os.makedirs(src)
@@ -955,7 +953,7 @@ def test_continuous_serving_layout_follows_the_stream(spark, tmp_path):
         1
     ).write.mode("append").parquet(src)
     run()
-    assert _read_serving_meta(out)["version"] == 1
+    assert read_serving_meta(out)["version"] == 1
     state1 = {n: _export_file_state(out, n) for n in ("tf", "pos")}
 
     # batch 2 -> gen 2 (ingest u8, take down doc 2), refreshed inline
@@ -963,7 +961,7 @@ def test_continuous_serving_layout_follows_the_stream(spark, tmp_path):
         [(8, "u8", 1), (2, None, -1)], DOC_SCHEMA
     ).coalesce(1).write.mode("append").parquet(src)
     run()
-    assert _read_serving_meta(out)["version"] == 2
+    assert read_serving_meta(out)["version"] == 2
     dirty2 = {term_bucket_py(t, n_buckets) for t in ("u8", "u2")}
     for name in ("tf", "pos"):
         got = _norm(
@@ -985,7 +983,7 @@ def test_continuous_serving_layout_follows_the_stream(spark, tmp_path):
     # empty restart: nothing advances, nothing rewrites
     pre = {n: _export_file_state(out, n) for n in ("tf", "pos")}
     run()
-    assert _read_serving_meta(out)["version"] == 2
+    assert read_serving_meta(out)["version"] == 2
     for name in ("tf", "pos"):
         assert _export_file_state(out, name) == pre[name]
 
@@ -999,7 +997,7 @@ def test_full_export_crash_before_flip_keeps_old_version_serving(
     write) leaves the layout serving the OLD version from intact old
     directories, never a truncated relation. The retry then lands the
     new version cleanly."""
-    import patientdataintegration_spark.streaming.index as ix
+    import patientdataintegration_spark.streaming.serving as sv
 
     src, store, ckpt = (str(tmp_path / p) for p in ("src", "store", "ckpt"))
     os.makedirs(src)
@@ -1022,25 +1020,23 @@ def test_full_export_crash_before_flip_keeps_old_version_serving(
     ).parquet(src)
     run()
 
-    real_write = ix._write_serving_meta
+    real_write = sv.write_serving_meta
 
     def crash(*a, **kw):
         raise RuntimeError("simulated crash before the meta flip")
 
-    monkeypatch.setattr(ix, "_write_serving_meta", crash)
+    monkeypatch.setattr(sv, "write_serving_meta", crash)
     with pytest.raises(RuntimeError, match="simulated crash"):
         export_serving_layout(
             spark, store, out, relations=("tf",), n_buckets=8, version=1
         )
-    monkeypatch.setattr(ix, "_write_serving_meta", real_write)
+    monkeypatch.setattr(sv, "write_serving_meta", real_write)
 
     # the old meta still points at intact v0 directories: reads serve
     # exactly what they served before the crashed attempt
-    from patientdataintegration_spark.streaming.index import (
-        _read_serving_meta,
-    )
+    from patientdataintegration_spark.streaming.serving import read_serving_meta
 
-    assert _read_serving_meta(out)["version"] == 0
+    assert read_serving_meta(out)["version"] == 0
     assert _norm(
         read_serving_relation(spark, out, "tf", ["a", "b", "c"])
     ) == want_v0
@@ -1049,7 +1045,7 @@ def test_full_export_crash_before_flip_keeps_old_version_serving(
     assert export_serving_layout(
         spark, store, out, relations=("tf",), n_buckets=8, version=1
     ) == 1
-    assert _read_serving_meta(out)["version"] == 1
+    assert read_serving_meta(out)["version"] == 1
     assert _norm(
         read_serving_relation(spark, out, "tf", ["e"])
     ) == _norm(
@@ -1139,11 +1135,9 @@ def test_continuous_trigger_cadence_refreshes_after_every_batch(
 
     # one refresh per micro-batch, each incremental, each advancing
     assert seen == [(1, "incremental"), (2, "incremental"), (3, "incremental")]
-    from patientdataintegration_spark.streaming.index import (
-        _read_serving_meta,
-    )
+    from patientdataintegration_spark.streaming.serving import read_serving_meta
 
-    assert _read_serving_meta(out)["version"] == 3
+    assert read_serving_meta(out)["version"] == 3
     # the final layout serves the final store state
     for name in ("tf", "pos"):
         assert _norm(
@@ -1216,10 +1210,8 @@ def test_export_retention_protects_pre_flip_refs_after_refreshes(
     meta's own version; a later full re-export with
     keep_old_versions=1 must retain exactly the directories the
     PRE-FLIP meta references."""
-    from patientdataintegration_spark.streaming.index import (
-        _read_serving_meta,
-        refresh_serving_layout,
-    )
+    from patientdataintegration_spark.streaming.index import refresh_serving_layout
+    from patientdataintegration_spark.streaming.serving import read_serving_meta
 
     src, store, ckpt = (str(tmp_path / p) for p in ("src", "store", "ckpt"))
     os.makedirs(src)
@@ -1247,7 +1239,7 @@ def test_export_retention_protects_pre_flip_refs_after_refreshes(
         assert refresh_serving_layout(spark, store, out)["mode"] == (
             "incremental"
         )
-    pre_flip = _read_serving_meta(out)
+    pre_flip = read_serving_meta(out)
     assert pre_flip["version"] == 2 and pre_flip["dirs"]["tf"] == "tf_v2"
     assert pre_flip["stats"] == "stats_v2"
     assert {"tf_v0", "tf_v1", "stats_v0", "stats_v1"}.isdisjoint(
@@ -1290,12 +1282,12 @@ def test_refresh_crash_before_flip_leaves_old_layout_intact(
     pre- and post-refresh buckets, and never v_new rows against v_exp
     stats. The retry then lands the new version cleanly with the
     untouched buckets carried over byte-identical."""
-    import patientdataintegration_spark.streaming.index as ix
+    import patientdataintegration_spark.streaming.serving as sv
     from patientdataintegration_spark.streaming.index import (
-        _read_serving_meta,
         refresh_serving_layout,
         term_bucket_py,
     )
+    from patientdataintegration_spark.streaming.serving import read_serving_meta
 
     src, store, ckpt = (str(tmp_path / p) for p in ("src", "store", "ckpt"))
     os.makedirs(src)
@@ -1322,21 +1314,21 @@ def test_refresh_crash_before_flip_leaves_old_layout_intact(
         op_col="op", max_postings=16, compact_every=0,
     )
 
-    real_write = ix._write_serving_meta
+    real_write = sv.write_serving_meta
 
     def crash(*a, **kw):
         raise RuntimeError("simulated crash before the meta flip")
 
-    monkeypatch.setattr(ix, "_write_serving_meta", crash)
+    monkeypatch.setattr(sv, "write_serving_meta", crash)
     with pytest.raises(RuntimeError, match="simulated crash"):
         refresh_serving_layout(spark, store, out)
-    monkeypatch.setattr(ix, "_write_serving_meta", real_write)
+    monkeypatch.setattr(sv, "write_serving_meta", real_write)
 
     # the old meta still points at the old directories, whose every
     # file is byte-identical (same digest, same mtime — the staging
     # never opened them): a concurrent reader sees exactly the
     # pre-refresh layout, rows AND stats
-    assert _read_serving_meta(out)["version"] == 0
+    assert read_serving_meta(out)["version"] == 0
     assert _export_file_state(out, "tf") == state_v0
     assert _norm(read_serving_relation(spark, out, "tf", None)) == want_v0
     assert _norm(

@@ -1,5 +1,5 @@
 """Property-based time-travel batteries for the delta-generation
-store READ RULES — `components.read_rowstore` (row grain + id
+store READ RULES — `store.read_rowstore` (row grain + id
 tombstones: the dedup sigs relation, the IVF inverted file) and
 `streaming/index.read_index_store` (term-grain last-writer-wins
 upserts). The streaming tests drive the rules through the real write
@@ -16,15 +16,15 @@ import os
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
-from patientdataintegration_spark.streaming.components import (
-    _base_path,
-    _delta_path,
-    commit_base,
-    read_rowstore,
-)
 from patientdataintegration_spark.streaming.index import (
     read_index_store,
     seed_index_store,
+)
+from patientdataintegration_spark.streaming.store import (
+    base_path,
+    commit_base,
+    delta_path,
+    read_rowstore,
 )
 
 _IDS = list(range(6))
@@ -47,7 +47,7 @@ def test_rowstore_time_travel_matches_model(spark, gens, tmp_path_factory):
     base = [(i, i * 10) for i in _IDS[:3]]
     spark.createDataFrame(base, "doc_id bigint, payload bigint").write.mode(
         "overwrite"
-    ).parquet(_base_path(store, 0, "rows"))
+    ).parquet(base_path(store, 0, "rows"))
     commit_base(store, 0)  # base sentinel: reads skip unmarked bases
 
     # the store is INSERT+DELETE, not upsert (the CDC contract:
@@ -82,10 +82,10 @@ def test_rowstore_time_travel_matches_model(spark, gens, tmp_path_factory):
         rows = [(i, i * 100 + g) for i in ins]
         spark.createDataFrame(
             rows or [], "doc_id bigint, payload bigint"
-        ).write.mode("overwrite").parquet(_delta_path(store, g, "rows"))
+        ).write.mode("overwrite").parquet(delta_path(store, g, "rows"))
         spark.createDataFrame(
             [(i,) for i in dels] or [], "doc_id bigint"
-        ).write.mode("overwrite").parquet(_delta_path(store, g, "tombs"))
+        ).write.mode("overwrite").parquet(delta_path(store, g, "tombs"))
 
     for v in range(len(gens) + 1):
         got = sorted(
@@ -136,14 +136,14 @@ def test_upsert_store_time_travel_matches_model(spark, gens, tmp_path_factory):
     for g, gen in enumerate(gens, start=1):
         spark.createDataFrame(
             [(t,) for t in gen] or [], "term string"
-        ).write.mode("overwrite").parquet(_delta_path(store, g, "terms"))
+        ).write.mode("overwrite").parquet(delta_path(store, g, "terms"))
         rows = [(t, len(p), sorted(p)) for t, p in gen.items() if p]
         spark.createDataFrame(
             rows or [], "term string, doc_freq bigint, postings array<bigint>"
-        ).write.mode("overwrite").parquet(_delta_path(store, g, "index"))
+        ).write.mode("overwrite").parquet(delta_path(store, g, "index"))
         spark.createDataFrame(
             [], "term string, doc bigint"
-        ).write.mode("overwrite").parquet(_delta_path(store, g, "overflow"))
+        ).write.mode("overwrite").parquet(delta_path(store, g, "overflow"))
 
     for v in range(len(gens) + 1):
         got = sorted(

@@ -18,7 +18,7 @@ from patientdataintegration_spark.streaming.sinks import (
 
 def _write_events_file(spark, rows, src_dir):
     """Write rows as the SINGLE FILE `events.parquet` (the driver
-    corpus layout `_events_stream`'s pathGlobFilter expects), not a
+    corpus layout `events_stream`'s pathGlobFilter expects), not a
     parquet directory."""
     df = spark.createDataFrame(
         rows,

@@ -17,11 +17,10 @@ from pyspark.sql import functions as F
 
 from patientdataintegration_spark.streaming.components import (
     components_stream,
-    latest_generation,
     read_store,
     seed_stores,
-    store_disk_report,
 )
+from patientdataintegration_spark.streaming.store import latest_generation, store_disk_report
 
 # bands=2, rows=2 -> signature columns mh_0..mh_3; docs sharing
 # (mh_0, mh_1) collide in band 0, (mh_2, mh_3) in band 1
@@ -415,10 +414,10 @@ def test_partial_generation_is_invisible_to_dedup_store_reads(spark, tmp_path):
     every read rule resolves to the pre-batch state until the
     replayed batch overwrites the partial generation."""
     from patientdataintegration_spark.streaming.components import (
-        _delta_path,
         read_store,
         seed_stores,
     )
+    from patientdataintegration_spark.streaming.store import delta_path
 
     store = str(tmp_path / "store")
     os.makedirs(store)
@@ -429,13 +428,13 @@ def test_partial_generation_is_invisible_to_dedup_store_reads(spark, tmp_path):
 
     # crash remnant: three relations written, no tombs commit marker
     spark.createDataFrame([(9, 90)], "doc_id bigint, s bigint").write.parquet(
-        _delta_path(store, 1, "sigs")
+        delta_path(store, 1, "sigs")
     )
     spark.createDataFrame([(1, 9)], "doc_a bigint, doc_b bigint").write.parquet(
-        _delta_path(store, 1, "edges")
+        delta_path(store, 1, "edges")
     )
     spark.createDataFrame([(9, 1)], "node bigint, label bigint").write.parquet(
-        _delta_path(store, 1, "labels")
+        delta_path(store, 1, "labels")
     )
 
     assert sorted(
@@ -509,7 +508,7 @@ def test_migrate_store_markers_restores_pre_upgrade_store(spark, tmp_path):
     "never seeded" with no recovery path. `migrate_store_markers`
     stamps the sentinels onto a known-good store and returns what it
     stamped (idempotent: a second run stamps nothing)."""
-    from patientdataintegration_spark.streaming.components import (
+    from patientdataintegration_spark.streaming.store import (
         _BASE_SENTINEL,
         migrate_store_markers,
     )
@@ -541,9 +540,9 @@ def test_migrate_store_markers_stamps_deltas(spark, tmp_path):
     silently serve the stale base (r15 ADVICE). The migration stamps
     delta_g* too — gated on the marker relation directory existing
     when a marker name is given."""
-    from patientdataintegration_spark.streaming.components import (
+    from patientdataintegration_spark.streaming.components import components_stream
+    from patientdataintegration_spark.streaming.store import (
         _BASE_SENTINEL,
-        components_stream,
         migrate_store_markers,
     )
 
@@ -597,7 +596,7 @@ def test_uncommit_delta_clears_marker_success(spark, tmp_path):
     the marker relation's `_SUCCESS` (written LAST in the original
     attempt, so it would otherwise advertise commit while earlier
     relations are mid-overwrite; r15 ADVICE)."""
-    from patientdataintegration_spark.streaming.components import (
+    from patientdataintegration_spark.streaming.store import (
         _BASE_SENTINEL,
         commit_delta,
         uncommit_delta,

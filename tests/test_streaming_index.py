@@ -15,15 +15,12 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
-from patientdataintegration_spark.streaming.components import (
-    latest_generation,
-    store_disk_report,
-)
 from patientdataintegration_spark.streaming.index import (
     index_stream,
     read_index_store,
     seed_index_store,
 )
+from patientdataintegration_spark.streaming.store import latest_generation, store_disk_report
 
 DOC_SCHEMA = "doc_id bigint, text string, op int"
 
@@ -214,9 +211,7 @@ def test_partial_generation_is_invisible_until_replay_heals_it(spark, tmp_path):
     crash remnant — reads at any version resolve to the pre-batch
     state, and the checkpoint replay then overwrites the partial
     generation idempotently."""
-    from patientdataintegration_spark.streaming.components import (
-        _delta_path,
-    )
+    from patientdataintegration_spark.streaming.store import delta_path
 
     src, store, ckpt = (str(tmp_path / p) for p in ("src", "store", "ckpt"))
     os.makedirs(src)
@@ -230,8 +225,8 @@ def test_partial_generation_is_invisible_until_replay_heals_it(spark, tmp_path):
     # simulate the crash: the batch wrote index and overflow, then
     # died before the terms commit marker
     fake_idx, fake_of = _rebuild(spark, [(9, "zz", 1)], max_postings=16)
-    fake_idx.write.mode("overwrite").parquet(_delta_path(store, 1, "index"))
-    fake_of.write.mode("overwrite").parquet(_delta_path(store, 1, "overflow"))
+    fake_idx.write.mode("overwrite").parquet(delta_path(store, 1, "index"))
+    fake_of.write.mode("overwrite").parquet(delta_path(store, 1, "overflow"))
 
     # the uncommitted generation is invisible — both the version=None
     # read and an explicit read AT the partial version serve the seed
@@ -262,9 +257,7 @@ def test_torn_marker_write_is_uncommitted(spark, tmp_path):
     with no _SUCCESS — a bare isdir check would trust it and serve a
     torn generation (r14 ADVICE). Commitment requires the marker
     job's own _SUCCESS file."""
-    from patientdataintegration_spark.streaming.components import (
-        _delta_path,
-    )
+    from patientdataintegration_spark.streaming.store import delta_path
 
     store = str(tmp_path / "store")
     os.makedirs(store)
@@ -274,13 +267,13 @@ def test_torn_marker_write_is_uncommitted(spark, tmp_path):
     want_seed = _norm_index(read_index_store(spark, store, "index"))
 
     fake_idx, fake_of = _rebuild(spark, [(9, "zz", 1)], max_postings=16)
-    fake_idx.write.mode("overwrite").parquet(_delta_path(store, 1, "index"))
-    fake_of.write.mode("overwrite").parquet(_delta_path(store, 1, "overflow"))
+    fake_idx.write.mode("overwrite").parquet(delta_path(store, 1, "index"))
+    fake_of.write.mode("overwrite").parquet(delta_path(store, 1, "overflow"))
     # the crash-torn marker: terms/ written, then its _SUCCESS removed
     spark.createDataFrame([("zz",)], "term string").write.mode(
         "overwrite"
-    ).parquet(_delta_path(store, 1, "terms"))
-    os.remove(os.path.join(_delta_path(store, 1, "terms"), "_SUCCESS"))
+    ).parquet(delta_path(store, 1, "terms"))
+    os.remove(os.path.join(delta_path(store, 1, "terms"), "_SUCCESS"))
 
     assert _norm_index(read_index_store(spark, store, "index")) == want_seed
     assert latest_generation(store, marker="terms") == 0
@@ -298,7 +291,7 @@ def test_partial_base_is_invisible_and_satellites_survive(spark, tmp_path):
         doc_term_stats,
         positional_postings,
     )
-    from patientdataintegration_spark.streaming.components import _base_path
+    from patientdataintegration_spark.streaming.store import base_path
     from patientdataintegration_spark.streaming.index import (
         _store_features,
         read_index_stats,
@@ -322,7 +315,7 @@ def test_partial_base_is_invisible_and_satellites_survive(spark, tmp_path):
     # crash mid-fold: base_g1 got index only — no overflow, no
     # satellites, and (crucially) no _COMMITTED sentinel
     fake_idx, _ = _rebuild(spark, [(9, "zz", 1)], max_postings=16)
-    fake_idx.write.mode("overwrite").parquet(_base_path(store, 1, "index"))
+    fake_idx.write.mode("overwrite").parquet(base_path(store, 1, "index"))
 
     assert _store_features(store) == ("tf", "pos")
     assert _norm_index(read_index_store(spark, store, "index")) == want

@@ -13,15 +13,12 @@ import os
 
 from pyspark.sql import functions as F
 
-from patientdataintegration_spark.streaming.components import (
-    latest_generation,
-    store_disk_report,
-)
 from patientdataintegration_spark.streaming.ivf import (
     ivf_stream,
     read_ivf_centroids,
     seed_ivf_store,
 )
+from patientdataintegration_spark.streaming.store import latest_generation, store_disk_report
 
 VEC_SCHEMA = "vec_id bigint, embedding array<double>, op int"
 
@@ -190,10 +187,7 @@ def test_partial_generation_is_invisible_to_ivf_store_reads(spark, tmp_path):
     from patientdataintegration_spark.operators.similarity import (
         ivf_index_exact,
     )
-    from patientdataintegration_spark.streaming.components import (
-        _delta_path,
-        read_rowstore,
-    )
+    from patientdataintegration_spark.streaming.store import delta_path, read_rowstore
 
     store = str(tmp_path / "store")
     os.makedirs(store)
@@ -212,7 +206,7 @@ def test_partial_generation_is_invisible_to_ivf_store_reads(spark, tmp_path):
     # crash remnant: assigned rows written, no tombs commit marker
     assigned0.withColumn(
         "neighbor_id", F.col("neighbor_id") + 100
-    ).write.parquet(_delta_path(store, 1, "assigned"))
+    ).write.parquet(delta_path(store, 1, "assigned"))
 
     got = sorted(
         r["neighbor_id"]
@@ -239,9 +233,7 @@ def test_ivf_serving_export_prunes_to_probe_cells(spark, tmp_path):
         ivf_search,
     )
     from patientdataintegration_spark.plans.inspect import explain_str
-    from patientdataintegration_spark.streaming.components import (
-        read_rowstore,
-    )
+    from patientdataintegration_spark.streaming.store import read_rowstore
     from patientdataintegration_spark.streaming.ivf import (
         export_ivf_serving_layout,
         ivf_probe_cells_py,
@@ -320,9 +312,7 @@ def test_ivf_refresh_is_incremental_and_value_invisible(spark, tmp_path):
         ivf_index_exact,
         ivf_search,
     )
-    from patientdataintegration_spark.streaming.components import (
-        read_rowstore,
-    )
+    from patientdataintegration_spark.streaming.store import read_rowstore
     from patientdataintegration_spark.streaming.ivf import (
         export_ivf_serving_layout,
         refresh_ivf_serving_layout,
@@ -437,9 +427,7 @@ def test_ivf_refresh_falls_back_to_full_after_gc(spark, tmp_path):
     from patientdataintegration_spark.operators.similarity import (
         ivf_index_exact,
     )
-    from patientdataintegration_spark.streaming.components import (
-        read_rowstore,
-    )
+    from patientdataintegration_spark.streaming.store import read_rowstore
     from patientdataintegration_spark.streaming.ivf import (
         compact_ivf_store,
         export_ivf_serving_layout,
@@ -500,14 +488,12 @@ def test_ivf_continuous_serving_follows_the_stream(spark, tmp_path):
         ivf_index_exact,
         ivf_search,
     )
-    from patientdataintegration_spark.streaming.components import (
-        read_rowstore,
-    )
+    from patientdataintegration_spark.streaming.store import read_rowstore
     from patientdataintegration_spark.streaming.ivf import (
-        _read_ivf_serving_meta,
         export_ivf_serving_layout,
         read_ivf_serving,
     )
+    from patientdataintegration_spark.streaming.serving import read_serving_meta
 
     src, store, ckpt = (str(tmp_path / p) for p in ("src", "store", "ckpt"))
     os.makedirs(src)
@@ -533,13 +519,13 @@ def test_ivf_continuous_serving_follows_the_stream(spark, tmp_path):
         "append"
     ).parquet(src)
     run()
-    assert _read_ivf_serving_meta(out)["version"] == 1
+    assert read_serving_meta(out)["version"] == 1
 
     _vecs(spark, [(10, [-0.1, -0.9], 1), (3, None, -1)]).coalesce(
         1
     ).write.mode("append").parquet(src)
     run()
-    assert _read_ivf_serving_meta(out)["version"] == 2
+    assert read_serving_meta(out)["version"] == 2
 
     maintained = read_rowstore(
         spark, store, "assigned", id_col="neighbor_id", marker="tombs"
@@ -563,7 +549,7 @@ def test_ivf_continuous_serving_follows_the_stream(spark, tmp_path):
 
     # empty restart: version holds
     run()
-    assert _read_ivf_serving_meta(out)["version"] == 2
+    assert read_serving_meta(out)["version"] == 2
 
 
 def test_ivf_full_export_crash_before_flip_keeps_old_version(
@@ -575,7 +561,7 @@ def test_ivf_full_export_crash_before_flip_keeps_old_version(
     GC-triggered full fallback firing INLINE from a live stream —
     leaves the old version serving from intact old directories. The
     retry lands cleanly."""
-    import patientdataintegration_spark.streaming.ivf as iv
+    import patientdataintegration_spark.streaming.serving as sv
     import pytest
     from patientdataintegration_spark.operators.similarity import (
         ivf_index_exact,
@@ -616,15 +602,15 @@ def test_ivf_full_export_crash_before_flip_keeps_old_version(
         spark, src, "*.parquet", store, ckpt, op_col="op", compact_every=0
     )
 
-    real_write = iv._write_ivf_serving_meta
+    real_write = sv.write_serving_meta
 
     def crash(*a, **kw):
         raise RuntimeError("simulated crash before the meta flip")
 
-    monkeypatch.setattr(iv, "_write_ivf_serving_meta", crash)
+    monkeypatch.setattr(sv, "write_serving_meta", crash)
     with pytest.raises(RuntimeError, match="simulated crash"):
         export_ivf_serving_layout(spark, store, out, version=1)
-    monkeypatch.setattr(iv, "_write_ivf_serving_meta", real_write)
+    monkeypatch.setattr(sv, "write_serving_meta", real_write)
 
     # old meta, old dirs, old answers — the crashed attempt invisible
     served_after_crash, _c = read_ivf_serving(spark, out, all_cells)
