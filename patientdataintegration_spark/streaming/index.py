@@ -80,9 +80,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from patientdataintegration_spark.streaming.serving import (
-    link_untouched_buckets,
     publish,
+    read_relation,
     read_serving_meta,
+    refresh_range,
+    stage,
 )
 from patientdataintegration_spark.streaming.store import (
     base_path,
@@ -90,7 +92,6 @@ from patientdataintegration_spark.streaming.store import (
     delta_path,
     freeze_small,
     latest_generation,
-    overwrite,
     parallel_actions,
     resolve,
     scan_gens,
@@ -320,14 +321,15 @@ def export_serving_layout(
     bucket count means exporting to a FRESH directory and flipping
     the serving pointer.
 
-    Every relation (and `stats_v{V}`) writes to a STAGED
-    `{name}_v{V}` directory that `serving.publish` then flips the
-    meta to — including the full fallback `refresh_serving_layout`
-    can fire inline from a live stream; `keep_old_versions` sets the
-    retention window. The one residual in-place case: re-exporting at
-    the SAME already-served version (e.g. growing the relation set
-    with no new store generation) rewrites that version's directories
-    under readers — run that shape as an offline job."""
+    Every relation (and the stats marginal) stages to a fresh
+    version-tagged directory (`serving.stage`) that `serving.publish`
+    then flips the meta to — including the full fallback
+    `refresh_serving_layout` can fire inline from a live stream;
+    `keep_old_versions` sets the retention window. The one residual
+    in-place case: re-exporting at the SAME already-served version
+    (e.g. growing the relation set with no new store generation)
+    rewrites that version's directories under readers — run that
+    shape as an offline job."""
     version, _base, _gens = resolve(store_dir, version, marker="terms")
     if os.path.isfile(os.path.join(out_dir, "serving_meta.json")):
         old_meta = read_serving_meta(out_dir)
@@ -351,30 +353,28 @@ def export_serving_layout(
                 f"{sorted(relations)} would leave the dropped relations "
                 "stale-but-readable — export to a fresh directory instead"
             )
-    dirs = {name: f"{name}_v{version}" for name in relations}
-    writes = [
-        overwrite(
-            read_index_store(spark, store_dir, name, version=version)
-            .withColumn("tb", term_bucket(F.col("term"), n_buckets)),
-            os.path.join(out_dir, dirs[name]),
-            "tb",
-        )
-        for name in relations
-    ]
     meta = {
         "n_buckets": n_buckets,
         "version": version,
         "relations": list(relations),
-        "dirs": dirs,
+        "dirs": {},
     }
+    writes = [
+        stage(
+            out_dir, meta, name,
+            read_index_store(spark, store_dir, name, version=version)
+            .withColumn("tb", term_bucket(F.col("term"), n_buckets)),
+            "tb",
+        )
+        for name in relations
+    ]
     if "tf" in relations:
-        meta["stats"] = f"stats_v{version}"
-        writes.append(overwrite(
+        writes.append(stage(
+            out_dir, meta, "stats",
             read_index_stats(spark, store_dir, version=version),
-            os.path.join(out_dir, meta["stats"]),
         ))
     parallel_actions(writes)
-    publish(out_dir, meta, ("stats", *relations), keep_old_versions)
+    publish(out_dir, meta, keep_old_versions)
     return version
 
 
@@ -382,9 +382,7 @@ def read_serving_stats(spark: SparkSession, out_dir: str) -> DataFrame:
     """The exported layout's 1-row scoring marginal, resolved through
     the meta so a reader always pairs the stats with the row
     directories of the meta version it planned against."""
-    return spark.read.schema(STATS_SCHEMA).parquet(
-        os.path.join(out_dir, read_serving_meta(out_dir)["stats"])
-    )
+    return read_relation(spark, out_dir, "stats", STATS_SCHEMA)
 
 
 def refresh_serving_layout(
@@ -414,19 +412,17 @@ def refresh_serving_layout(
       last-writer-wins rule restricted to the range, delta-sized);
       dirty + absent = the term left the index, so it simply
       contributes no rows;
-    - the write is a DYNAMIC partition overwrite of only those
-      buckets; a dirty bucket whose terms all vanished is deleted
-      explicitly (dynamic overwrite only rewrites partitions present
-      in the output).
+    - the job writes only those buckets (copy-on-write staging,
+      below); a dirty bucket whose terms all vanished is never
+      created.
 
     Refresh cost is therefore O(dirty terms' rows + their buckets'
     rows), never the store (pinned by tests/test_scoring_store.py:
-    untouched bucket files stay byte-identical). If any generation in
-    the range is no longer on disk (compaction folded it and GC ran),
-    the dirty sets are incomplete and the refresh FALLS BACK to a
-    full re-export at v_new — correct, just not incremental.
-    `n_buckets` stays frozen (see `export_serving_layout`); the meta
-    version flips atomically after the last data write. Returns
+    untouched bucket files stay byte-identical). The version range
+    follows `serving.refresh_range` (forward only; a generation
+    folded and GC'd away means a full re-export at v_new — correct,
+    just not incremental). `n_buckets` stays frozen (see
+    `export_serving_layout`). Returns
     {"version", "mode": "noop"|"incremental"|"full",
     "dirty_buckets"}.
 
@@ -441,14 +437,12 @@ def refresh_serving_layout(
     spanning other generations ignores it), so it can narrow cost,
     never results.
 
-    COPY-ON-WRITE staging: the refresh never writes into a directory
-    the live meta references.
-    Each relation stages to a FRESH `{name}_v{v_new}` directory —
-    dirty buckets written by the job, untouched buckets HARDLINKED
-    from the old directory (metadata-sized: same inode, same bytes,
-    same mtime; an object-store deployment would server-side-copy or
-    manifest-reference them) — and the atomic meta flip publishes
-    all relations + stats together (`serving.publish`). A reader
+    COPY-ON-WRITE staging (`serving.stage`): the refresh never writes
+    into a directory the live meta references. Each relation stages
+    to a fresh version-tagged directory — dirty buckets written by
+    the job, untouched buckets HARDLINKED from the old directory —
+    and the atomic meta flip publishes all relations + stats
+    together (`serving.publish`). A reader
     therefore resolves EITHER the old meta (old dirs, old stats —
     intact, byte-identical) OR the new meta, never a pre/post hybrid,
     and a crash anywhere before the flip leaves the old layout
@@ -456,7 +450,6 @@ def refresh_serving_layout(
     `keep_old_versions` retention window."""
     meta = read_serving_meta(out_dir)
     n_buckets = int(meta["n_buckets"])
-    v_exp = int(meta["version"])
     if "relations" not in meta:
         # a meta without the relation list predates this refresh; a
         # guessed default would advance the version while leaving the
@@ -481,23 +474,16 @@ def refresh_serving_layout(
             "re-seed the store with the missing satellites or export a "
             "reduced layout to a fresh directory"
         )
-    v_new, _base, _gens = resolve(store_dir, version, marker="terms")
-    if v_new < v_exp:
-        raise ValueError(
-            f"serving layout at {out_dir!r} is at version {v_exp}, ahead of "
-            f"the requested store version {v_new} — a refresh only moves "
-            "forward; export a historical version to a fresh directory"
-        )
-    if v_new == v_exp:
-        return {"version": v_exp, "mode": "noop", "dirty_buckets": []}
-    needed = list(range(v_exp + 1, v_new + 1))
-    _bases, committed = scan_gens(store_dir, marker="terms")
-    if not set(needed) <= set(committed):
-        export_serving_layout(
-            spark, store_dir, out_dir, relations, n_buckets, version=v_new,
+    v_new, mode, needed = refresh_range(
+        store_dir, out_dir, meta, version, "terms",
+        lambda v: export_serving_layout(
+            spark, store_dir, out_dir, relations, n_buckets, version=v,
             keep_old_versions=keep_old_versions,
-        )
-        return {"version": v_new, "mode": "full", "dirty_buckets": None}
+        ),
+    )
+    if mode != "incremental":
+        return {"version": v_new, "mode": mode,
+                "dirty_buckets": [] if mode == "noop" else None}
 
     if (
         dirty_terms is not None
@@ -534,14 +520,7 @@ def refresh_serving_layout(
             .collect()
         )
 
-    # built BEFORE the per-relation threads fan out, so new_meta never
-    # mutates concurrently
-    new_dirs = {name: f"{name}_v{v_new}" for name in relations}
-    new_meta = {**meta, "version": v_new, "dirs": new_dirs}
-    if "tf" in relations:
-        new_meta["stats"] = f"stats_v{v_new}"
-
-    def _refresh_rel(name: str) -> None:
+    def _content(name: str) -> DataFrame:
         if len(needed) == 1:
             # single-generation range (the inline continuous-serving
             # cadence): every delta row's generation IS its term's
@@ -561,43 +540,30 @@ def refresh_serving_layout(
                 .drop("_gen", "_lg")
             )
         kept = (
-            _read_serving_parquet(spark, out_dir, name)
+            _read_served(spark, out_dir, name)
             .filter(F.col("tb").isin(buckets))
             .drop("tb")
             .join(F.broadcast(dirty), "term", "left_anti")
         )
-        content = kept.unionByName(fresh).withColumn(
+        return kept.unionByName(fresh).withColumn(
             "tb", term_bucket(F.col("term"), n_buckets)
         )
 
-        def _content_write() -> None:
-            # stage to the FRESH directory (mode=overwrite clears a
-            # crashed attempt's orphan), then hardlink every untouched
-            # bucket across from the old directory — a dirty bucket
-            # whose terms all vanished is simply never created
-            new_path = os.path.join(out_dir, new_dirs[name])
-            overwrite(content, new_path, "tb")()
-            link_untouched_buckets(
-                os.path.join(out_dir, meta["dirs"][name]), new_path,
-                set(buckets),
-            )
-
-        wjobs = [_content_write]
-        if name == "tf":
-            # the stats write is independent of the bucket rewrite
-            # (both published only by the meta flip) — overlap them
-            wjobs.append(overwrite(
-                read_index_stats(spark, store_dir, version=v_new),
-                os.path.join(out_dir, new_meta["stats"]),
-            ))
-        parallel_actions(wjobs)
-
-    # relations rewrite independently of each other (the meta flip
-    # below is the single publish point) — run them concurrently
-    parallel_actions([
-        (lambda n=name: _refresh_rel(n)) for name in relations
-    ])
-    publish(out_dir, new_meta, ("stats", *relations), keep_old_versions)
+    # every relation and the stats marginal stage independently (the
+    # meta flip below is the single publish point) — run them
+    # concurrently
+    new_meta = {**meta, "version": v_new, "dirs": dict(meta["dirs"])}
+    writes = [
+        stage(out_dir, new_meta, name, _content(name), "tb", buckets)
+        for name in relations
+    ]
+    if "tf" in relations:
+        writes.append(stage(
+            out_dir, new_meta, "stats",
+            read_index_stats(spark, store_dir, version=v_new),
+        ))
+    parallel_actions(writes)
+    publish(out_dir, new_meta, keep_old_versions)
     return {"version": v_new, "mode": "incremental", "dirty_buckets": buckets}
 
 
@@ -623,11 +589,11 @@ def read_serving_relation(
     correct, just not pruned, and the right plan anyway once a query
     batch's vocabulary stops being "point read"-sized."""
     if terms is None:
-        return _read_serving_parquet(spark, out_dir, name).drop("tb")
+        return _read_served(spark, out_dir, name).drop("tb")
     n_buckets = int(read_serving_meta(out_dir)["n_buckets"])
     buckets = sorted({term_bucket_py(t, n_buckets) for t in terms})
     return (
-        _read_serving_parquet(spark, out_dir, name)
+        _read_served(spark, out_dir, name)
         .filter(F.col("tb").isin(buckets))
         .filter(F.col("term").isin(list(terms)))
         .drop("tb")
@@ -660,19 +626,8 @@ def collect_pruning_terms(
     return sorted(r["term"] for r in capped)
 
 
-def _read_serving_parquet(
-    spark: SparkSession, out_dir: str, name: str
-) -> DataFrame:
-    """The exported relation with its schema stated explicitly
-    (partition column included): an EMPTY relation's partitioned
-    write leaves no part files at all — e.g. a small store whose
-    overflow never filled — and schema inference would fail on the
-    bare directory where an empty frame is the correct answer. The
-    physical directory resolves through the meta's `dirs` map."""
-    rel_dir = read_serving_meta(out_dir)["dirs"][name]
-    return spark.read.schema(f"{_SCHEMAS[name]}, tb int").parquet(
-        os.path.join(out_dir, rel_dir)
-    )
+def _read_served(spark: SparkSession, out_dir: str, name: str) -> DataFrame:
+    return read_relation(spark, out_dir, name, f"{_SCHEMAS[name]}, tb int")
 
 
 def compact_index_store(spark: SparkSession, store_dir: str) -> int:

@@ -49,17 +49,20 @@ from pyspark.sql import functions as F
 
 from patientdataintegration_spark.streaming.serving import (
     publish,
+    read_relation,
     read_serving_meta,
+    refresh_range,
+    stage,
 )
 from patientdataintegration_spark.streaming.store import (
     compact,
     delta_path,
     latest_generation,
+    live_rows,
     overwrite,
     parallel_actions,
     read_rowstore,
     resolve,
-    scan_gens,
     tombs_by_id,
     write_base,
     write_delta,
@@ -68,6 +71,12 @@ from patientdataintegration_spark.streaming.store import (
 CENTROID_SCHEMA = "cell bigint, centroid array<double>"
 ASSIGNED_SCHEMA = (
     "neighbor_id bigint, c_vec array<double>, c_norm double, cell bigint"
+)
+# the serving export's `assigned` relation: the store's rows stamped
+# with their generation `_gen`, hive-partitioned by `cell`
+SERVED_SCHEMA = (
+    "neighbor_id bigint, c_vec array<double>, c_norm double, _gen int, "
+    "cell bigint"
 )
 # the serving export's delete-file side relation: (id, latest
 # tombstone generation) — `store.tombs_by_id`'s shape
@@ -136,37 +145,26 @@ def export_ivf_serving_layout(
     every exported row carries its
     assignment generation `_gen` (a full export folds the whole state,
     so all rows take the exported version), and a delta-sized
-    `tombs_v{V}` side relation (empty at full export) records
+    `tombs` side relation (empty at full export) records
     (neighbor_id, latest tombstone generation) pairs the pruned read
     anti-applies with the store's own liveness rule — the
     Iceberg/Hudi delete-file pattern, so a refresh never has to FIND
     a tombstoned id's cell partition. Returns the exported
     version."""
     version, _base, _gens = resolve(store_dir, version, marker="tombs")
-    meta = {
-        "version": version,
-        "tombs": f"tombs_v{version}",
-        "assigned": f"assigned_v{version}",
-        "centroids": f"centroids_v{version}",
-    }
+    meta = {"version": version, "dirs": {}}
     assigned = read_rowstore(
         spark, store_dir, "assigned", version=version,
         id_col="neighbor_id", marker="tombs",
     ).withColumn("_gen", F.lit(int(version)).cast("int"))
     parallel_actions([
-        overwrite(assigned, os.path.join(out_dir, meta["assigned"]), "cell"),
-        overwrite(
-            read_ivf_centroids(spark, store_dir),
-            os.path.join(out_dir, meta["centroids"]),
+        stage(out_dir, meta, "assigned", assigned, "cell"),
+        stage(
+            out_dir, meta, "centroids", read_ivf_centroids(spark, store_dir)
         ),
-        overwrite(
-            spark.createDataFrame([], TOMB_SCHEMA),
-            os.path.join(out_dir, meta["tombs"]),
-        ),
+        stage(out_dir, meta, "tombs", spark.createDataFrame([], TOMB_SCHEMA)),
     ])
-    publish(
-        out_dir, meta, ("assigned", "centroids", "tombs"), keep_old_versions
-    )
+    publish(out_dir, meta, keep_old_versions)
     return version
 
 
@@ -188,50 +186,38 @@ def refresh_ivf_serving_layout(
       id's latest in-range tombstone (the store's same-batch-dies
       rule) — delta-sized; their cell set collects DRIVER-SIDE
       (≤ n_cells ints, the rewrite's planner input);
-    - those cells rewrite by DYNAMIC partition overwrite: the cell's
-      old exported rows (read PRUNED, minus rows killed by the new
-      tombstones, minus exact (id, _gen) replay duplicates) ∪ the
-      live inserts carrying their true generation;
+    - each dirty cell's new content = its old exported rows (read
+      PRUNED, minus rows killed by the new tombstones, minus exact
+      (id, _gen) replay duplicates) ∪ the live inserts carrying their
+      true generation, staged copy-on-write (`serving.stage`) with
+      every untouched cell hardlinked across;
     - takedowns never hunt for their victim's partition: the range's
       (id, latest tomb gen) pairs MERGE into the delta-sized tombs
-      side relation (per-id max — idempotent), written to a fresh
-      `tombs_v{v_new}` so a crash never truncates the live one; the
+      side relation (per-id max — idempotent), staged likewise; the
       pruned read applies them with the store's liveness rule
-      (`_tg < _gen` keeps re-inserts above their tombstone alive,
-      exactly `store.read_rowstore`).
+      (`store.live_rows`: `_tg < _gen` keeps re-inserts above their
+      tombstone alive).
 
     Refresh cost is O(inserted rows + their cells' rows + tombstone
     ids) — the maintenance window's size, never the inverted file's.
-    If any needed generation was already folded and GC'd, the diff is
-    unknowable and the refresh FALLS BACK to a full re-export at
-    v_new (which also resets the tombs relation to empty — the
-    natural fold point, compaction-aligned). The meta version flips
-    atomically after the last data write. Returns {"version",
-    "mode": "noop"|"incremental"|"full", "dirty_cells"}.
-
-    The cell rewrite is the one in-place write of the serving layouts:
-    it dynamically overwrites the dirty cells of the live `assigned`
-    directory, which the meta flip does not stage."""
+    The version range follows `serving.refresh_range`: the full
+    fallback re-exports at v_new, which also resets the tombs
+    relation to empty — the natural fold point, compaction-aligned.
+    The meta flip publishes the whole layout (the unchanged centroid
+    directory stays referenced), so a crash anywhere before it leaves
+    the old layout serving. Returns {"version", "mode":
+    "noop"|"incremental"|"full", "dirty_cells"}."""
     meta = read_serving_meta(out_dir)
-    v_exp = int(meta["version"])
-    v_new, _base, _gens = resolve(store_dir, version, marker="tombs")
-    if v_new < v_exp:
-        raise ValueError(
-            f"IVF serving layout at {out_dir!r} is at version {v_exp}, "
-            f"ahead of the requested store version {v_new} — a refresh "
-            "only moves forward; export a historical version to a fresh "
-            "directory"
-        )
-    if v_new == v_exp:
-        return {"version": v_exp, "mode": "noop", "dirty_cells": []}
-    needed = list(range(v_exp + 1, v_new + 1))
-    _bases, committed = scan_gens(store_dir, marker="tombs")
-    if not set(needed) <= set(committed):
-        export_ivf_serving_layout(
-            spark, store_dir, out_dir, version=v_new,
+    v_new, mode, needed = refresh_range(
+        store_dir, out_dir, meta, version, "tombs",
+        lambda v: export_ivf_serving_layout(
+            spark, store_dir, out_dir, version=v,
             keep_old_versions=keep_old_versions,
-        )
-        return {"version": v_new, "mode": "full", "dirty_cells": None}
+        ),
+    )
+    if mode != "incremental":
+        return {"version": v_new, "mode": mode,
+                "dirty_cells": [] if mode == "noop" else None}
 
     inserts: DataFrame | None = None
     for g in needed:
@@ -240,63 +226,42 @@ def refresh_ivf_serving_layout(
         ).withColumn("_gen", F.lit(int(g)).cast("int"))
         inserts = d if inserts is None else inserts.unionByName(d)
     new_tombs = tombs_by_id(spark, store_dir, needed, "neighbor_id")
-    live = (
-        inserts.join(F.broadcast(new_tombs), "neighbor_id", "left")
-        .filter(F.col("_tg").isNull() | (F.col("_tg") < F.col("_gen")))
-        .drop("_tg")
-        # consumers: the cell collect, the replay anti-join, the union
-        .localCheckpoint()
-    )
+    # consumers: the cell collect, the replay anti-join, the union
+    live = live_rows(inserts, new_tombs, "neighbor_id").localCheckpoint()
     dirty = sorted(
         r["cell"] for r in live.select("cell").distinct().collect()
     )
-    if dirty:
-        kept = (
-            _read_ivf_export(spark, out_dir)
-            .filter(F.col("cell").isin(dirty))
-            .join(F.broadcast(new_tombs), "neighbor_id", "left")
-            .filter(F.col("_tg").isNull() | (F.col("_tg") < F.col("_gen")))
-            .drop("_tg")
-            # checkpoint-replayed batches re-land identical (id, gen)
-            # rows; exact-pair anti keeps the rewrite idempotent
-            # without collapsing the store's legitimate duplicates
-            .join(
-                F.broadcast(live.select("neighbor_id", "_gen")),
-                ["neighbor_id", "_gen"],
-                "left_anti",
-            )
-        )
-        # materialize BEFORE the overwrite: the plan reads the very
-        # partitions the write replaces. No emptied-cell deletion pass
-        # (unlike the index twin, where a dirty bucket's terms can all
-        # vanish): a cell is dirty only because a live insert lands in
-        # it, so every rewritten partition is non-empty by construction
-        content = kept.unionByName(live).localCheckpoint()
     merged = (
-        spark.read.schema(TOMB_SCHEMA)
-        .parquet(os.path.join(out_dir, meta["tombs"]))
+        read_relation(spark, out_dir, "tombs", TOMB_SCHEMA)
         .unionByName(new_tombs)
         .groupBy("neighbor_id")
         .agg(F.max("_tg").alias("_tg"))
     )
-    new_rel = f"tombs_v{v_new}"
+    new_meta = {**meta, "version": v_new, "dirs": dict(meta["dirs"])}
     # the cell rewrite and the delete-file fold are independent (the
-    # meta flip below is the single publish point) — overlap them
-    # (guide §2.6)
-    wjobs = [overwrite(merged, os.path.join(out_dir, new_rel))]
+    # meta flip is the single publish point) — overlap them
+    wjobs = [stage(out_dir, new_meta, "tombs", merged)]
     if dirty:
-        wjobs.append(
-            lambda: content.write.mode("overwrite").option(
-                "partitionOverwriteMode", "dynamic"
-            ).partitionBy("cell").parquet(
-                os.path.join(out_dir, meta["assigned"])
-            )
+        # checkpoint-replayed batches re-land identical (id, gen) rows;
+        # the exact-pair anti keeps the rewrite idempotent without
+        # collapsing the store's legitimate duplicates. No emptied-cell
+        # pass (unlike the index twin): a cell is dirty only because a
+        # live insert lands in it
+        kept = live_rows(
+            read_relation(spark, out_dir, "assigned", SERVED_SCHEMA)
+            .filter(F.col("cell").isin(dirty)),
+            new_tombs, "neighbor_id",
+        ).join(
+            F.broadcast(live.select("neighbor_id", "_gen")),
+            ["neighbor_id", "_gen"],
+            "left_anti",
         )
+        wjobs.append(stage(
+            out_dir, new_meta, "assigned", kept.unionByName(live), "cell",
+            dirty,
+        ))
     parallel_actions(wjobs)
-    publish(
-        out_dir, {**meta, "version": v_new, "tombs": new_rel}, ("tombs",),
-        keep_old_versions,
-    )
+    publish(out_dir, new_meta, keep_old_versions)
     return {"version": v_new, "mode": "incremental", "dirty_cells": dirty}
 
 
@@ -344,25 +309,17 @@ def read_ivf_serving(
     store's liveness rule (`_tg < _gen` keeps re-inserts above their
     tombstone), so a refreshed layout serves takedowns without ever
     having rewritten their cells."""
-    meta = read_serving_meta(out_dir)
-    tombs = spark.read.schema(TOMB_SCHEMA).parquet(
-        os.path.join(out_dir, meta["tombs"])
-    )
-    assigned = (
-        _read_ivf_export(spark, out_dir)
-        .filter(F.col("cell").isin(list(cells)))
-        .join(F.broadcast(tombs), "neighbor_id", "left")
-        .filter(F.col("_tg").isNull() | (F.col("_tg") < F.col("_gen")))
-        .drop("_tg", "_gen")
-    )
+    assigned = live_rows(
+        read_relation(spark, out_dir, "assigned", SERVED_SCHEMA)
+        .filter(F.col("cell").isin(list(cells))),
+        read_relation(spark, out_dir, "tombs", TOMB_SCHEMA),
+        "neighbor_id",
+    ).drop("_gen")
     # provably ≤ n_cells rows BEFORE the search's broadcast crossJoin
     # (`bm25_from_store`'s 1-row-stats adjudication): a corrupted
     # export with duplicate cell rows can never fan the rank join out
     centroids = (
-        spark.read.schema(CENTROID_SCHEMA)
-        .parquet(
-            os.path.join(out_dir, meta["centroids"])
-        )
+        read_ivf_serving_centroids(spark, out_dir)
         .groupBy("cell")
         .agg(F.min("centroid").alias("centroid"))
     )
@@ -375,22 +332,7 @@ def read_ivf_serving_centroids(
     """The exported layout's (tiny) centroid table — the driver-side
     probe planner's input — resolved through the meta so planners
     and the pruned read pair with one committed export version."""
-    return spark.read.schema(CENTROID_SCHEMA).parquet(
-        os.path.join(out_dir, read_serving_meta(out_dir)["centroids"])
-    )
-
-
-def _read_ivf_export(spark: SparkSession, out_dir: str) -> DataFrame:
-    """The exported inverted file with its schema stated explicitly
-    (partition column included) — an export whose every cell emptied
-    leaves no part files, and schema inference would fail on the bare
-    directory where an empty frame is the correct answer
-    (`index._read_serving_parquet`'s rule). The physical directory
-    resolves through the meta."""
-    return spark.read.schema(
-        "neighbor_id bigint, c_vec array<double>, c_norm double, "
-        "_gen int, cell bigint"
-    ).parquet(os.path.join(out_dir, read_serving_meta(out_dir)["assigned"]))
+    return read_relation(spark, out_dir, "centroids", CENTROID_SCHEMA)
 
 
 def ivf_stream(
@@ -415,14 +357,13 @@ def ivf_stream(
     `export_ivf_serving_layout` against this store), the stream is
     CONTINUOUS SERVING — `index_stream(serving_out=...)`'s geometric
     twin: each micro-batch ends with an incremental
-    `refresh_ivf_serving_layout` (the batch's inserts rewrite only
+    `refresh_ivf_serving_layout` (the batch's inserts restage only
     their cells, takedowns merge into the delta-sized delete files),
     so the cell-partitioned layout follows the stream with no
     scheduled job. Replay-safe for free (the refresh only moves
-    forward and its partition rewrite is exact-(id, gen)
-    idempotent); a crash between the generation commit and the
-    refresh costs one version of staleness, repaired by the next
-    batch.
+    forward and its cell rewrite is exact-(id, gen) idempotent); a
+    crash between the generation commit and the refresh costs one
+    version of staleness, repaired by the next batch.
 
     Per batch: op > 0 rows assign against the frozen centroids
     (`ivf_assign` — one broadcast map job over the batch, the old

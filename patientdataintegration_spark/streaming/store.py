@@ -318,6 +318,19 @@ def tombs_by_id(
     )
 
 
+def live_rows(df: DataFrame, tombs: DataFrame, id_col: str) -> DataFrame:
+    """The row-grain liveness rule: a `_gen`-stamped row of `df`
+    survives iff its id has no tombstone in `tombs` (`tombs_by_id`'s
+    (id, `_tg`) shape, broadcast) or the id's latest tombstone
+    generation `_tg` lies BELOW the row's — a same-generation
+    insert+tombstone dies, a later re-insert lives."""
+    return (
+        df.join(F.broadcast(tombs), id_col, "left")
+        .filter(F.col("_tg").isNull() | (F.col("_tg") < F.col("_gen")))
+        .drop("_tg")
+    )
+
+
 def read_rowstore(
     spark: SparkSession,
     store_dir: str,
@@ -343,11 +356,7 @@ def read_rowstore(
             F.broadcast(tombs.select(id_col)), id_col, "left_anti"
         )
         if deltas is not None:
-            deltas = (
-                deltas.join(F.broadcast(tombs), id_col, "left")
-                .filter(F.col("_tg").isNull() | (F.col("_tg") < F.col("_gen")))
-                .drop("_tg")
-            )
+            deltas = live_rows(deltas, tombs, id_col)
     if deltas is None:
         return base_df
     return base_df.unionByName(deltas.drop("_gen"))

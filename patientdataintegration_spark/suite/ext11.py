@@ -782,10 +782,17 @@ def q298_export_erasure_sla(spark: SparkSession, sf_dir: str) -> DataFrame:
     mods (JVM-codegen), the postings check one `filter` over each
     array — the nightly compliance job's exact cost envelope."""
     from patientdataintegration_spark.streaming.index import (
-        _SCHEMAS,
-        _read_serving_parquet,
+        INDEX_SCHEMA,
+        OVERFLOW_SCHEMA,
+        POS_SCHEMA,
+        TF_SCHEMA,
     )
-    from patientdataintegration_spark.streaming.ivf import read_ivf_serving
+    from patientdataintegration_spark.streaming.ivf import (
+        SERVED_SCHEMA,
+        read_ivf_serving,
+        read_ivf_serving_centroids,
+    )
+    from patientdataintegration_spark.streaming.serving import read_relation
     from patientdataintegration_spark.suite.ext10 import (
         _shared_serving_export,
     )
@@ -805,37 +812,34 @@ def q298_export_erasure_sla(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lit(artifact).alias("artifact"), "n_rows", "refs_to_deleted"
         )
 
+    def served(out: str, name: str, schema: str) -> DataFrame:
+        return read_relation(spark, out, name, f"{schema}, tb int")
+
     doc_deleted = (F.col("doc") % 5 == 0).cast("int")
-    rows = []
-    for name in ("tf", "pos", "overflow"):
-        rows.append(
-            cert(
-                f"serve_{name}",
-                _read_serving_parquet(spark, serve_out, name),
-                doc_deleted,
-            )
+    rows = [
+        cert(f"serve_{name}", served(serve_out, name, schema), doc_deleted)
+        for name, schema in (
+            ("tf", TF_SCHEMA),
+            ("pos", POS_SCHEMA),
+            ("overflow", OVERFLOW_SCHEMA),
         )
+    ]
     rows.append(
         cert(
             "serve_index",
-            _read_serving_parquet(spark, serve_out, "index"),
+            served(serve_out, "index", INDEX_SCHEMA),
             F.size(F.filter("postings", lambda x: x % 5 == 0)),
         )
     )
     rows.append(
-        cert(
-            "refresh_tf",
-            _read_serving_parquet(spark, refresh_out, "tf"),
-            doc_deleted,
-        )
+        cert("refresh_tf", served(refresh_out, "tf", TF_SCHEMA), doc_deleted)
     )
     vec_deleted = (F.col("neighbor_id") % 7 == 3).cast("int")
-    from patientdataintegration_spark.streaming.ivf import (
-        _read_ivf_export,
-        read_ivf_serving_centroids,
-    )
-
-    rows.append(cert("ivf_export", _read_ivf_export(spark, ivf_full), vec_deleted))
+    rows.append(cert(
+        "ivf_export",
+        read_relation(spark, ivf_full, "assigned", SERVED_SCHEMA),
+        vec_deleted,
+    ))
     all_cells = sorted(
         r["cell"]
         for r in read_ivf_serving_centroids(spark, ivf_mor)

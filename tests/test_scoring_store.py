@@ -475,16 +475,14 @@ def test_serving_export_prunes_to_query_buckets(spark, tmp_path):
 
 
 def _meta_dir(out, relation):
-    """Resolve a relation's physical directory through the layout
-    meta (version-tagged staging since r16; legacy bare-name
-    fallback) — tests must address exports the way readers do."""
+    """Resolve a relation's physical directory (the stats marginal
+    included) through the layout meta's `dirs` map — tests must
+    address exports the way readers do."""
     import json
 
     with open(os.path.join(out, "serving_meta.json")) as f:
         meta = json.load(f)
-    if relation == "stats":
-        return meta.get("stats", "stats")
-    return meta.get("dirs", {}).get(relation, relation)
+    return meta["dirs"][relation]
 
 
 def _export_file_state(out, relation):
@@ -1241,7 +1239,7 @@ def test_export_retention_protects_pre_flip_refs_after_refreshes(
         )
     pre_flip = read_serving_meta(out)
     assert pre_flip["version"] == 2 and pre_flip["dirs"]["tf"] == "tf_v2"
-    assert pre_flip["stats"] == "stats_v2"
+    assert pre_flip["dirs"]["stats"] == "stats_v2"
     assert {"tf_v0", "tf_v1", "stats_v0", "stats_v1"}.isdisjoint(
         os.listdir(out)
     )

@@ -11,8 +11,6 @@ against a Python model replayed to v."""
 
 from __future__ import annotations
 
-import os
-
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 

@@ -29,12 +29,29 @@ def _vecs(spark, rows):
 
 def _ivf_dir(out, relation):
     """Resolve an exported relation's physical directory through the
-    layout meta (version-tagged staging since r16)."""
+    layout meta's `dirs` map, the way readers do."""
     import json
 
     with open(os.path.join(out, "serving_meta.json")) as f:
         meta = json.load(f)
-    return meta.get(relation, relation)
+    return meta["dirs"][relation]
+
+
+def _cell_files(out):
+    """relpath -> (mtime, size) for every file under the exported
+    `assigned` relation the meta references — the byte-identity
+    witness for untouched cells, addressed relative to whichever
+    directory the refresh staged."""
+    rel = os.path.join(out, _ivf_dir(out, "assigned"))
+    return {
+        os.path.relpath(os.path.join(root, f), rel): (
+            os.path.getmtime(os.path.join(root, f)),
+            os.path.getsize(os.path.join(root, f)),
+        )
+        for root, _dirs, files in os.walk(rel)
+        for f in files
+        if os.path.basename(root).startswith("cell=")
+    }
 
 
 def _cells(df):
@@ -306,8 +323,6 @@ def test_ivf_refresh_is_incremental_and_value_invisible(spark, tmp_path):
     cell, (c) a re-insert above its own tombstone lives, and (d)
     search over the refreshed pruned layout equals search over the
     maintained store at the new version."""
-    import glob as globmod
-
     from patientdataintegration_spark.operators.similarity import (
         ivf_index_exact,
         ivf_search,
@@ -349,12 +364,7 @@ def test_ivf_refresh_is_incremental_and_value_invisible(spark, tmp_path):
         .select("cell")
         .collect()
     )
-    before = {
-        p: (os.path.getmtime(p), os.path.getsize(p))
-        for p in globmod.glob(
-            os.path.join(out, _ivf_dir(out, "assigned"), "cell=*", "*")
-        )
-    }
+    before = _cell_files(out)
 
     # batch 2 -> generation 2: an ingest near +x and takedowns of
     # vec 3 (the +y cell, which receives NO new assignment) and
@@ -394,8 +404,9 @@ def test_ivf_refresh_is_incremental_and_value_invisible(spark, tmp_path):
         if int(p.split("cell=")[1].split(os.sep)[0]) not in dirty
     ]
     assert untouched, "test needs at least one untouched cell"
+    after = _cell_files(out)
     for p in untouched:
-        assert (os.path.getmtime(p), os.path.getsize(p)) == before[p]
+        assert after.get(p) == before[p]
     assert len(dirty) < len(all_cells)
 
     # (d) search parity at the refreshed version
@@ -560,7 +571,9 @@ def test_ivf_full_export_crash_before_flip_keeps_old_version(
     flips LAST, so a crash anywhere before the flip — including the
     GC-triggered full fallback firing INLINE from a live stream —
     leaves the old version serving from intact old directories. The
-    retry lands cleanly."""
+    retry lands cleanly. The incremental refresh stages the same way:
+    a crash before its flip leaves the dirty cell's old rows serving,
+    and the retry still takes the incremental path."""
     import patientdataintegration_spark.streaming.serving as sv
     import pytest
     from patientdataintegration_spark.operators.similarity import (
@@ -569,6 +582,7 @@ def test_ivf_full_export_crash_before_flip_keeps_old_version(
     from patientdataintegration_spark.streaming.ivf import (
         export_ivf_serving_layout,
         read_ivf_serving,
+        refresh_ivf_serving_layout,
         seed_ivf_store,
     )
 
@@ -622,7 +636,64 @@ def test_ivf_full_export_crash_before_flip_keeps_old_version(
     assert _ivf_dir(out, "assigned") == "assigned_v1"
     served1, _c = read_ivf_serving(spark, out, all_cells)
     assert (5, ) not in {(i,) for i, _cell in want_v0}
-    assert 5 in {i for i, _cell in _cells(served1)}
+    want_v1 = _cells(served1)
+    assert 5 in {i for i, _cell in want_v1}
+
+    # a second generation inserts into an existing (+x) cell; the
+    # refresh crashes at its meta flip
+    _vecs(spark, [(6, [0.95, 0.05], 1)]).coalesce(1).write.mode(
+        "append"
+    ).parquet(src)
+    ivf_stream(
+        spark, src, "*.parquet", store, ckpt, op_col="op", compact_every=0
+    )
+    monkeypatch.setattr(sv, "write_serving_meta", crash)
+    with pytest.raises(RuntimeError, match="simulated crash"):
+        refresh_ivf_serving_layout(spark, store, out)
+    monkeypatch.setattr(sv, "write_serving_meta", real_write)
+
+    # the dirty cell was never rewritten in place: v1's answer serves
+    served_after_refresh_crash, _c = read_ivf_serving(spark, out, all_cells)
+    assert _cells(served_after_refresh_crash) == want_v1
+    res = refresh_ivf_serving_layout(spark, store, out)
+    assert res["mode"] == "incremental" and res["version"] == 2
+    assert 6 in {i for i, _cell in _cells(read_ivf_serving(
+        spark, out, all_cells
+    )[0])}
+
+
+def test_publish_gc_keeps_dirs_the_new_meta_references(tmp_path):
+    """`serving.publish` (no Spark): with keep_old_versions=0 the
+    post-flip GC removes every superseded directory the new meta does
+    not reference, but never one it still references, whatever its
+    tag — an IVF refresh keeps serving the export's `centroids`
+    directory."""
+    from patientdataintegration_spark.streaming.serving import (
+        publish,
+        read_serving_meta,
+        write_serving_meta,
+    )
+
+    out = str(tmp_path / "export")
+    for d in ("assigned_v1", "centroids_v1", "tombs_v1",
+              "assigned_v2", "tombs_v2"):
+        os.makedirs(os.path.join(out, d))
+    write_serving_meta(out, {"version": 1, "dirs": {
+        "assigned": "assigned_v1", "centroids": "centroids_v1",
+        "tombs": "tombs_v1",
+    }})
+    new = {"version": 2, "dirs": {
+        "assigned": "assigned_v2", "centroids": "centroids_v1",
+        "tombs": "tombs_v2",
+    }}
+    publish(out, new, keep_old_versions=0)
+    assert read_serving_meta(out) == new
+    # centroids_v1 is older than every retained tag but referenced
+    assert os.path.isdir(os.path.join(out, "centroids_v1"))
+    # the superseded, unreferenced v1 relations are gone
+    assert sorted(os.listdir(out)) == [
+        "assigned_v2", "centroids_v1", "serving_meta.json", "tombs_v2"
+    ]
 
 
 def test_ivf_export_retention_window(spark, tmp_path):
