@@ -138,20 +138,17 @@ def inverted_index(
 def _freeze_terms(terms: DataFrame) -> DataFrame:
     """Freeze a delta-sized distinct dirty-term relation for its
     multiple consumers (the caller's anti-probes + the repair semis):
-    bounded driver collect into a LOCAL relation when it fits
-    `spark.pdi.stream.driverMaxKeyRows` (guide §1.2 / r17 verdict
-    item 2 — same one job as the localCheckpoint it replaces, but
-    every broadcast probe becomes a LocalTableScan build and the
-    term list itself rides along as `_pdi_local_rows` for the
-    streaming caller's driver-side planning: net-dirty unions, the
-    commit-marker write, serving-bucket computation). Above the cap:
-    the relation comes back lazily pinned — already materialized by
-    the probe, one job either way — so a build-scale batch whose
-    vocabulary outgrows the cap keeps the r17 checkpoint shape
-    automatically."""
+    one job that pins the relation (`store.freeze_small`: a lazy
+    localCheckpoint materialized by a bounded probe collect) and,
+    when the terms fit `spark.pdi.stream.driverMaxKeyRows`, hands the
+    sorted term list along as `_pdi_local_rows` for the streaming
+    caller's driver-side planning (net-dirty unions, serving-bucket
+    computation). The relation itself stays the pinned distributed
+    one, never a LocalRelation: a LocalRelation's exact tiny stats
+    make corpus-sized subtrees derived through it broadcast."""
     from patientdataintegration_spark.streaming.store import freeze_small
 
-    df, vals = freeze_small(terms, "term string")
+    df, vals = freeze_small(terms)
     if vals is not None:
         df._pdi_local_rows = vals
     return df

@@ -26,8 +26,7 @@ layout, commit protocol, compaction and retention). Its relations:
                                      is a tombstone (node leaves the
                                      labeling — deleted or orphaned)
     delta_g{g}/tombs/                batch g's document takedowns
-                                     (kill sigs/pairs rows of gen<=g);
-                                     the commit marker
+                                     (kill sigs/pairs rows of gen<=g)
 
 Per-batch write volume is O(|Δ| + dirty clusters) — the same order
 as the batch's COMPUTE (`maintain_components_delta` /
@@ -71,14 +70,14 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from patientdataintegration_spark.streaming.store import (
-    base_path,
     compact,
     freeze_small,
-    latest_generation,
     parallel_actions,
+    read_base,
     read_deltas,
     read_rowstore,
     resolve,
+    run_stream,
     tombs_by_id,
     write_base,
     write_delta,
@@ -99,17 +98,12 @@ def read_store(
     "pairs", "labels") at `version` (default: latest) from its base
     snapshot + retained delta generations — the read path of the
     dedup store (module docstring). The base is streamed once under
-    broadcast probes; every other input is delta-sized. "tombs" is
-    the store's commit marker."""
+    broadcast probes; every other input is delta-sized."""
     if name == "sigs":
-        return read_rowstore(
-            spark, store_dir, "sigs", version, id_col, marker="tombs"
-        )
-    version, base, gens = resolve(store_dir, version, marker="tombs")
+        return read_rowstore(spark, store_dir, "sigs", version, id_col)
+    version, base, gens = resolve(store_dir, version)
     if name == "labels":
-        base_df = spark.read.schema(LABEL_SCHEMA).parquet(
-            base_path(store_dir, base, "labels")
-        )
+        base_df = read_base(spark, store_dir, base, "labels", LABEL_SCHEMA)
         deltas = read_deltas(spark, store_dir, "labels", gens)
         if deltas is None:
             return base_df
@@ -134,9 +128,7 @@ def read_store(
 
     if name == "pairs":
         tombs = tombs_by_id(spark, store_dir, gens, id_col)
-        base_df = spark.read.schema(PAIR_SCHEMA).parquet(
-            base_path(store_dir, base, "pairs")
-        )
+        base_df = read_base(spark, store_dir, base, "pairs", PAIR_SCHEMA)
         deltas = read_deltas(spark, store_dir, "edges", gens)
         if deltas is not None:
             deltas = deltas.select(
@@ -201,7 +193,7 @@ def compact_store(spark: SparkSession, store_dir: str) -> int:
     the same fold while ingest batches stay delta-sized
     (`compact_every=0` on the stream). Returns the folded
     generation."""
-    return compact(spark, store_dir, "tombs", _fold)
+    return compact(spark, store_dir, _fold)
 
 
 def components_stream(
@@ -257,20 +249,8 @@ def components_stream(
         retract_documents_delta,
     )
 
-    # fail fast (and descriptively) on an unseeded store rather than
-    # inside the first micro-batch
-    latest_generation(store_dir)
-
-    # the source files' own schema (they carry op_col in CRUD mode;
-    # the seeded signature store does not)
-    sig_schema = (
-        spark.read.option("pathGlobFilter", glob).parquet(source_dir).schema
-    )
-
-    def advance(batch: DataFrame, batch_id: int) -> None:
+    def advance(batch: DataFrame, v: int, g: int) -> None:
         s = batch.sparkSession
-        v = int(batch_id)
-        g = v + 1
         sigs_old = read_store(s, store_dir, "sigs", version=v, id_col=id_col)
         labels_old = read_store(s, store_dir, "labels", version=v, id_col=id_col)
         res: dict = {}
@@ -282,8 +262,7 @@ def components_stream(
                 res["del"] = freeze_small(
                     batch.filter(F.col(op_col) < 0)
                     .select(F.col(id_col))
-                    .distinct(),
-                    batch.select(id_col).schema,
+                    .distinct()
                 )
 
             acts.append(_deleted)
@@ -367,28 +346,14 @@ def components_stream(
             doc_tombs = sigs_delta.select(
                 F.col(id_col).cast("bigint").alias(id_col)
             ).filter(F.lit(False))
-        # one delta generation per batch, "tombs" (the commit marker)
-        # written last
         write_delta(
             s, store_dir, g,
             {"sigs": sigs_delta, "edges": delta_edges,
              "labels": label_delta, "tombs": doc_tombs},
-            "tombs", compact_every, _fold,
+            compact_every, _fold,
         )
 
-    stream = (
-        spark.readStream.schema(sig_schema)
-        .format("parquet")
-        .option("pathGlobFilter", glob)
-        .load(source_dir)
-    )
-    query = (
-        stream.writeStream.foreachBatch(advance)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
+    run_stream(spark, source_dir, glob, store_dir, checkpoint, advance)
     return read_store(spark, store_dir, "labels", id_col=id_col).select(
         F.col("node").cast("bigint").alias("node"),
         F.col("label").cast("bigint").alias("label"),

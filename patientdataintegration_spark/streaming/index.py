@@ -28,8 +28,7 @@ upsert. Under `store_dir`:
                                   positional postings (phrase
                                   serving)
     delta_g{g}/terms/             batch g's DIRTY TERM set — every
-                                  term whose state gen g rewrote;
-                                  the commit marker
+                                  term whose state gen g rewrote
     delta_g{g}/index/             those terms' repaired index rows
     delta_g{g}/overflow/          those terms' repaired overflow rows
     delta_g{g}/{tf,pos}/          those terms' repaired satellite
@@ -87,14 +86,15 @@ from patientdataintegration_spark.streaming.serving import (
     stage,
 )
 from patientdataintegration_spark.streaming.store import (
-    base_path,
+    base_relations,
     compact,
-    delta_path,
     freeze_small,
-    latest_generation,
     parallel_actions,
+    read_base,
+    read_deltas,
+    read_newest,
     resolve,
-    scan_gens,
+    run_stream,
     write_base,
     write_delta,
 )
@@ -151,13 +151,8 @@ def _store_features(store_dir: str) -> tuple[str, ...]:
     """Which serving satellites this store maintains — feature-
     detected from its newest base snapshot (the seed, or the last
     compaction, which folds every maintained relation)."""
-    bases, _deltas = scan_gens(store_dir)
-    if not bases:
-        return ()
-    return tuple(
-        n for n in _SATELLITES
-        if os.path.isdir(base_path(store_dir, bases[-1], n))
-    )
+    seeded = base_relations(store_dir)
+    return tuple(n for n in _SATELLITES if n in seeded)
 
 
 def _read_upserts(
@@ -170,17 +165,8 @@ def _read_upserts(
     """(touched terms with their latest touching generation, upsert
     rows stamped `_gen`) across the retained generations — the two
     delta-sized inputs of the last-writer-wins reconstruction."""
-    touched: DataFrame | None = None
-    rows: DataFrame | None = None
-    for g in gens:
-        t = spark.read.schema(_TERM_SCHEMA).parquet(
-            delta_path(store_dir, g, "terms")
-        ).withColumn("_gen", F.lit(g).cast("bigint"))
-        touched = t if touched is None else touched.unionByName(t)
-        r = spark.read.schema(schema).parquet(
-            delta_path(store_dir, g, name)
-        ).withColumn("_gen", F.lit(g).cast("bigint"))
-        rows = r if rows is None else rows.unionByName(r)
+    touched = read_deltas(spark, store_dir, "terms", gens, _TERM_SCHEMA)
+    rows = read_deltas(spark, store_dir, name, gens, schema)
     if touched is not None:
         touched = touched.groupBy("term").agg(F.max("_gen").alias("_lg"))
     return touched, rows
@@ -206,10 +192,8 @@ def read_index_store(
             f"unknown store relation {name!r} ({'/'.join(_SCHEMAS)})"
         )
     schema = _SCHEMAS[name]
-    version, base, gens = resolve(store_dir, version, marker="terms")
-    base_df = spark.read.schema(schema).parquet(
-        base_path(store_dir, base, name)
-    )
+    _version, base, gens = resolve(store_dir, version)
+    base_df = read_base(spark, store_dir, base, name, schema)
     touched, rows = _read_upserts(spark, store_dir, name, schema, gens)
     if touched is None:
         return base_df
@@ -236,19 +220,15 @@ def read_index_stats(
     is simply the newest stats at or below `version`: BM25's avgdl
     folds in at query time from these two exact counters (the Lucene
     treatment — nothing corpus-sized is read or aggregated)."""
-    version, base, gens = resolve(store_dir, version, marker="terms")
-    path = (
-        delta_path(store_dir, gens[-1], "stats")
-        if gens
-        else base_path(store_dir, base, "stats")
-    )
-    if not os.path.isdir(path):
+    stats = read_newest(spark, store_dir, "stats", STATS_SCHEMA, version)
+    if stats is None:
         raise ValueError(
             f"index store at {store_dir!r} has no scoring stats at version "
-            f"{version} — seed it with tf_init (seed_index_store) to "
-            "maintain the BM25 serving satellites"
+            f"{'latest' if version is None else version} — seed it with "
+            "tf_init (seed_index_store) to maintain the BM25 serving "
+            "satellites"
         )
-    return spark.read.schema(STATS_SCHEMA).parquet(path)
+    return stats
 
 
 def _fold(spark: SparkSession, store_dir: str, gen: int) -> dict:
@@ -330,7 +310,7 @@ def export_serving_layout(
     (e.g. growing the relation set with no new store generation)
     rewrites that version's directories under readers — run that
     shape as an offline job."""
-    version, _base, _gens = resolve(store_dir, version, marker="terms")
+    version, _base, _gens = resolve(store_dir, version)
     if os.path.isfile(os.path.join(out_dir, "serving_meta.json")):
         old_meta = read_serving_meta(out_dir)
         if old_meta["n_buckets"] != n_buckets:
@@ -382,7 +362,9 @@ def read_serving_stats(spark: SparkSession, out_dir: str) -> DataFrame:
     """The exported layout's 1-row scoring marginal, resolved through
     the meta so a reader always pairs the stats with the row
     directories of the meta version it planned against."""
-    return read_relation(spark, out_dir, "stats", STATS_SCHEMA)
+    return read_relation(
+        spark, out_dir, read_serving_meta(out_dir), "stats", STATS_SCHEMA
+    )
 
 
 def refresh_serving_layout(
@@ -475,7 +457,7 @@ def refresh_serving_layout(
             "reduced layout to a fresh directory"
         )
     v_new, mode, needed = refresh_range(
-        store_dir, out_dir, meta, version, "terms",
+        store_dir, out_dir, meta, version,
         lambda v: export_serving_layout(
             spark, store_dir, out_dir, relations, n_buckets, version=v,
             keep_old_versions=keep_old_versions,
@@ -503,14 +485,13 @@ def refresh_serving_layout(
             {term_bucket_py(t, n_buckets) for t in dirty_list}
         )
     else:
-        dirty = None
-        for g in needed:
-            t = spark.read.schema(_TERM_SCHEMA).parquet(
-                delta_path(store_dir, g, "terms")
-            )
-            dirty = t if dirty is None else dirty.unionByName(t)
         # consumers: the bucket collect + one anti-join per relation
-        dirty = dirty.distinct().localCheckpoint()
+        dirty = (
+            read_deltas(spark, store_dir, "terms", needed, _TERM_SCHEMA)
+            .select("term")
+            .distinct()
+            .localCheckpoint()
+        )
         buckets = sorted(
             r["tb"]
             for r in dirty.select(
@@ -527,9 +508,9 @@ def refresh_serving_layout(
             # latest touching generation, so last-writer-wins reduces
             # to reading the generation's rows — no per-relation
             # touched/rows bookkeeping join
-            fresh = spark.read.schema(_SCHEMAS[name]).parquet(
-                delta_path(store_dir, needed[0], name)
-            )
+            fresh = read_deltas(
+                spark, store_dir, name, needed, _SCHEMAS[name]
+            ).drop("_gen")
         else:
             touched, rows = _read_upserts(
                 spark, store_dir, name, _SCHEMAS[name], needed
@@ -540,7 +521,7 @@ def refresh_serving_layout(
                 .drop("_gen", "_lg")
             )
         kept = (
-            _read_served(spark, out_dir, name)
+            _read_served(spark, out_dir, meta, name)
             .filter(F.col("tb").isin(buckets))
             .drop("tb")
             .join(F.broadcast(dirty), "term", "left_anti")
@@ -587,13 +568,16 @@ def read_serving_relation(
     `collect_pruning_terms` guard's escape hatch): read the whole
     relation and let the downstream semi-probe do the cutting —
     correct, just not pruned, and the right plan anyway once a query
-    batch's vocabulary stops being "point read"-sized."""
+    batch's vocabulary stops being "point read"-sized. The bucket
+    count and the relation directory come from one read of the meta."""
+    meta = read_serving_meta(out_dir)
+    served = _read_served(spark, out_dir, meta, name)
     if terms is None:
-        return _read_served(spark, out_dir, name).drop("tb")
-    n_buckets = int(read_serving_meta(out_dir)["n_buckets"])
+        return served.drop("tb")
+    n_buckets = int(meta["n_buckets"])
     buckets = sorted({term_bucket_py(t, n_buckets) for t in terms})
     return (
-        _read_served(spark, out_dir, name)
+        served
         .filter(F.col("tb").isin(buckets))
         .filter(F.col("term").isin(list(terms)))
         .drop("tb")
@@ -626,8 +610,12 @@ def collect_pruning_terms(
     return sorted(r["term"] for r in capped)
 
 
-def _read_served(spark: SparkSession, out_dir: str, name: str) -> DataFrame:
-    return read_relation(spark, out_dir, name, f"{_SCHEMAS[name]}, tb int")
+def _read_served(
+    spark: SparkSession, out_dir: str, meta: dict, name: str
+) -> DataFrame:
+    return read_relation(
+        spark, out_dir, meta, name, f"{_SCHEMAS[name]}, tb int"
+    )
 
 
 def compact_index_store(spark: SparkSession, store_dir: str) -> int:
@@ -635,7 +623,7 @@ def compact_index_store(spark: SparkSession, store_dir: str) -> int:
     (`store.compact`): fold at the latest committed generation outside
     the ingest hot path (run the stream with `compact_every=0`).
     Returns the folded generation."""
-    return compact(spark, store_dir, "terms", _fold)
+    return compact(spark, store_dir, _fold)
 
 
 def index_stream(
@@ -700,21 +688,12 @@ def index_stream(
         positional_postings,
     )
 
-    # fail fast (and descriptively) on an unseeded store rather than
-    # inside the first micro-batch
-    latest_generation(store_dir)
     # which serving satellites this store maintains (seeded relations
     # beyond the core pair) — fixed at seed time, detected once
     feats = _store_features(store_dir)
 
-    doc_schema = (
-        spark.read.option("pathGlobFilter", glob).parquet(source_dir).schema
-    )
-
-    def advance(batch: DataFrame, batch_id: int) -> None:
+    def advance(batch: DataFrame, v: int, g: int) -> None:
         s = batch.sparkSession
-        v = int(batch_id)
-        g = v + 1
         index_old = read_index_store(s, store_dir, "index", version=v)
         overflow_old = read_index_store(s, store_dir, "overflow", version=v)
         if op_col is not None:
@@ -722,8 +701,7 @@ def index_stream(
             # job, and the emptiness test below is free
             deleted, _del_ids = freeze_small(
                 batch.filter(F.col(op_col) < 0).select(F.col(id_col))
-                .distinct(),
-                batch.select(id_col).schema,
+                .distinct()
             )
             if _del_ids is not None and not _del_ids:
                 deleted = None
@@ -893,8 +871,6 @@ def index_stream(
                 pos_rows = pos_rows.join(dele_docs, "doc", "left_anti")
             sat_rows["pos"] = pos_rows.select("term", "doc", "pos")
 
-        # one upsert generation per batch, "terms" (the commit marker)
-        # written last
         rels = {
             "index": index_rows.select("term", "doc_freq", "postings"),
             "overflow": overflow_rows.select("term", "doc"),
@@ -903,7 +879,7 @@ def index_stream(
         if stats_new is not None:
             rels["stats"] = stats_new
         rels["terms"] = dirty.select("term")
-        write_delta(s, store_dir, g, rels, "terms", compact_every, _fold)
+        write_delta(s, store_dir, g, rels, compact_every, _fold)
         if serving_out is not None:
             # the batch's own dirty terms (when collected locally)
             # let the inline refresh plan its buckets driver-side —
@@ -913,19 +889,8 @@ def index_stream(
                 dirty_terms=dirty_local, dirty_terms_version=g,
             )
 
-    reader = (
-        spark.readStream.schema(doc_schema)
-        .format("parquet")
-        .option("pathGlobFilter", glob)
+    run_stream(
+        spark, source_dir, glob, store_dir, checkpoint, advance,
+        max_files_per_trigger,
     )
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", int(max_files_per_trigger))
-    stream = reader.load(source_dir)
-    query = (
-        stream.writeStream.foreachBatch(advance)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
     return read_index_store(spark, store_dir, "index")

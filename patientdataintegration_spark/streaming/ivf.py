@@ -23,7 +23,7 @@ id — no term-grain upserts (the index store) and no label algebra
                                   (G=0) and periodic compactions
     delta_g{g}/assigned/          batch g's newly-assigned rows
     delta_g{g}/tombs/             batch g's vector takedowns (even
-                                  when empty); the commit marker
+                                  when empty)
 
 The per-batch cost is the striking part: because centroids are frozen
 and assignment is a pure per-row argmin, the insert path never reads
@@ -56,13 +56,13 @@ from patientdataintegration_spark.streaming.serving import (
 )
 from patientdataintegration_spark.streaming.store import (
     compact,
-    delta_path,
-    latest_generation,
     live_rows,
     overwrite,
     parallel_actions,
+    read_deltas,
     read_rowstore,
     resolve,
+    run_stream,
     tombs_by_id,
     write_base,
     write_delta,
@@ -107,8 +107,7 @@ def read_ivf_centroids(spark: SparkSession, store_dir: str) -> DataFrame:
 def _fold(spark: SparkSession, store_dir: str, gen: int) -> dict:
     # the centroid table lives outside the generations, untouched
     return {"assigned": read_rowstore(
-        spark, store_dir, "assigned", version=gen, id_col="neighbor_id",
-        marker="tombs",
+        spark, store_dir, "assigned", version=gen, id_col="neighbor_id"
     )}
 
 
@@ -116,7 +115,7 @@ def compact_ivf_store(spark: SparkSession, store_dir: str) -> int:
     """Compaction as a SCHEDULED MAINTENANCE JOB for the IVF store
     (`store.compact`): fold at the latest committed generation outside
     the ingest hot path. Returns the folded generation."""
-    return compact(spark, store_dir, "tombs", _fold)
+    return compact(spark, store_dir, _fold)
 
 
 def export_ivf_serving_layout(
@@ -151,11 +150,10 @@ def export_ivf_serving_layout(
     Iceberg/Hudi delete-file pattern, so a refresh never has to FIND
     a tombstoned id's cell partition. Returns the exported
     version."""
-    version, _base, _gens = resolve(store_dir, version, marker="tombs")
+    version, _base, _gens = resolve(store_dir, version)
     meta = {"version": version, "dirs": {}}
     assigned = read_rowstore(
-        spark, store_dir, "assigned", version=version,
-        id_col="neighbor_id", marker="tombs",
+        spark, store_dir, "assigned", version=version, id_col="neighbor_id"
     ).withColumn("_gen", F.lit(int(version)).cast("int"))
     parallel_actions([
         stage(out_dir, meta, "assigned", assigned, "cell"),
@@ -209,7 +207,7 @@ def refresh_ivf_serving_layout(
     "noop"|"incremental"|"full", "dirty_cells"}."""
     meta = read_serving_meta(out_dir)
     v_new, mode, needed = refresh_range(
-        store_dir, out_dir, meta, version, "tombs",
+        store_dir, out_dir, meta, version,
         lambda v: export_ivf_serving_layout(
             spark, store_dir, out_dir, version=v,
             keep_old_versions=keep_old_versions,
@@ -219,12 +217,10 @@ def refresh_ivf_serving_layout(
         return {"version": v_new, "mode": mode,
                 "dirty_cells": [] if mode == "noop" else None}
 
-    inserts: DataFrame | None = None
-    for g in needed:
-        d = spark.read.schema(ASSIGNED_SCHEMA).parquet(
-            delta_path(store_dir, g, "assigned")
-        ).withColumn("_gen", F.lit(int(g)).cast("int"))
-        inserts = d if inserts is None else inserts.unionByName(d)
+    # the served `_gen` is an int
+    inserts = read_deltas(
+        spark, store_dir, "assigned", needed, ASSIGNED_SCHEMA
+    ).withColumn("_gen", F.col("_gen").cast("int"))
     new_tombs = tombs_by_id(spark, store_dir, needed, "neighbor_id")
     # consumers: the cell collect, the replay anti-join, the union
     live = live_rows(inserts, new_tombs, "neighbor_id").localCheckpoint()
@@ -232,7 +228,7 @@ def refresh_ivf_serving_layout(
         r["cell"] for r in live.select("cell").distinct().collect()
     )
     merged = (
-        read_relation(spark, out_dir, "tombs", TOMB_SCHEMA)
+        read_relation(spark, out_dir, meta, "tombs", TOMB_SCHEMA)
         .unionByName(new_tombs)
         .groupBy("neighbor_id")
         .agg(F.max("_tg").alias("_tg"))
@@ -248,7 +244,7 @@ def refresh_ivf_serving_layout(
         # pass (unlike the index twin): a cell is dirty only because a
         # live insert lands in it
         kept = live_rows(
-            read_relation(spark, out_dir, "assigned", SERVED_SCHEMA)
+            read_relation(spark, out_dir, meta, "assigned", SERVED_SCHEMA)
             .filter(F.col("cell").isin(dirty)),
             new_tombs, "neighbor_id",
         ).join(
@@ -308,18 +304,20 @@ def read_ivf_serving(
     rows anti-apply the delta-sized tombstone side relation with the
     store's liveness rule (`_tg < _gen` keeps re-inserts above their
     tombstone), so a refreshed layout serves takedowns without ever
-    having rewritten their cells."""
+    having rewritten their cells. All three relations resolve through
+    one read of the meta."""
+    meta = read_serving_meta(out_dir)
     assigned = live_rows(
-        read_relation(spark, out_dir, "assigned", SERVED_SCHEMA)
+        read_relation(spark, out_dir, meta, "assigned", SERVED_SCHEMA)
         .filter(F.col("cell").isin(list(cells))),
-        read_relation(spark, out_dir, "tombs", TOMB_SCHEMA),
+        read_relation(spark, out_dir, meta, "tombs", TOMB_SCHEMA),
         "neighbor_id",
     ).drop("_gen")
     # provably ≤ n_cells rows BEFORE the search's broadcast crossJoin
     # (`bm25_from_store`'s 1-row-stats adjudication): a corrupted
     # export with duplicate cell rows can never fan the rank join out
     centroids = (
-        read_ivf_serving_centroids(spark, out_dir)
+        read_relation(spark, out_dir, meta, "centroids", CENTROID_SCHEMA)
         .groupBy("cell")
         .agg(F.min("centroid").alias("centroid"))
     )
@@ -332,7 +330,10 @@ def read_ivf_serving_centroids(
     """The exported layout's (tiny) centroid table — the driver-side
     probe planner's input — resolved through the meta so planners
     and the pruned read pair with one committed export version."""
-    return read_relation(spark, out_dir, "centroids", CENTROID_SCHEMA)
+    return read_relation(
+        spark, out_dir, read_serving_meta(out_dir), "centroids",
+        CENTROID_SCHEMA,
+    )
 
 
 def ivf_stream(
@@ -375,15 +376,8 @@ def ivf_stream(
     GC (`store.write_delta`)."""
     from patientdataintegration_spark.operators.similarity import ivf_assign
 
-    latest_generation(store_dir)  # fail fast on an unseeded store
-
-    vec_schema = (
-        spark.read.option("pathGlobFilter", glob).parquet(source_dir).schema
-    )
-
-    def advance(batch: DataFrame, batch_id: int) -> None:
+    def advance(batch: DataFrame, _v: int, g: int) -> None:
         s = batch.sparkSession
-        g = int(batch_id) + 1
         if op_col is not None:
             # the takedown set stays LAZY here (measured r18): unlike
             # the index/components streams it had no checkpoint or
@@ -406,24 +400,10 @@ def ivf_stream(
         assigned_delta = ivf_assign(ingest, cent, id_col, vec_col)
         write_delta(
             s, store_dir, g, {"assigned": assigned_delta, "tombs": deleted},
-            "tombs", compact_every, _fold,
+            compact_every, _fold,
         )
         if serving_out is not None:
             refresh_ivf_serving_layout(s, store_dir, serving_out)
 
-    stream = (
-        spark.readStream.schema(vec_schema)
-        .format("parquet")
-        .option("pathGlobFilter", glob)
-        .load(source_dir)
-    )
-    query = (
-        stream.writeStream.foreachBatch(advance)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
-    return read_rowstore(
-        spark, store_dir, "assigned", id_col="neighbor_id", marker="tombs"
-    )
+    run_stream(spark, source_dir, glob, store_dir, checkpoint, advance)
+    return read_rowstore(spark, store_dir, "assigned", id_col="neighbor_id")

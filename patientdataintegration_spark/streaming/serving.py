@@ -13,7 +13,8 @@ term-grain relations and its `stats` marginal; the IVF's `assigned`,
 `centroids` and `tombs`), with W <= V: a refresh restages what it
 changes and keeps referencing the rest. Layout-specific keys ride
 beside it (the index's `n_buckets` and `relations`). Readers resolve
-a relation only through `dirs` (`read_relation`).
+a relation only through `dirs` (`read_relation`), and resolve the
+meta once per read.
 
 An export or refresh `stage`s its relations to `{name}_v{V}`
 directories the live meta does not reference, then `publish`es: flip
@@ -61,15 +62,18 @@ def write_serving_meta(out_dir: str, meta: dict) -> None:
 
 
 def read_relation(
-    spark: SparkSession, out_dir: str, name: str, schema: str
+    spark: SparkSession, out_dir: str, meta: dict, name: str, schema: str
 ) -> DataFrame:
-    """Relation `name` of the layout's live meta, read with its schema
+    """Relation `name` of the layout at `out_dir` as `meta` names it.
+    A reader resolves the meta ONCE and reads every relation it pairs
+    (rows with their tombstones or stats) through that one meta, so a
+    concurrent flip can never hand it two versions. The schema is
     stated explicitly (partition column included): an export whose
     partitions all emptied leaves no part files, and schema inference
     would fail on the bare directory where an empty frame is the
     correct answer."""
     return spark.read.schema(schema).parquet(
-        os.path.join(out_dir, read_serving_meta(out_dir)["dirs"][name])
+        os.path.join(out_dir, meta["dirs"][name])
     )
 
 
@@ -78,7 +82,6 @@ def refresh_range(
     out_dir: str,
     meta: dict,
     version: int | None,
-    marker: str,
     full_export,
 ) -> tuple[int, str, list[int]]:
     """The version-range rule of an incremental refresh from the
@@ -89,7 +92,7 @@ def refresh_range(
     it needs was folded and GC'd — the diff is then unknowable.
     Otherwise the mode is "incremental"."""
     v_exp = int(meta["version"])
-    v_new = resolve(store_dir, version, marker)[0]
+    v_new = resolve(store_dir, version)[0]
     if v_new < v_exp:
         raise ValueError(
             f"serving layout at {out_dir!r} is at version {v_exp}, ahead of "
@@ -99,7 +102,7 @@ def refresh_range(
     needed = list(range(v_exp + 1, v_new + 1))
     if not needed:
         return v_new, "noop", needed
-    if not set(needed) <= set(scan_gens(store_dir, marker)[1]):
+    if not set(needed) <= set(scan_gens(store_dir)[1]):
         full_export(v_new)
         return v_new, "full", needed
     return v_new, "incremental", needed

@@ -1,9 +1,11 @@
 """The delta-generation store under the three maintained streams
 (dedup `components.py`, inverted index `index.py`, IVF `ivf.py`): its
-on-disk layout, its commit protocol, the row-grain read rule,
-compaction and retention. This module is the only home of those
-rules; each stream supplies its relations, its marker name and its
-fold, and never writes a sentinel or removes a generation itself.
+on-disk layout, its commit protocol, the mapping of a stream's
+micro-batches to generations, the row-grain read rule, compaction and
+retention. This module is the only home of those rules; each stream
+supplies its relations, its per-batch step and its fold, and never
+names a generation directory, writes a sentinel or removes a
+generation itself.
 
 Layout under `store_dir`:
 
@@ -11,30 +13,24 @@ Layout under `store_dir`:
                              compaction
     delta_g{g}/{relation}/   generation g's delta relations; batch
                              `batch_id` writes g = batch_id + 1
+                             (`run_stream`)
 
-Commit protocol — a crash at any point leaves the previous state
-serving:
-
-- a base is committed by the `_COMMITTED` sentinel, written after its
-  last relation (`write_base`); a crash between a base's relation
-  writes leaves an invisible remnant, never a torn newest base;
-- a delta is committed by its MARKER relation, the one the writer
-  persists last ("tombs" for dedup and IVF, "terms" for the index),
-  and by the `_COMMITTED` sentinel stamped after it (`write_delta`).
-  Reads accept the marker's `_SUCCESS` or the sentinel: `_SUCCESS` is
-  a committer courtesy that deployments disable
-  (`mapreduce.fileoutputcommitter.marksuccessfuljobs=false`), and
-  relying on it alone would hide every committed generation there.
-  Spark creates the marker's directory before its job commits, so a
-  bare directory check would trust a crashed marker write.
-  A rewrite clears both first (`uncommit_delta`), so a checkpoint
-  replay never pairs old commit evidence with half-rewritten
-  relations.
+Commit protocol — ONE rule for bases and deltas alike: a generation is
+committed iff its `_COMMITTED` sentinel exists. The writer stamps it
+strictly after every relation write of the generation returned
+(`write_base`, `write_delta`), so a crash at any point leaves an
+invisible remnant and the previous state serving. Nothing else is
+commit evidence: not a relation's directory (Spark creates it before
+its job commits) and not the committer's success-marker file
+(deployments disable it). A delta rewrite removes the sentinel first
+(`uncommit_delta`), so a checkpoint replay never pairs old commit
+evidence with half-rewritten relations.
 
 Uncommitted generations are invisible to every read. A replayed batch
 re-reads state at `batch_id` (its own generation and any snapshot it
 wrote lie above that version) and overwrites its own generation
-idempotently.
+idempotently; a batch that wrote every relation but crashed before
+the stamp never returned, so its replay commits it.
 
 Retention (`gc_generations`): keep the newest TWO committed bases (a
 replayed in-flight batch reads state gen-1, which needs the previous
@@ -55,9 +51,8 @@ from concurrent.futures import ThreadPoolExecutor
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-_BASE_RE = re.compile(r"^base_g(\d+)$")
-_DELTA_RE = re.compile(r"^delta_g(\d+)$")
-_BASE_SENTINEL = "_COMMITTED"
+_GEN_RE = re.compile(r"^(base|delta)_g(\d+)$")
+_SENTINEL = "_COMMITTED"
 
 
 def parallel_actions(fns: list) -> list:
@@ -68,7 +63,7 @@ def parallel_actions(fns: list) -> list:
     submitted together, each job's tail back-fills the executors the
     previous one frees. Strictly for actions with no ordering
     constraint between them: an exception propagates before the
-    caller writes its commit marker, so crash semantics are
+    caller stamps its commit sentinel, so crash semantics are
     unchanged."""
     if len(fns) == 1:
         return [fns[0]()]
@@ -104,15 +99,14 @@ _DRIVER_ROWS_CONF = "spark.pdi.stream.driverMaxKeyRows"
 _DRIVER_ROWS_DEFAULT = 4_000
 
 
-def freeze_small(df: DataFrame, schema: str):
+def freeze_small(df: DataFrame):
     """(pinned DataFrame, collected values | None): pin `df` (must be
     a DISTINCT single-column delta-sized relation) with ONE
     materialization job, and return its sorted value list alongside
     when it fits `spark.pdi.stream.driverMaxKeyRows` (default 4k) —
     None above the cap. The DataFrame is the pinned distributed
     relation in both cases (see the cap note above for why the values
-    never become a LocalRelation plan input); `schema` is kept for
-    the callers that construct hint relations from the values."""
+    never become a LocalRelation plan input)."""
     spark = df.sparkSession
     try:
         cap = int(
@@ -144,40 +138,31 @@ def delta_path(store_dir: str, gen: int, name: str) -> str:
     return os.path.join(store_dir, f"delta_g{gen}", name)
 
 
+def _stamp(path: str) -> None:
+    # a local file create; on an object store one zero-byte put
+    with open(path, "w"):
+        pass
+
+
 def commit_base(store_dir: str, gen: int) -> None:
     """Mark base_g{gen} COMMITTED — call strictly after the
-    snapshot's last relation write returned. Local file create here;
-    on an object store this is one zero-byte put."""
-    with open(os.path.join(store_dir, f"base_g{gen}", _BASE_SENTINEL), "w"):
-        pass
-
-
-def uncommit_delta(store_dir: str, gen: int, marker: str | None = None) -> None:
-    """Remove delta_g{gen}'s commit evidence — BOTH the sentinel and
-    the `marker` relation's `_SUCCESS` — before the generation's first
-    relation write. The marker is written last, so a replay rewrite
-    of a committed generation would otherwise leave the prior
-    attempt's `{marker}/_SUCCESS` advertising commit while the earlier
-    relations are mid-overwrite."""
-    try:
-        os.remove(os.path.join(store_dir, f"delta_g{gen}", _BASE_SENTINEL))
-    except FileNotFoundError:
-        pass
-    if marker is not None:
-        try:
-            os.remove(
-                os.path.join(store_dir, f"delta_g{gen}", marker, "_SUCCESS")
-            )
-        except FileNotFoundError:
-            pass
+    snapshot's last relation write returned."""
+    _stamp(base_path(store_dir, gen, _SENTINEL))
 
 
 def commit_delta(store_dir: str, gen: int) -> None:
-    """Mark delta_g{gen} COMMITTED with the engine-owned sentinel —
-    call strictly after the generation's marker relation write
-    returned (see the module docstring for why `_SUCCESS` alone is
-    not enough). One zero-byte put on an object store."""
-    with open(os.path.join(store_dir, f"delta_g{gen}", _BASE_SENTINEL), "w"):
+    """Mark delta_g{gen} COMMITTED — call strictly after the
+    generation's last relation write returned."""
+    _stamp(delta_path(store_dir, gen, _SENTINEL))
+
+
+def uncommit_delta(store_dir: str, gen: int) -> None:
+    """Remove delta_g{gen}'s sentinel before the generation's first
+    relation write, so a replay rewrite of a committed generation is
+    invisible while its relations are mid-overwrite."""
+    try:
+        os.remove(delta_path(store_dir, gen, _SENTINEL))
+    except FileNotFoundError:
         pass
 
 
@@ -193,78 +178,54 @@ def migrate_store_markers(
     remnant from a committed generation — that is exactly the
     information the sentinel adds). Returns the stamped entries.
 
-    Deltas are stamped too: with success markers disabled, a
-    pre-upgrade delta has neither `_SUCCESS` nor `_COMMITTED` and
-    would otherwise stay invisible forever. Pass the writer's
-    `marker` relation name to gate each delta's stamp on that
+    Deltas are stamped too: a pre-sentinel delta has no `_COMMITTED`
+    and would otherwise stay invisible forever — including one whose
+    only commit evidence is its marker relation's success-marker
+    file, which earlier releases accepted and reads no longer do.
+    Pass the writer's `marker` relation name ("tombs" for dedup and IVF,
+    "terms" for the index) to gate each delta's stamp on that
     relation's directory existing (the strongest commit evidence a
-    cleanly-shut-down pre-sentinel store can offer — the marker
-    relation is written last); with `marker=None` every delta_g*
-    entry is stamped."""
+    cleanly-shut-down pre-sentinel store can offer — those releases
+    wrote the marker relation last); with `marker=None` every
+    delta_g* entry is stamped."""
     stamped: list[str] = []
     for entry in sorted(os.listdir(store_dir)):
-        is_base = bool(_BASE_RE.match(entry))
-        is_delta = bool(_DELTA_RE.match(entry))
-        if not (is_base or is_delta):
+        m = _GEN_RE.match(entry)
+        if not m:
             continue
-        if is_delta and marker is not None and not os.path.isdir(
+        if m.group(1) == "delta" and marker is not None and not os.path.isdir(
             os.path.join(store_dir, entry, marker)
         ):
             continue  # no marker relation: not commit-evidenced
-        path = os.path.join(store_dir, entry, _BASE_SENTINEL)
+        path = os.path.join(store_dir, entry, _SENTINEL)
         if not os.path.isfile(path):
-            with open(path, "w"):
-                pass
+            _stamp(path)
             stamped.append(entry)
     return stamped
 
 
-def scan_gens(
-    store_dir: str, marker: str | None = None
-) -> tuple[list[int], list[int]]:
-    """(sorted base generations, sorted delta generations) COMMITTED.
-    `marker` names the delta relation the writer persists last; a
-    delta counts when that relation's `_SUCCESS` or the `_COMMITTED`
-    sentinel is present. With `marker=None` every delta directory
-    counts (the retention and disk audits need the raw set)."""
-    bases: list[int] = []
-    deltas: list[int] = []
+def scan_gens(store_dir: str) -> tuple[list[int], list[int]]:
+    """(sorted base generations, sorted delta generations), the
+    COMMITTED ones only: those carrying the sentinel."""
+    found: dict[str, list[int]] = {"base": [], "delta": []}
     try:
         entries = os.listdir(store_dir)
     except OSError:
-        return bases, deltas
+        return [], []
     for entry in entries:
-        m = _BASE_RE.match(entry)
-        if m:
-            if not os.path.isfile(
-                os.path.join(store_dir, entry, _BASE_SENTINEL)
-            ):
-                continue  # crash-remnant partial base: invisible
-            bases.append(int(m.group(1)))
-            continue
-        m = _DELTA_RE.match(entry)
-        if m:
-            g = int(m.group(1))
-            if marker is not None and not (
-                os.path.isfile(
-                    os.path.join(store_dir, entry, marker, "_SUCCESS")
-                )
-                or os.path.isfile(
-                    os.path.join(store_dir, entry, _BASE_SENTINEL)
-                )
-            ):
-                continue  # uncommitted (partial) generation: invisible
-            deltas.append(g)
-    return sorted(bases), sorted(deltas)
+        m = _GEN_RE.match(entry)
+        if m and os.path.isfile(os.path.join(store_dir, entry, _SENTINEL)):
+            found[m.group(1)].append(int(m.group(2)))
+    return sorted(found["base"]), sorted(found["delta"])
 
 
 def resolve(
-    store_dir: str, version: int | None, marker: str | None = None
+    store_dir: str, version: int | None
 ) -> tuple[int, int, list[int]]:
     """(version, base gen <= version, COMMITTED delta gens in
     (base, version]); `version=None` means the latest committed one.
     Raises a descriptive error on an unseeded or GC'd-away read."""
-    bases, deltas = scan_gens(store_dir, marker)
+    bases, deltas = scan_gens(store_dir)
     if not bases:
         raise ValueError(
             f"delta-generation store at {store_dir!r} was never seeded: no "
@@ -283,25 +244,77 @@ def resolve(
     return version, base, [g for g in deltas if base < g <= version]
 
 
-def latest_generation(store_dir: str, marker: str | None = None) -> int:
-    """The store's current version: the highest base or COMMITTED
-    delta generation present (0 = freshly seeded). Raises on an
-    unseeded store."""
-    return resolve(store_dir, None, marker)[0]
+def latest_generation(store_dir: str) -> int:
+    """The store's current version: the highest COMMITTED generation
+    (0 = freshly seeded). Raises on an unseeded store."""
+    return resolve(store_dir, None)[0]
+
+
+def base_relations(store_dir: str) -> set[str]:
+    """The relations of the newest committed base (empty on an
+    unseeded store): what the store was seeded with, for a stream
+    whose relation set is a seed-time choice."""
+    bases = scan_gens(store_dir)[0]
+    if not bases:
+        return set()
+    d = os.path.join(store_dir, f"base_g{bases[-1]}")
+    return {e for e in os.listdir(d) if os.path.isdir(os.path.join(d, e))}
+
+
+def _reader(spark: SparkSession, schema: str | None):
+    # an explicit schema reads without a schema-inference job
+    return spark.read if schema is None else spark.read.schema(schema)
+
+
+def read_base(
+    spark: SparkSession,
+    store_dir: str,
+    gen: int,
+    name: str,
+    schema: str | None = None,
+) -> DataFrame:
+    """Relation `name` of base_g{gen} (`resolve`'s base)."""
+    return _reader(spark, schema).parquet(base_path(store_dir, gen, name))
 
 
 def read_deltas(
-    spark: SparkSession, store_dir: str, name: str, gens: list[int]
+    spark: SparkSession,
+    store_dir: str,
+    name: str,
+    gens: list[int],
+    schema: str | None = None,
 ) -> DataFrame | None:
     """Union of a delta relation across generations, each row stamped
     with its generation (`_gen`). Delta-sized by design."""
     out: DataFrame | None = None
     for g in gens:
-        df = spark.read.parquet(delta_path(store_dir, g, name)).withColumn(
-            "_gen", F.lit(g).cast("bigint")
-        )
+        df = _reader(spark, schema).parquet(
+            delta_path(store_dir, g, name)
+        ).withColumn("_gen", F.lit(g).cast("bigint"))
         out = df if out is None else out.unionByName(df)
     return out
+
+
+def read_newest(
+    spark: SparkSession,
+    store_dir: str,
+    name: str,
+    schema: str,
+    version: int | None = None,
+) -> DataFrame | None:
+    """Relation `name` as the newest committed generation at or below
+    `version` wrote it (the last delta in range, else the base) — the
+    read of a relation every generation rewrites whole. None when that
+    generation carries no such relation."""
+    _version, base, gens = resolve(store_dir, version)
+    path = (
+        delta_path(store_dir, gens[-1], name)
+        if gens
+        else base_path(store_dir, base, name)
+    )
+    if not os.path.isdir(path):
+        return None
+    return spark.read.schema(schema).parquet(path)
 
 
 def tombs_by_id(
@@ -337,7 +350,6 @@ def read_rowstore(
     name: str,
     version: int | None = None,
     id_col: str = "doc_id",
-    marker: str | None = None,
 ) -> DataFrame:
     """Reconstruct an id-keyed row relation at `version` — the
     ROW-GRAIN rule: base rows minus tombstoned ids, plus delta rows
@@ -345,11 +357,10 @@ def read_rowstore(
     insert+tombstone dies (tomb gen == row gen kills) and a later
     re-insert lives. The base streams once behind broadcast probes;
     every other input is delta-sized. Serves the dedup signatures and
-    the IVF inverted file. `marker` is the writer's commit-marker
-    relation (see `scan_gens`)."""
-    version, base, gens = resolve(store_dir, version, marker)
+    the IVF inverted file."""
+    version, base, gens = resolve(store_dir, version)
     tombs = tombs_by_id(spark, store_dir, gens, id_col)
-    base_df = spark.read.parquet(base_path(store_dir, base, name))
+    base_df = read_base(spark, store_dir, base, name)
     deltas = read_deltas(spark, store_dir, name, gens)
     if tombs is not None:
         base_df = base_df.join(
@@ -381,20 +392,17 @@ def write_delta(
     store_dir: str,
     gen: int,
     relations: dict,
-    marker: str,
     compact_every: int,
     fold,
 ) -> None:
-    """Commit generation `gen`: clear its commit evidence, write every
-    relation but `relations[marker]` concurrently, write the marker
-    LAST, stamp the sentinel, then — every `compact_every`
-    generations — fold a new base (see `compact`)."""
-    uncommit_delta(store_dir, gen, marker)
+    """Commit generation `gen`: clear its sentinel, write every
+    relation concurrently, stamp the sentinel, then — every
+    `compact_every` generations — fold a new base (see `compact`)."""
+    uncommit_delta(store_dir, gen)
     parallel_actions([
         overwrite(df, delta_path(store_dir, gen, n))
-        for n, df in relations.items() if n != marker
+        for n, df in relations.items()
     ])
-    overwrite(relations[marker], delta_path(store_dir, gen, marker))()
     commit_delta(store_dir, gen)
     if compact_every and gen % compact_every == 0:
         _fold(spark, store_dir, gen, fold)
@@ -409,7 +417,7 @@ def _fold(spark: SparkSession, store_dir: str, gen: int, fold) -> None:
     gc_generations(store_dir)
 
 
-def compact(spark: SparkSession, store_dir: str, marker: str, fold) -> int:
+def compact(spark: SparkSession, store_dir: str, fold) -> int:
     """Compaction as a SCHEDULED MAINTENANCE JOB: fold the retained
     deltas into a new base at the latest committed generation v,
     OUTSIDE the ingest hot path (run the stream with
@@ -421,10 +429,56 @@ def compact(spark: SparkSession, store_dir: str, marker: str, fold) -> int:
     previous base for a replay of v itself. A no-op when v already
     has a base — folding a base onto itself would truncate the files
     the fold reads. Returns v."""
-    gen = latest_generation(store_dir, marker)
+    gen = latest_generation(store_dir)
     if gen not in scan_gens(store_dir)[0]:
         _fold(spark, store_dir, gen, fold)
     return gen
+
+
+def run_stream(
+    spark: SparkSession,
+    source_dir: str,
+    glob: str,
+    store_dir: str,
+    checkpoint: str,
+    advance,
+    max_files_per_trigger: int | None = None,
+) -> None:
+    """Drain the `glob` parquet files under `source_dir` into the
+    store as one `availableNow` run of exactly-once micro-batches
+    (checkpointed at `checkpoint`), and return when the backlog is
+    processed. Each batch calls `advance(batch, v, g)`: it reads state
+    at version v = batch_id and writes generation g = v + 1, so a
+    replayed batch re-reads the state its first attempt read and
+    overwrites its own generation. Fails fast on an unseeded store
+    rather than inside the first batch. `max_files_per_trigger` is
+    the file source's rate limit (`maxFilesPerTrigger`): the backlog
+    then drains as several consecutive batches in one run."""
+    latest_generation(store_dir)
+    # the source files' own schema (CRUD sources carry an op column
+    # the seeded store does not)
+    schema = (
+        spark.read.option("pathGlobFilter", glob).parquet(source_dir).schema
+    )
+    reader = (
+        spark.readStream.schema(schema)
+        .format("parquet")
+        .option("pathGlobFilter", glob)
+    )
+    if max_files_per_trigger is not None:
+        reader = reader.option("maxFilesPerTrigger", int(max_files_per_trigger))
+
+    def each(batch: DataFrame, batch_id: int) -> None:
+        advance(batch, int(batch_id), int(batch_id) + 1)
+
+    (
+        reader.load(source_dir)
+        .writeStream.foreachBatch(each)
+        .option("checkpointLocation", checkpoint)
+        .trigger(availableNow=True)
+        .start()
+        .awaitTermination()
+    )
 
 
 def gc_generations(store_dir: str) -> None:
@@ -440,12 +494,11 @@ def gc_generations(store_dir: str) -> None:
     except OSError:
         return
     for entry in entries:
-        m = _BASE_RE.match(entry)
-        if m and int(m.group(1)) < keep_from:
-            shutil.rmtree(os.path.join(store_dir, entry), ignore_errors=True)
+        m = _GEN_RE.match(entry)
+        if not m:
             continue
-        m = _DELTA_RE.match(entry)
-        if m and int(m.group(1)) <= keep_from:
+        g = int(m.group(2))
+        if g < keep_from or (g == keep_from and m.group(1) == "delta"):
             shutil.rmtree(os.path.join(store_dir, entry), ignore_errors=True)
 
 

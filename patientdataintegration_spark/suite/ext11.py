@@ -792,7 +792,10 @@ def q298_export_erasure_sla(spark: SparkSession, sf_dir: str) -> DataFrame:
         read_ivf_serving,
         read_ivf_serving_centroids,
     )
-    from patientdataintegration_spark.streaming.serving import read_relation
+    from patientdataintegration_spark.streaming.serving import (
+        read_relation,
+        read_serving_meta,
+    )
     from patientdataintegration_spark.suite.ext10 import (
         _shared_serving_export,
     )
@@ -813,7 +816,9 @@ def q298_export_erasure_sla(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     def served(out: str, name: str, schema: str) -> DataFrame:
-        return read_relation(spark, out, name, f"{schema}, tb int")
+        return read_relation(
+            spark, out, read_serving_meta(out), name, f"{schema}, tb int"
+        )
 
     doc_deleted = (F.col("doc") % 5 == 0).cast("int")
     rows = [
@@ -837,7 +842,10 @@ def q298_export_erasure_sla(spark: SparkSession, sf_dir: str) -> DataFrame:
     vec_deleted = (F.col("neighbor_id") % 7 == 3).cast("int")
     rows.append(cert(
         "ivf_export",
-        read_relation(spark, ivf_full, "assigned", SERVED_SCHEMA),
+        read_relation(
+            spark, ivf_full, read_serving_meta(ivf_full), "assigned",
+            SERVED_SCHEMA,
+        ),
         vec_deleted,
     ))
     all_cells = sorted(

@@ -154,3 +154,29 @@ def test_streaming_modules_import_siblings_publicly_at_top_level():
     assert private == [], f"private names imported across streaming/: {private}"
     nested = [(f, line, sib) for f, line, sib, _, inner in imports if inner]
     assert nested == [], f"streaming/ siblings imported in a function: {nested}"
+
+
+def test_store_layout_and_commit_evidence_live_only_in_store_py():
+    """`streaming/store.py` alone names generation directories and
+    decides when a generation is committed. Any other `streaming/`
+    module that calls `base_path`/`delta_path` or names a commit file
+    (`_SUCCESS`, `_COMMITTED`) has taken one of those rules back."""
+    pkg = REPO / "patientdataintegration_spark" / "streaming"
+    paths, evidence = [], []
+    for path in sorted(pkg.glob("*.py")):
+        if path.name == "store.py":
+            continue
+        for node in ast.walk(ast.parse(path.read_text())):
+            name = (
+                node.id if isinstance(node, ast.Name)
+                else node.attr if isinstance(node, ast.Attribute)
+                else node.name if isinstance(node, ast.alias)
+                else None
+            )
+            if name in ("base_path", "delta_path"):
+                paths.append((path.name, getattr(node, "lineno", None), name))
+            if isinstance(node, ast.Constant) and isinstance(node.value, str):
+                if "_SUCCESS" in node.value or "_COMMITTED" in node.value:
+                    evidence.append((path.name, node.lineno))
+    assert paths == [], f"generation paths built outside store.py: {paths}"
+    assert evidence == [], f"commit files named outside store.py: {evidence}"

@@ -21,6 +21,7 @@ from patientdataintegration_spark.streaming.index import (
 from patientdataintegration_spark.streaming.store import (
     base_path,
     commit_base,
+    commit_delta,
     delta_path,
     read_rowstore,
 )
@@ -84,6 +85,7 @@ def test_rowstore_time_travel_matches_model(spark, gens, tmp_path_factory):
         spark.createDataFrame(
             [(i,) for i in dels] or [], "doc_id bigint"
         ).write.mode("overwrite").parquet(delta_path(store, g, "tombs"))
+        commit_delta(store, g)  # delta sentinel: reads skip unmarked deltas
 
     for v in range(len(gens) + 1):
         got = sorted(
@@ -142,6 +144,7 @@ def test_upsert_store_time_travel_matches_model(spark, gens, tmp_path_factory):
         spark.createDataFrame(
             [], "term string, doc bigint"
         ).write.mode("overwrite").parquet(delta_path(store, g, "overflow"))
+        commit_delta(store, g)
 
     for v in range(len(gens) + 1):
         got = sorted(

@@ -408,11 +408,11 @@ def test_crud_with_compaction_and_reingest(spark, tmp_path):
 
 
 def test_partial_generation_is_invisible_to_dedup_store_reads(spark, tmp_path):
-    """The dedup store's commit marker is "tombs" (written last in
-    every generation, even when empty — r13 ADVICE): a delta_g1
-    holding sigs/edges/labels but no tombs is a crash remnant, so
-    every read rule resolves to the pre-batch state until the
-    replayed batch overwrites the partial generation."""
+    """A dedup generation commits only when its `_COMMITTED` sentinel
+    is stamped after every relation (r13 ADVICE): a delta_g1 holding
+    sigs/edges/labels but no tombs and no sentinel is a crash
+    remnant, so every read rule resolves to the pre-batch state until
+    the replayed batch overwrites the partial generation."""
     from patientdataintegration_spark.streaming.components import (
         read_store,
         seed_stores,
@@ -426,7 +426,7 @@ def test_partial_generation_is_invisible_to_dedup_store_reads(spark, tmp_path):
     labels0 = spark.createDataFrame([(1, 1), (2, 1)], "node bigint, label bigint")
     seed_stores(sigs0, pairs0, labels0, store)
 
-    # crash remnant: three relations written, no tombs commit marker
+    # crash remnant: three relations written, no tombs, no sentinel
     spark.createDataFrame([(9, 90)], "doc_id bigint, s bigint").write.parquet(
         delta_path(store, 1, "sigs")
     )
@@ -448,15 +448,15 @@ def test_partial_generation_is_invisible_to_dedup_store_reads(spark, tmp_path):
         (r["node"], r["label"])
         for r in read_store(spark, store, "labels").collect()
     ) == [(1, 1), (2, 1)]
-    assert latest_generation(store, marker="tombs") == 0
+    assert latest_generation(store) == 0
 
 
 def test_commit_survives_disabled_success_markers(spark, tmp_path):
     """Generations stay COMMITTED when the committer writes no
     `_SUCCESS` files (marksuccessfuljobs=false — the posture of
     several cloud committers): the writers stamp an engine-owned
-    `_COMMITTED` sentinel after the marker relation, and `_scan_gens`
-    accepts either. Simulated by deleting every `_SUCCESS` under the
+    `_COMMITTED` sentinel after every relation, and it alone commits
+    a generation. Simulated by deleting every `_SUCCESS` under the
     store after a committed run — without the sentinel, every read
     would silently resolve to the seed state forever."""
     from patientdataintegration_spark.streaming.components import (
@@ -485,7 +485,7 @@ def test_commit_survives_disabled_success_markers(spark, tmp_path):
         spark, src, "*.parquet", store, ckpt, bands=2, rows_per_band=2,
         compact_every=0,
     )
-    assert latest_generation(store, marker="tombs") == 1
+    assert latest_generation(store) == 1
 
     removed = 0
     for root, _dirs, files in os.walk(store):
@@ -496,7 +496,7 @@ def test_commit_survives_disabled_success_markers(spark, tmp_path):
     assert removed > 0, "test needs _SUCCESS files to strip"
 
     # the sentinel alone keeps generation 1 visible
-    assert latest_generation(store, marker="tombs") == 1
+    assert latest_generation(store) == 1
     assert sorted(
         r["doc_id"] for r in read_store(spark, store, "sigs").collect()
     ) == [1, 2, 3]
@@ -509,7 +509,7 @@ def test_migrate_store_markers_restores_pre_upgrade_store(spark, tmp_path):
     stamps the sentinels onto a known-good store and returns what it
     stamped (idempotent: a second run stamps nothing)."""
     from patientdataintegration_spark.streaming.store import (
-        _BASE_SENTINEL,
+        _SENTINEL,
         migrate_store_markers,
     )
 
@@ -522,7 +522,7 @@ def test_migrate_store_markers_restores_pre_upgrade_store(spark, tmp_path):
         store,
     )
     # simulate the pre-sentinel layout
-    os.remove(os.path.join(store, "base_g0", _BASE_SENTINEL))
+    os.remove(os.path.join(store, "base_g0", _SENTINEL))
     with pytest.raises(ValueError, match="never seeded"):
         read_store(spark, store, "sigs")
 
@@ -542,7 +542,7 @@ def test_migrate_store_markers_stamps_deltas(spark, tmp_path):
     when a marker name is given."""
     from patientdataintegration_spark.streaming.components import components_stream
     from patientdataintegration_spark.streaming.store import (
-        _BASE_SENTINEL,
+        _SENTINEL,
         migrate_store_markers,
     )
 
@@ -573,14 +573,14 @@ def test_migrate_store_markers_stamps_deltas(spark, tmp_path):
     delta_dir = os.path.join(store, "delta_g1")
     for root, _dirs, files in os.walk(delta_dir):
         for f in files:
-            if f in ("_SUCCESS", _BASE_SENTINEL):
+            if f in ("_SUCCESS", _SENTINEL):
                 os.remove(os.path.join(root, f))
     # delta_g1 is now invisible: reads fall back to the seed
-    assert latest_generation(store, marker="tombs") == 0
+    assert latest_generation(store) == 0
 
     stamped = migrate_store_markers(store, marker="tombs")
     assert stamped == ["delta_g1"]
-    assert latest_generation(store, marker="tombs") == 1
+    assert latest_generation(store) == 1
     assert sorted(
         r["doc_id"] for r in read_store(spark, store, "sigs").collect()
     ) == [1, 3]
@@ -592,12 +592,12 @@ def test_migrate_store_markers_stamps_deltas(spark, tmp_path):
 
 def test_uncommit_delta_clears_marker_success(spark, tmp_path):
     """A checkpoint-replay rewrite of an already-committed generation
-    must first remove BOTH commit evidences — the engine sentinel AND
-    the marker relation's `_SUCCESS` (written LAST in the original
-    attempt, so it would otherwise advertise commit while earlier
-    relations are mid-overwrite; r15 ADVICE)."""
+    must first remove its commit evidence — the `_COMMITTED`
+    sentinel, which would otherwise advertise commit while the
+    relations are mid-overwrite (r15 ADVICE). A relation's
+    `_SUCCESS` is not commit evidence, so it may stay."""
     from patientdataintegration_spark.streaming.store import (
-        _BASE_SENTINEL,
+        _SENTINEL,
         commit_delta,
         uncommit_delta,
     )
@@ -608,10 +608,9 @@ def test_uncommit_delta_clears_marker_success(spark, tmp_path):
     with open(os.path.join(gen_dir, "tombs", "_SUCCESS"), "w"):
         pass
     commit_delta(store, 1)
-    assert os.path.isfile(os.path.join(gen_dir, _BASE_SENTINEL))
+    assert os.path.isfile(os.path.join(gen_dir, _SENTINEL))
 
-    uncommit_delta(store, 1, marker="tombs")
-    assert not os.path.isfile(os.path.join(gen_dir, _BASE_SENTINEL))
-    assert not os.path.isfile(os.path.join(gen_dir, "tombs", "_SUCCESS"))
+    uncommit_delta(store, 1)
+    assert not os.path.isfile(os.path.join(gen_dir, _SENTINEL))
     # idempotent on a generation with no evidence at all
-    uncommit_delta(store, 1, marker="tombs")
+    uncommit_delta(store, 1)

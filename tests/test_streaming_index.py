@@ -206,11 +206,12 @@ def test_index_stream_unseeded_store_is_descriptive(spark, tmp_path):
 
 def test_partial_generation_is_invisible_until_replay_heals_it(spark, tmp_path):
     """A crash between a generation's per-relation writes must not
-    poison reads (r13 ADVICE): "terms" is written LAST as the commit
-    marker, so a delta_g1 holding index/overflow but no terms is a
-    crash remnant — reads at any version resolve to the pre-batch
-    state, and the checkpoint replay then overwrites the partial
-    generation idempotently."""
+    poison reads (r13 ADVICE): a generation commits only when its
+    `_COMMITTED` sentinel is stamped after every relation, so a
+    delta_g1 holding index/overflow but no terms is a crash remnant —
+    reads at any version resolve to the pre-batch state, and the
+    checkpoint replay then overwrites the partial generation
+    idempotently."""
     from patientdataintegration_spark.streaming.store import delta_path
 
     src, store, ckpt = (str(tmp_path / p) for p in ("src", "store", "ckpt"))
@@ -223,7 +224,7 @@ def test_partial_generation_is_invisible_until_replay_heals_it(spark, tmp_path):
     want_seed = _norm_index(read_index_store(spark, store, "index"))
 
     # simulate the crash: the batch wrote index and overflow, then
-    # died before the terms commit marker
+    # died before terms and the sentinel
     fake_idx, fake_of = _rebuild(spark, [(9, "zz", 1)], max_postings=16)
     fake_idx.write.mode("overwrite").parquet(delta_path(store, 1, "index"))
     fake_of.write.mode("overwrite").parquet(delta_path(store, 1, "overflow"))
@@ -235,7 +236,7 @@ def test_partial_generation_is_invisible_until_replay_heals_it(spark, tmp_path):
         _norm_index(read_index_store(spark, store, "index", version=1))
         == want_seed
     )
-    assert latest_generation(store, marker="terms") == 0
+    assert latest_generation(store) == 0
 
     # the replayed batch overwrites generation 1 and commits it
     batch = [(3, "c d", 1)]
@@ -248,15 +249,16 @@ def test_partial_generation_is_invisible_until_replay_heals_it(spark, tmp_path):
     )
     want_idx, _ = _rebuild(spark, seed + batch, max_postings=16)
     assert _norm_index(got) == _norm_index(want_idx)
-    assert latest_generation(store, marker="terms") == 1
+    assert latest_generation(store) == 1
 
 
 def test_torn_marker_write_is_uncommitted(spark, tmp_path):
     """Spark's committer creates the output directory before job
     commit, so a crash DURING the marker write leaves a terms/ dir
     with no _SUCCESS — a bare isdir check would trust it and serve a
-    torn generation (r14 ADVICE). Commitment requires the marker
-    job's own _SUCCESS file."""
+    torn generation (r14 ADVICE). Neither the directory nor its
+    `_SUCCESS` commits a generation: only the `_COMMITTED` sentinel,
+    stamped after every relation write returned, does."""
     from patientdataintegration_spark.streaming.store import delta_path
 
     store = str(tmp_path / "store")
@@ -276,7 +278,22 @@ def test_torn_marker_write_is_uncommitted(spark, tmp_path):
     os.remove(os.path.join(delta_path(store, 1, "terms"), "_SUCCESS"))
 
     assert _norm_index(read_index_store(spark, store, "index")) == want_seed
-    assert latest_generation(store, marker="terms") == 0
+    assert latest_generation(store) == 0
+
+    # every relation written, terms/_SUCCESS present, no _COMMITTED:
+    # the crash fell between the last write and the sentinel stamp, so
+    # the generation is still uncommitted (its replay commits it)
+    spark.createDataFrame([("zz",)], "term string").write.mode(
+        "overwrite"
+    ).parquet(delta_path(store, 1, "terms"))
+    assert os.path.isfile(os.path.join(delta_path(store, 1, "terms"), "_SUCCESS"))
+    assert not os.path.exists(os.path.join(store, "delta_g1", "_COMMITTED"))
+    assert _norm_index(read_index_store(spark, store, "index")) == want_seed
+    assert (
+        _norm_index(read_index_store(spark, store, "index", version=1))
+        == want_seed
+    )
+    assert latest_generation(store) == 0
 
 
 def test_partial_base_is_invisible_and_satellites_survive(spark, tmp_path):
@@ -320,7 +337,7 @@ def test_partial_base_is_invisible_and_satellites_survive(spark, tmp_path):
     assert _store_features(store) == ("tf", "pos")
     assert _norm_index(read_index_store(spark, store, "index")) == want
     assert read_index_stats(spark, store).collect() == want_stats
-    assert latest_generation(store, marker="terms") == 0
+    assert latest_generation(store) == 0
 
 
 def test_reingest_upsert_is_deterministic_batch_wins(spark, tmp_path):

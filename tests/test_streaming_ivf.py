@@ -197,10 +197,11 @@ def test_ivf_compaction_folds_generations_and_gc_prunes(spark, tmp_path):
 
 
 def test_partial_generation_is_invisible_to_ivf_store_reads(spark, tmp_path):
-    """The IVF store's commit marker is "tombs" (written last in
-    every generation — r13 ADVICE): a delta_g1 holding assigned rows
-    but no tombs is a crash remnant, so reads resolve to the
-    pre-batch state until the replayed batch overwrites it."""
+    """An IVF generation commits only when its `_COMMITTED` sentinel
+    is stamped after every relation (r13 ADVICE): a delta_g1 holding
+    assigned rows but no tombs and no sentinel is a crash remnant, so
+    reads resolve to the pre-batch state until the replayed batch
+    overwrites it."""
     from patientdataintegration_spark.operators.similarity import (
         ivf_index_exact,
     )
@@ -215,24 +216,20 @@ def test_partial_generation_is_invisible_to_ivf_store_reads(spark, tmp_path):
     seed_ivf_store(assigned0, centroids, store)
     want = sorted(
         r["neighbor_id"]
-        for r in read_rowstore(
-            spark, store, "assigned", id_col="neighbor_id", marker="tombs"
-        ).collect()
+        for r in read_rowstore(spark, store, "assigned", id_col="neighbor_id").collect()
     )
 
-    # crash remnant: assigned rows written, no tombs commit marker
+    # crash remnant: assigned rows written, no tombs, no sentinel
     assigned0.withColumn(
         "neighbor_id", F.col("neighbor_id") + 100
     ).write.parquet(delta_path(store, 1, "assigned"))
 
     got = sorted(
         r["neighbor_id"]
-        for r in read_rowstore(
-            spark, store, "assigned", id_col="neighbor_id", marker="tombs"
-        ).collect()
+        for r in read_rowstore(spark, store, "assigned", id_col="neighbor_id").collect()
     )
     assert got == want
-    assert latest_generation(store, marker="tombs") == 0
+    assert latest_generation(store) == 0
 
 
 def test_ivf_serving_export_prunes_to_probe_cells(spark, tmp_path):
@@ -279,9 +276,7 @@ def test_ivf_serving_export_prunes_to_probe_cells(spark, tmp_path):
     out = str(tmp_path / "export")
     assert export_ivf_serving_layout(spark, store, out) == 1
 
-    maintained = read_rowstore(
-        spark, store, "assigned", id_col="neighbor_id", marker="tombs"
-    )
+    maintained = read_rowstore(spark, store, "assigned", id_col="neighbor_id")
     exported = spark.read.parquet(os.path.join(out, _ivf_dir(out, "assigned")))
     assert _cells(exported) == _cells(maintained)
 
@@ -387,9 +382,7 @@ def test_ivf_refresh_is_incremental_and_value_invisible(spark, tmp_path):
     assert res["mode"] == "incremental"
     assert res["version"] == 3
 
-    maintained = read_rowstore(
-        spark, store, "assigned", id_col="neighbor_id", marker="tombs"
-    )
+    maintained = read_rowstore(spark, store, "assigned", id_col="neighbor_id")
     served, cdf = read_ivf_serving(spark, out, all_cells)
     assert _cells(served) == _cells(maintained)
     # (b) vec 3's cell was never rewritten, yet 3 is gone (MoR tombs)
@@ -476,9 +469,7 @@ def test_ivf_refresh_falls_back_to_full_after_gc(spark, tmp_path):
     res = refresh_ivf_serving_layout(spark, store, out)
     assert res["mode"] == "full"
     assert res["version"] == 3
-    maintained = read_rowstore(
-        spark, store, "assigned", id_col="neighbor_id", marker="tombs"
-    )
+    maintained = read_rowstore(spark, store, "assigned", id_col="neighbor_id")
     cells = sorted(
         r["cell"]
         for r in spark.read.parquet(os.path.join(out, _ivf_dir(out, "centroids")))
@@ -538,9 +529,7 @@ def test_ivf_continuous_serving_follows_the_stream(spark, tmp_path):
     run()
     assert read_serving_meta(out)["version"] == 2
 
-    maintained = read_rowstore(
-        spark, store, "assigned", id_col="neighbor_id", marker="tombs"
-    )
+    maintained = read_rowstore(spark, store, "assigned", id_col="neighbor_id")
     cells = sorted(r["cell"] for r in centroids.select("cell").collect())
     served, cdf = read_ivf_serving(spark, out, cells)
     assert _cells(served) == _cells(maintained)
@@ -694,6 +683,44 @@ def test_publish_gc_keeps_dirs_the_new_meta_references(tmp_path):
     assert sorted(os.listdir(out)) == [
         "assigned_v2", "centroids_v1", "serving_meta.json", "tombs_v2"
     ]
+
+
+def test_serving_readers_resolve_the_meta_once(spark, tmp_path, monkeypatch):
+    """Every serving reader reads the layout meta ONCE and resolves
+    all the relations it pairs through it: a reader that re-read the
+    meta per relation could, racing a refresh's flip, pair one
+    version's tombstones (IVF) or bucket count (BM25) with the next
+    version's rows. Counted on empty relation directories, so no job
+    runs."""
+    from patientdataintegration_spark.streaming import index, ivf, serving
+
+    calls = []
+    real = serving.read_serving_meta
+
+    def counting(out_dir):
+        calls.append(out_dir)
+        return real(out_dir)
+
+    for mod in (serving, index, ivf):
+        monkeypatch.setattr(mod, "read_serving_meta", counting)
+
+    ivf_out = str(tmp_path / "ivf")
+    dirs = {n: f"{n}_v1" for n in ("assigned", "centroids", "tombs")}
+    for d in dirs.values():
+        os.makedirs(os.path.join(ivf_out, d))
+    serving.write_serving_meta(ivf_out, {"version": 1, "dirs": dirs})
+    ivf.read_ivf_serving(spark, ivf_out, [0, 1])
+    assert len(calls) == 1, "read_ivf_serving"
+
+    bm25_out = str(tmp_path / "bm25")
+    os.makedirs(os.path.join(bm25_out, "tf_v1"))
+    serving.write_serving_meta(bm25_out, {
+        "version": 1, "n_buckets": 4, "relations": ["tf"],
+        "dirs": {"tf": "tf_v1"},
+    })
+    calls.clear()
+    index.read_serving_relation(spark, bm25_out, "tf", ["a", "b"])
+    assert len(calls) == 1, "read_serving_relation"
 
 
 def test_ivf_export_retention_window(spark, tmp_path):
