@@ -11,6 +11,8 @@ only adapts the suite registry to the driver's interface.
 
 from __future__ import annotations
 
+import json
+import os
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -28,16 +30,28 @@ def entry(spark: SparkSession) -> DataFrame:
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """One entry per implemented operator from SURVEY.md §2."""
+    """Every registered lane, the committed rotation sample
+    (`tools/rotation_manifest.json` `recommended_sample`) first: the
+    correctness harness certifies only a bounded prefix, so the
+    rotation rule — touched lanes first, then the stalest — decides
+    that prefix. A sample name that is not registered raises
+    KeyError."""
     from patientdataintegration_spark.suite import QUERIES
 
-    return dict(QUERIES)
+    manifest = os.path.join(
+        os.path.dirname(os.path.abspath(__file__)), "tools",
+        "rotation_manifest.json",
+    )
+    with open(manifest) as f:
+        sample = json.load(f)["recommended_sample"]
+    ordered = {name: QUERIES[name] for name in sample}
+    ordered.update(QUERIES)  # keeps the sample's positions, appends the rest
+    return ordered
 
 
 def oracle_sql() -> dict[str, str]:
-    """DuckDB-runnable ANSI-SQL twin for each SQL-expressible query.
-    Keys absent here (streaming / pandas-UDF lanes) get the driver's
-    weaker rows-only check."""
+    """The DuckDB-runnable ANSI-SQL twin of every lane in
+    `queries()`."""
     from patientdataintegration_spark.suite import ORACLES
 
     return dict(ORACLES)

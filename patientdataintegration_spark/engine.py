@@ -64,12 +64,11 @@ class Engine:
             raise KeyError(f"unknown query {name!r}; see names()")
         return QUERIES[name](self.spark, self.data_dir)
 
-    def oracle_sql(self, name: str) -> str | None:
-        """The DuckDB-runnable twin, where one exists (None for
-        rows-only lanes: streaming, pandas-UDF, ML ensembles)."""
+    def oracle_sql(self, name: str) -> str:
+        """The lane's DuckDB-runnable twin (every lane carries one)."""
         from patientdataintegration_spark.suite import ORACLES
 
-        return ORACLES.get(name)
+        return ORACLES[name]
 
     def explain(self, name: str, mode: str = "formatted") -> str:
         from patientdataintegration_spark.plans.inspect import explain_str
@@ -80,7 +79,7 @@ class Engine:
         """Run `name` on Spark AND its ANSI-SQL oracle twin on DuckDB
         over the same parquet, comparing rows/schema/values — the
         migration-trust check as a library call. Returns {name, rows,
-        match, problems, rows_only}."""
+        match, problems}."""
         from patientdataintegration_spark.verify import verify_query
 
         return verify_query(self.spark, self.data_dir, name)

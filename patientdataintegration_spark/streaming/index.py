@@ -73,13 +73,12 @@ term filter (proven by q281's oracle).
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from patientdataintegration_spark.streaming.serving import (
     publish,
+    published_meta,
     read_relation,
     read_serving_meta,
     refresh_range,
@@ -311,8 +310,8 @@ def export_serving_layout(
     rewrites that version's directories under readers — run that
     shape as an offline job."""
     version, _base, _gens = resolve(store_dir, version)
-    if os.path.isfile(os.path.join(out_dir, "serving_meta.json")):
-        old_meta = read_serving_meta(out_dir)
+    old_meta = published_meta(out_dir)
+    if old_meta is not None:
         if old_meta["n_buckets"] != n_buckets:
             raise ValueError(
                 f"serving layout at {out_dir!r} was exported with "
@@ -356,15 +355,6 @@ def export_serving_layout(
     parallel_actions(writes)
     publish(out_dir, meta, keep_old_versions)
     return version
-
-
-def read_serving_stats(spark: SparkSession, out_dir: str) -> DataFrame:
-    """The exported layout's 1-row scoring marginal, resolved through
-    the meta so a reader always pairs the stats with the row
-    directories of the meta version it planned against."""
-    return read_relation(
-        spark, out_dir, read_serving_meta(out_dir), "stats", STATS_SCHEMA
-    )
 
 
 def refresh_serving_layout(
@@ -554,7 +544,18 @@ def read_serving_relation(
     name: str,
     terms: list[str] | None,
 ) -> DataFrame:
-    """Pruned point read over an exported serving layout: the query's
+    """`read_serving_relations` for one relation."""
+    (df,) = read_serving_relations(spark, out_dir, [name], terms)
+    return df
+
+
+def read_serving_relations(
+    spark: SparkSession,
+    out_dir: str,
+    names: list[str],
+    terms: list[str] | None,
+) -> list[DataFrame]:
+    """Pruned point reads over an exported serving layout: the query's
     terms map to buckets DRIVER-SIDE (`term_bucket_py` — the term
     list is query-sized metadata, never cluster data), and the
     bucket IN-list lands as a partition filter the scan prunes on at
@@ -568,20 +569,32 @@ def read_serving_relation(
     `collect_pruning_terms` guard's escape hatch): read the whole
     relation and let the downstream semi-probe do the cutting —
     correct, just not pruned, and the right plan anyway once a query
-    batch's vocabulary stops being "point read"-sized. The bucket
-    count and the relation directory come from one read of the meta."""
+    batch's vocabulary stops being "point read"-sized. `"stats"`, the
+    layout's 1-row scoring marginal, reads whole.
+
+    The bucket count and every relation directory come from ONE read
+    of the meta, so a serve racing a refresh's flip never pairs one
+    version's rows with another's stats or overflow."""
     meta = read_serving_meta(out_dir)
-    served = _read_served(spark, out_dir, meta, name)
-    if terms is None:
-        return served.drop("tb")
-    n_buckets = int(meta["n_buckets"])
-    buckets = sorted({term_bucket_py(t, n_buckets) for t in terms})
-    return (
-        served
-        .filter(F.col("tb").isin(buckets))
-        .filter(F.col("term").isin(list(terms)))
-        .drop("tb")
-    )
+    if terms is not None:
+        n_buckets = int(meta["n_buckets"])
+        buckets = sorted({term_bucket_py(t, n_buckets) for t in terms})
+    frames = []
+    for name in names:
+        if name == "stats":
+            frames.append(
+                read_relation(spark, out_dir, meta, name, STATS_SCHEMA)
+            )
+            continue
+        served = _read_served(spark, out_dir, meta, name)
+        if terms is not None:
+            served = (
+                served
+                .filter(F.col("tb").isin(buckets))
+                .filter(F.col("term").isin(list(terms)))
+            )
+        frames.append(served.drop("tb"))
+    return frames
 
 
 def collect_pruning_terms(

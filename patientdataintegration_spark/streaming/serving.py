@@ -48,6 +48,14 @@ def read_serving_meta(out_dir: str) -> dict:
         return json.load(f)
 
 
+def published_meta(out_dir: str) -> dict | None:
+    """The live meta of the layout at `out_dir`, or None where no
+    layout has been published yet."""
+    if not os.path.isfile(os.path.join(out_dir, _META)):
+        return None
+    return read_serving_meta(out_dir)
+
+
 def write_serving_meta(out_dir: str, meta: dict) -> None:
     """Atomic meta flip: write a temp file in the same directory and
     `os.replace` it over the live one, so a reader never sees a
@@ -180,11 +188,7 @@ def publish(out_dir: str, meta: dict, keep_old_versions: int) -> None:
     then retained too, whatever its tag. Every directory the NEW meta
     references survives, whatever its tag: a refresh keeps
     referencing what it did not restage."""
-    prev = (
-        read_serving_meta(out_dir)
-        if os.path.isfile(os.path.join(out_dir, _META))
-        else {}
-    )
+    prev = published_meta(out_dir) or {}
     write_serving_meta(out_dir, meta)
     protect = set(meta["dirs"].values())
     if keep_old_versions >= 1:

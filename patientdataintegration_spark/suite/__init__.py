@@ -22,7 +22,7 @@ engines and partitionings):
   and Spark/DuckDB round such doubles in different directions (the
   q133 EWMA lesson — its alpha is 1/3 for this reason).
 
-Spark-version coupling (r8 ADVICE): the streaming hash oracles
+Spark-version coupling: the streaming hash oracles
 (q88/q89/q90/q96/q99/q180/q196/q201/q231/q236/q245) replay
 engine-specific micro-batch behavior in SQL — a single-file backlog
 processed as ONE batch under availableNow, ms-floored watermark
@@ -33,516 +33,25 @@ events source can flip emitted sets with the engine still CORRECT;
 after any Spark bump, run those two calibration test files first
 and re-derive the frontier rules before trusting a red gate.
 
-Registration order is an explicit PRIORITY list: the driver's
-correctness harness checks a bounded prefix of the registry (50
-entries per round), so the prefix is ROTATED each round to extend
-cumulative coverage. Round 1 checked the core §2 operator queries;
-round 2 the events + LLM-pipeline lanes; round 3 the r2 reds, the
-post-freeze additions (q113-q144), and first rows-only evidence.
-Round 4 rotated in the two r3 hash-fails (re-proven green), the 10
-never-checked rows-only lanes (completing ever-checked coverage of
-the then-registry), the q145-q158 additions, and the r4 re-proof
-set — see CORRECTNESS_r04.json.
-
-Round 5 rotated in q176-q191 (restoring ever-checked = all
-registered), the r5 re-proof set, and late-r5 additions q192-q206 —
-see CORRECTNESS_r05.json.
-
-The round-8 window closes the evidence backlog: (a) eleven lanes
-whose first HASH row this is — the two r8 additions, q234
-(cross-engine table checksum: the DuckDB twin rebuilds the
-identical canonical bytes, so the hash match proves the fingerprint
-is engine-portable) and q235 (WindowGroupLimit top-k per group),
-plus the NINE streaming lanes upgraded r8 from rows-only to full
-hash oracles (q88/q90: complete-mode finals equal the batch
-aggregate deterministically; q89: unique-key single-batch dedup of
-byte-identical duplicates; q99: INNER stream-stream joins emit
-eagerly, so the single-batch emitted set is the batch join; q96:
-the custom sessionizer's timeout-eviction frontier replayed in SQL;
-q180: the CDC merge fold is associative, so the final snapshot is
-the global last-writer-wins; q201/q231: the outer-join eviction
-frontier replayed with ms-calibrated rules; q196: the q195
-generator-replay oracle lifted to the stream path — all the q223
-pattern); (b) re-proof rows for everything else r8
-changed — q54/q145 (global_row_number gained adaptive
-range-partition sizing + the 2^33 overflow guard; same oracles,
-bit-identical output expected) and q232/q233 (tie-robust
-dedup-edge verdict via the shared approx_equidepth_verdict helper);
-(c) the complete r2-era evidence residue
-(q93/q100/q103/q105-q109/q111/q112, latest driver rows
-CORRECTNESS_r02) — the r7 verdict's queued backlog item; (d) the
-oldest r3-era hash lanes; and (e) the round-8b additions, all
-full hash lanes — q236 (state-store introspection: the append-mode
-sink plus the checkpoint's live aggregation buffers read back via
-the statestore source reconstruct the batch aggregate, origins
-split by the ms-calibrated eviction frontier), q237/q238/q239
-(mergeable sketches — HLL rollup, Theta set algebra, distributed
-approx_top_k — verdict oracles in pure integer arithmetic), q240
-(Bloom-prefiltered incremental dedup, bit-identical to q117's
-NOT EXISTS), and q241 (incremental COUNT DISTINCT via persisted
-HLL sketch state — merge of per-slice sketches has registers
-identical to a flat sketch, so maintenance is re-scan-free); and
-(f) the round-8c additions — q242 (incremental JOIN-view
-maintenance: the delta algebra ΔJ = ΔA⋈B ∪ A⋈ΔB ∪ ΔA⋈ΔB proven
-bit-identical to the full re-join by the oracle hash), q243 (EXACT
-incremental COUNT DISTINCT via mergeable 32768-bit bitmap buckets —
-OR-merge is associative AND idempotent, readout bit-exact, plain
-hash oracle), and q244 (Count-Min sketch re-expressed as a d×w
-counter RELATION — built/merged/queried with built-in aggregates;
-verdict oracle pins no-underestimate + bounded excess). After
-this window no registry query's latest driver evidence predates
-r3; the nineteen r3-era hash lanes displaced by the upgrades and
-the r8b/r8c additions (q60/q62/q66/q67/q70/q71/q73/q74/q85/q144,
-q133/q135/q136/q137/q142/q47, and q128/q129/q131) queue for r9,
-and the one
-rows-only-by-design lane keeps its rows-only row. Per the r6
-verdict, lanes with NO oracle stay OUT of the window — after the
-r8 upgrades exactly ONE remains: q94 (MLlib model internals,
-pytest-bounded, with the q224 hash-checked verdict oracle as its
-companion). Previously-green queries stay registered after
-the priority block; their evidence is CORRECTNESS_r01-r07.json plus
-the committed full-registry ORACLE_RUN logs.
-
-The round-9 window: (a) the three r9 additions, never
-driver-checked — q245 (the q236 state-store audit extended to the
-applyInPandasWithState sessionizer), q246 (the nightly-maintenance
-flagship: five maintained artifacts certified against their
-full-recompute twins through the q234 checksum in ONE DAG), q247
-(persisted-Bloom-store replay across two delta generations); (b)
-the r8 verdict's item 3 — q91_multimodal_features and
-q97_batch_inference, whose full oracles pass the local 3-SF gate
-since r8 but whose latest DRIVER rows are still r4 no_oracle: green
-rows here make "exactly one rows-only lane (q94)"
-driver-confirmed; (c) re-proofs for everything r9 touched — q240/
-q244 (bloomfilter/cms reserved-column hardening + the prebuilt-
-bitmap parameter; results bit-identical by design), q54/q145/q232/
-q233/q235 (ranking.py conf-parse fallback — behavior unchanged on
-the healthy path), q96 (sessions.py gained the checkpoint
-parameter); (d) the complete nineteen-lane r9 evidence queue from
-the r8 rotation (see above); and (e) ten oldest-first r4-era
-fill lanes (q127/q132/q134/q139/q140/q141/q143/q146-q148), after
-which the oldest latest-evidence row in the registry is r4 and the
-remaining r4-era lanes (q149 onward) queue for r10. The late-r9
-additions q248 (rollup maintenance under CDC RETRACTIONS — the
-abelian-group/dirty-key-repair split the insert-only monoid lanes
-cannot express) and q249 (incremental sessionization via the
-generic running-max interval-coalesce) take two window slots ahead
-of the fill, displacing q155/q156 to the r10 queue, and q250 (Merkle-style
-hierarchical divergence localization — the q234 checksums composed
-into an anti-entropy drill that descends only into flagged shards,
-its oracle the a-priori expected drill for two injected faults)
-takes a third, displacing q154; q251 (the plan-time skew
-advisor feeding q113's salt factor, pure integer fair-share math)
-and q252 (IVF index maintenance against FROZEN history-trained
-centroids, the ANN member of the maintenance family — its oracle
-recomputes the maintained index's per-cell histogram end to end)
-take the fourth and fifth, displacing q152/q153; q253 (join-view
-maintenance under PK DELETES — two broadcast anti-probes, never an
-exceptAll, completing CRUD for the view family with q242/q180) and
-q254 (mergeable second-moment state: exact decimal (n, Σx, Σx²) so
-variance/stddev maintenance is bit-identical to recompute, unlike
-the order-dependent Welford/Chan float recurrences) take the sixth
-and seventh, displacing q150/q151; q255 (mergeable equi-width
-histogram state with interpolated-quantile readout — the quantile
-member of the maintenance family, estimates shipped UNROUNDED
-because every readout step is a single IEEE op over exact integer/
-dyadic operands) takes the eighth, displacing q149.
-
-The round-10 window: (a) the nine r10 additions, never
-driver-checked — q256 (late-data-complete session repair: the hull
-lemma lets arbitrary late/bridging deltas re-coalesce only
-delta-active users' session hulls), q257 (join-view maintenance
-under UPDATES — last-writer-wins upsert completing CRUD with
-q242/q253), q258 (the q251 skew advisor wired INTO the salted-join
-executor: profile → n_salts at plan time), q259/q262 (maintained
-per-key top-k — insert merges as re-rank of unions; deletes repair
-dirty keys from the base, the q248 pattern), q260 (overflow-tracked
-histogram state + domain-drift audit), q261 (exact MONEY moments
-via integer-grain quantization, lifting q254's restriction), q263
-(maintained LSH candidate-pair view: stored pairs ∪ bipartite ∪
-within-delta == full recompute), q264 (iterative BPE merge training
-with a fully unrolled CTE oracle); (b) re-proofs for everything r10
-touched — the four r9-ADVICE fixes (q248 CDC NULL measures, q255
-histogram NULL filter, q250 reserved-name guard, q247/q245/q236
-scratch-dir hygiene), the q249 in-DAG precondition guard, and
-q251/q113 after the skew-module additions; (c) the complete 28-lane
-r4-era evidence queue (q149–q159, q161–q171, q173–q175, q42, q86,
-q98) — after this window no registry lane's latest driver evidence
-predates r5; and (d) the late-r10 additions — q265 (histogram
-maintenance under retractions: bucket counts are an abelian group,
-so deletes are pure algebra with a fail-loud negative-count guard,
-chained through the q255 quantile readout), q266 (rollup
-maintenance under UPDATES: the paired -old/+new CDC form through
-the q248 operator, completing rollup CRUD), q267 (BPE APPLY — the
-q264-learned merges tokenize the vocab; the oracle extends the
-unrolled training CTEs with the final replace + weighted count) —
-plus the oldest r5-era fill lane (q01); q02/q04/q05 queue for r11.
-Round 10 also RETIRES the transformWithState module
-(streaming/twstate.py): its Python worker needs google.protobuf,
-which the environment does not ship, so its test skipped every
-round — a vacuous green; applyInPandasWithState (q96/q245) remains
-the fully-exercised arbitrary-stateful lane.
-
-The round-11 window: (a) the two r11 additions, never
-driver-checked — q268 (incremental connected components: the delta
-contracts through yesterday's labels, the star loop runs over the
-O(|Δ|) contracted graph, and the oracle is q115's full
-transitive-closure recompute over the complete pair set) and q269
-(BPE vocab-drift audit: stored-slice train vs union re-train diffed
-rank by rank, both trainings fully unrolled in the oracle); (b)
-re-proofs for everything r11 touched — the seven ranking-family
-lanes after global_row_number's O(P²) triangular-crossJoin prefix
-sum became an O(P) running-sum window over the counts relation
-(q49/q54/q145/q149/q232/q233/q235 — identical ranks by
-construction, the plan now carries exactly one metadata-sized
-window), q257 (upsert_join_view gained the fail-loud same-(key,seq)
-guard on its default path), q261 (moments_exact_readout now raises
-on negative grain sums instead of risking the DIV-vs-// divergence),
-and q265 (histogram_state_signed gained the track_overflow variant;
-the clamped path this lane uses is byte-identical); and (c)
-thirty-eight oldest-first r5-era fill lanes — everything from the
-41-lane r5 evidence tail except q94 (rows-only by design, stays out
-of the window per the r6 verdict), q115 (its exact pipeline is
-re-exercised end-to-end as q268's oracle basis), and q200 (the
-multi-stage curation flagship, queued with q115 for r12, after
-which no lane's evidence predates r6). The late-r11 additions q270
-(streaming maintained top-k — the r10 verdict's stretch 9, a FULL
-hash lane via the one-file-one-batch argument plus the
-tests/test_streaming_topk.py restart/replay contract) and q271
-(top-k under paired-CDC updates, completing the top-k family's
-CRUD) queue for the r12 window rather than displacing fill lanes;
-their r11 evidence is the committed 3-SF ORACLE_RUN gate logs.
-
-The round-12 window: (a) the six never-driver-checked lanes — the
-late-r11 additions q270 (streaming maintained top-k) and q271
-(top-k under updates), plus the r12 additions q272 (decremental
-dedup: document takedowns — LSH pairs retract by broadcast
-anti-join, components repair cluster-locally because edge deletes
-can SPLIT what min-label maintenance cannot, oracle = transitive
-closure over the SURVIVING pair set; completes CRUD for the dedup
-family), q273 (the whole maintained dedup loop — pairs q263 +
-components q268 — under streaming exactly-once: two signature-delta
-micro-batches across a checkpointed restart, versioned idempotent
-store writes, oracle = the q115 full-recompute closure) and q274
-(the TAKEDOWN certificate: all four retraction algebras — pair
-view, labels, canonical docs, exact-dedup store with canonical
-re-election — checksummed against their full-recompute twins in
-one DAG, the q246 pattern; its oracle states every cardinality a
-priori) and q275 (the dedup loop as a FULL-CRUD stream: q273's
-streamed maintenance plus q272's takedowns riding the same
-exactly-once micro-batches — same-batch ingest+takedown, seed-doc
-splits and re-ingest semantics pinned by the CRUD case in
-tests/test_streaming_components.py; oracle = q272's surviving-pair
-closure); (b) the
-last two r5-era hash lanes, q115_components_star and
-q200_corpus_curation, closing the r9 verdict's evidence-rotation
-demand for good (after this window no hash lane's latest driver
-evidence predates r6); (c) the one r12 re-proof — q257 after
-upsert_join_view's ambiguity guard was SCOPED to genuinely
-ambiguous winners (exact at-least-once replays now collapse via
-dropDuplicates and losing-seq ties no longer raise — r11 ADVICE;
-the healthy path this lane drives is value-identical with the
-slice deduplicated first); and (d) forty-three oldest-first r6-era
-fill lanes — everything from the 47-lane r6 evidence tail except
-q43_percentiles, q44_cube, q63_latest_per_key, q95_approx_distinct,
-q229_sql_udf_macros and q230_lateral_topk, which queue for r13
-(forty-one fills: the late additions q274/q275 displace q229/q230).
-
-The round-13 window: (a) the nine r13 additions, never
-driver-checked — q281 (inverted-index INSERTS: extend_inverted_index
-completes the index family's CRUD against the min_df=1 seed store,
-serve-time doc_freq filter, oracle = q110's full rebuild over all
-documents), q282 (exact PHRASE retrieval: positional postings +
-adjacency join over the same hottest-term pairs as q279, separating
-phrase semantics from boolean AND on identical inputs), q283 (the
-maintained index as a FULL-CRUD STREAM: term-grain upsert
-generations, takedowns riding the exactly-once micro-batches, oracle
-= the full rebuild over the net corpus), q284 (the maintained IVF
-index as a stream: frozen-centroid per-batch assignment, row-grain
-generations via the dedup sigs rule, oracle = the full
-quantizer+assign+search pipeline over the survivors — with q273/q283
-every maintained artifact now has a streaming path), q276 (ANN-index erasure: retract_ivf against the
-frozen-centroid inverted file, oracle = the full IVF pipeline over
-the survivors), q277 (inverted-index erasure: the (index, overflow)
-factorization repairs the posting cap under deletes — at-cap
-re-admission, doc_freq decrement, below-min_df drops — oracle = the
-full rebuild over survivors), q278 (the erasure-SLA certificate:
-ONE DAG retracts the takedown set from all six maintained artifacts
-and proves refs_to_deleted = 0 with every survivor cardinality
-stated a priori), q279 (conjunctive retrieval SERVED from the
-(index, overflow) factorization — the 9 hottest-term pairs, every
-one past the posting cap, proven lossless against raw-text
-intersections) and q280 (Okapi BM25 top-k ranking, per-term
-round-6 ln scores summed as exact DECIMAL — the q82 discipline —
-with the oracle mirroring the expression trees token for token);
-(b) seven re-proofs for everything r13 changed —
-q273/q275 (the dedup stream's store rewritten to DELTA GENERATIONS:
-per-batch O(Δ) writes via maintain_components_delta /
-retract_documents_delta, last-writer-wins label reconstruction,
-compaction + GC — the r12 verdict's weak mark), q268/q272 (their
-operators refactored onto the shared delta cores), q274 (cert()
-rebuilt on the empty-side-safe table_checksum + the exact store and
-fingerprints now cache-read — r12 ADVICE), q110 (inverted_index
-refactored onto the shared _rank_term_docs/_roll_postings helpers)
-and q98 (ivf_cosine_topk decomposed into ivf_index_exact +
-ivf_search — same dataflow, bit-identical expected); (c) the six
-r6-era queue lanes q43/q44/q63/q95/q229/q230 (after this window no
-hash lane's latest driver evidence predates r7); and (d)
-twenty-eight oldest-first r7-era fill lanes — the 45-lane r7 cohort
-minus the seventeen (q72/q75/q76/q77/q78/q79/q80/q81/q82/q83/q84/
-q87/q92 plus q68/q69/q65/q64 — the late additions q279/q280 displace
-q72/q75, q281/q282 displace q68/q69, and q283/q284 displace q65/q64)
-that queue for r14.
-
-The round-14 window: (a) the five r14 additions, never
-driver-checked — q285 (BM25 served FROM the maintained store: the
-index store gains the `tf` + 1-row `stats` scoring satellites,
-repaired per batch by the same term-grain upsert rule, and
-`bm25_from_store` tokenizes only query text — oracle = the corpus
-recompute, the r13 verdict's lead item), q286 (n-term phrases served
-from the maintained positional satellite via the alignment join —
-one join + one aggregate for any phrase length, overlap-correct),
-q287 (time-travel retrieval: conjunctive intersections answered AT a
-pinned historical store version — batch-2 ingests and takedowns both
-invisible; oracle = the rebuild over the as-of corpus), q288
-(compaction as a scheduled OFFLINE job between availableNow runs,
-ingest batches delta-sized throughout; oracle = q283's
-rebuild-over-net-corpus contract), q289 (the BM25 drift
-certificate: served-from-store == corpus-recomputed inside one DAG,
-the q274 pattern applied to the serving store) and the late
-addition q290 (BM25 from the BUCKETED serving export: the store's
-tf relation hive-partitioned by engine-portable md5 term bucket, a
-driver-side planner turns the query's terms into a partition
-filter, and the scan prunes to the queried buckets — the Lucene
-term-dictionary seek; oracle = the q285 recompute over a sparser
-query set, displacing q126 to the r15 queue) and q291 (the same
-serving-tier treatment for PHRASES: the positional satellite —
-the store's largest relation at scale — exported bucketed, the
-phrase vocabulary pruning the scan; oracle = q286's raw-text
-recompute, displacing q125 to the r15 queue); (b) five re-proofs
-for everything r14 touched — q283 (the index stream's write order
-now commits each generation with "terms" LAST — the r13-ADVICE
-partial-generation marker — and the advance body grew the satellite
-maintenance), q280 (bm25_topk refactored onto the shared
-_bm25_impact/_bm25_rank helpers — bit-identical by construction),
-q273/q275 (the dedup store's reads are now commit-marker-aware:
-"tombs" filters crash remnants) and q284 (the IVF reads pass the
-same marker); (c) the complete seventeen-lane r7-era queue from the
-r13 rotation (q64/q65/q68/q69/q72/q75/q76/q77/q78/q79/q80/q81/q82/
-q83/q84/q87/q92 — after this window no hash lane's latest driver
-evidence predates r8); and (d) twenty-one oldest-first r8-era fill
-lanes (the 39-lane r8 cohort up to q124; the remaining eighteen —
-q125/q126/q180/q196/q201/q231/q234/q237/q238/q239/q241/q242/q243/
-q88/q89/q90/q93/q99 — queue for r15).
-
-The round-15 window: (a) the nine r15 additions, never
-driver-checked — q292 (BM25 from an INCREMENTALLY refreshed export:
-`refresh_serving_layout` rewrites only the buckets containing terms
-dirtied since the exported version, oracle = the net-corpus
-recompute so the refresh is provably invisible to values — the r14
-verdict's lead item), q293 (conjunctive retrieval from the bucketed
-(index, overflow) export with partition pruning — the q290
-treatment extended to the core factorization; oracle = q279's exact
-intersections over the net corpus), q294 (ANN top-k from the IVF
-serving export: `assigned` hive-partitioned by probe cell, the
-centroid table as the driver-side planner — `term_bucket_py`'s
-geometric twin; oracle = q284's full-pipeline recompute) and q295
-(a TIME-TRAVELED export: the layout pinned at store version 1 after
-the store advanced to 2; oracle = the as-of-corpus BM25 recompute)
-and q296 (ANN top-k from an INCREMENTALLY refreshed IVF export —
-`refresh_ivf_serving_layout` rewrites only the cells receiving new
-assignments and folds takedowns into a delta-sized merge-on-read
-delete-file relation; oracle = q284's full-pipeline recompute) and
-q297 (PROXIMITY ranking — min token gap per term pair, top-k docs —
-served from the pruned positional export via a linear merged-
-adjacency window, never the quadratic occurrence pairing; oracle =
-the quadratic MIN recomputed from raw text, provably the same
-integer) and q298 (the erasure-SLA certificate extended to the
-serving exports — every exported layout scanned in full, postings
-arrays included, refs_to_deleted == 0 with n_rows parity against
-the raw recompute) and q299 (CONTINUOUS serving — index_stream
-refreshes the exported layout inline at the end of every
-micro-batch, so the point-read layout follows the stream with no
-scheduled job; oracle = q292's net-corpus recompute) and q300 (the
-same for the ANN store — ivf_stream's inline merge-on-read refresh;
-oracle = q284's full-pipeline recompute);
-(b) eleven re-proofs for everything r15 touched — the hardened
-commit markers (delta markers now require the marker job's
-_SUCCESS; bases commit via a _COMMITTED sentinel written after the
-last relation) sit under every store-backed lane
-(q283/q273/q275/q284/q285-q291), the satellite upserts became
-deterministic anti-joins (q283/q285/q286/q289), and the shared
-serving export grew to four relations (q290/q291); (c) the complete
-eighteen-lane r8-era queue from the r14 rotation — after this
-window no hash lane's latest driver evidence predates r9; and (d)
-twelve oldest-first r9-era fill lanes (q127-q140 era — the next
-rotation cohort; the remaining r9 lanes, q141-q144/q146 included —
-displaced by the late additions q296-q300 — queue for r16).
-
-The round-16 window: (a) q94_random_forest — the registry's last
-no-oracle row, re-expressed as the deterministic totally-random-
-split forest (operators/forest.py) with a FULL hash oracle, never
-hash-checked before; (b) the twenty store/serving lanes changed in
-round 16 — the r15 ADVICE crash-safety fixes (marker-relation
-_SUCCESS uncommit, delta _COMMITTED migration, staged full-export
-fallbacks, versioned stats pairing) sit under every store-backed
-lane (q273/q275/q283-q300), and the serving reads gained the
-bounded term-collect guard; (c) the complete twenty-six-lane r9-era
-queue from the r15 rotation (q47/q60/q62/q66/q67/q70/q71/q73/q74/
-q85/q91/q96/q97/q141-q144/q146-q148/q240/q244/q246/q252-q254) —
-after this window no lane's latest driver evidence predates r10;
-(d) q301_training_curve — the r16 addition closing SURVEY §2.11's
-M4 as a fully hash-oracled training-loop analogue (suite/ext12) —
-and (e) two oldest-first r10-era fill lanes (q01/q42; q86 queues
-for r17).
+Each lane module registers its builders, with their oracles, in
+`suite.registry` when it is imported; importing this package imports
+them all. The registry orders nothing: the entry adapter
+(`__spark_entry__.queries`) puts the committed rotation sample first.
 """
 
-from patientdataintegration_spark.suite.core import ORACLES as CORE_ORACLES
-from patientdataintegration_spark.suite.core import QUERIES as CORE_QUERIES
-from patientdataintegration_spark.suite.ext import ORACLES as EXT_ORACLES
-from patientdataintegration_spark.suite.ext import QUERIES as EXT_QUERIES
-from patientdataintegration_spark.suite.ext2 import ORACLES as EXT2_ORACLES
-from patientdataintegration_spark.suite.ext2 import QUERIES as EXT2_QUERIES
-from patientdataintegration_spark.suite.ext3 import ORACLES as EXT3_ORACLES
-from patientdataintegration_spark.suite.ext3 import QUERIES as EXT3_QUERIES
-from patientdataintegration_spark.suite.ext4 import ORACLES as EXT4_ORACLES
-from patientdataintegration_spark.suite.ext4 import QUERIES as EXT4_QUERIES
-from patientdataintegration_spark.suite.ext5 import ORACLES as EXT5_ORACLES
-from patientdataintegration_spark.suite.ext5 import QUERIES as EXT5_QUERIES
-from patientdataintegration_spark.suite.ext6 import ORACLES as EXT6_ORACLES
-from patientdataintegration_spark.suite.ext6 import QUERIES as EXT6_QUERIES
-from patientdataintegration_spark.suite.ext7 import ORACLES as EXT7_ORACLES
-from patientdataintegration_spark.suite.ext7 import QUERIES as EXT7_QUERIES
-from patientdataintegration_spark.suite.ext8 import ORACLES as EXT8_ORACLES
-from patientdataintegration_spark.suite.ext8 import QUERIES as EXT8_QUERIES
-from patientdataintegration_spark.suite.ext9 import ORACLES as EXT9_ORACLES
-from patientdataintegration_spark.suite.ext9 import QUERIES as EXT9_QUERIES
-from patientdataintegration_spark.suite.ext10 import ORACLES as EXT10_ORACLES
-from patientdataintegration_spark.suite.ext10 import QUERIES as EXT10_QUERIES
-from patientdataintegration_spark.suite.ext11 import ORACLES as EXT11_ORACLES
-from patientdataintegration_spark.suite.ext11 import QUERIES as EXT11_QUERIES
-from patientdataintegration_spark.suite.ext12 import ORACLES as EXT12_ORACLES
-from patientdataintegration_spark.suite.ext12 import QUERIES as EXT12_QUERIES
-
-_ALL_QUERIES = {
-    **CORE_QUERIES,
-    **EXT_QUERIES,
-    **EXT2_QUERIES,
-    **EXT3_QUERIES,
-    **EXT4_QUERIES,
-    **EXT5_QUERIES,
-    **EXT6_QUERIES,
-    **EXT7_QUERIES,
-    **EXT8_QUERIES,
-    **EXT9_QUERIES,
-    **EXT10_QUERIES,
-    **EXT11_QUERIES,
-    **EXT12_QUERIES,
-}
-_ALL_ORACLES = {
-    **CORE_ORACLES,
-    **EXT_ORACLES,
-    **EXT2_ORACLES,
-    **EXT3_ORACLES,
-    **EXT4_ORACLES,
-    **EXT5_ORACLES,
-    **EXT6_ORACLES,
-    **EXT7_ORACLES,
-    **EXT8_ORACLES,
-    **EXT9_ORACLES,
-    **EXT10_ORACLES,
-    **EXT11_ORACLES,
-    **EXT12_ORACLES,
-}
-
-# Queries registered WITHOUT a SQL oracle, each with its reason —
-# the enumerated exception list the registry-hygiene contract test
-# (tests/test_registry_hygiene.py) checks against. Adding a query
-# here requires a reason AND a pytest lane covering its semantics.
-ROWS_ONLY_REASONS: dict[str, str] = {
-    # EMPTY since r16: q94 — the last rows-only lane — re-expressed
-    # the random forest as the deterministic totally-random-split
-    # variant (operators/forest.py), whose train+score is a pure
-    # relational expression DuckDB replays bit-for-bit. Every one of
-    # the 300 registered queries now carries a full hash oracle. The
-    # MLlib CART path keeps its q224 verdict oracle + pytest bounds.
-}
-
-# The driver-checked prefix, by design exactly 50 names (round-16
-# rotation: see module docstring).
-PRIORITY = [
-    # (a) never hash-checked: q94, the last no-oracle registry row,
-    # now carrying the deterministic-forest full hash oracle, and
-    # q301, the r16 addition (M4 training-loop analogue)
-    "q94_random_forest",
-    "q301_training_curve",
-    # (b) changed in round 16 — re-prove: every store-backed lane
-    # rides the r15-ADVICE crash-safety fixes (marker-relation
-    # _SUCCESS uncommit, delta _COMMITTED migration, staged
-    # full-export fallbacks, versioned stats pairing) and the
-    # serving reads' bounded term-collect guard
-    "q283_streaming_index",
-    "q273_streaming_components",
-    "q275_streaming_takedowns",
-    "q284_streaming_ivf",
-    "q285_bm25_from_store",
-    "q286_phrase_from_store",
-    "q287_index_time_travel",
-    "q288_offline_compaction",
-    "q289_bm25_drift_certificate",
-    "q290_bm25_pruned_serving",
-    "q291_phrase_pruned_serving",
-    "q292_refreshed_pruned_serving",
-    "q293_conjunctive_pruned_serving",
-    "q294_ivf_pruned_serving",
-    "q295_time_travel_export_serving",
-    "q296_ivf_refreshed_serving",
-    "q297_proximity_pruned_serving",
-    "q298_export_erasure_sla",
-    "q299_continuous_serving",
-    "q300_ivf_continuous_serving",
-    # (c) the complete twenty-six-lane r9-era queue from the r15
-    # rotation — after this window no lane's latest driver evidence
-    # predates r10
-    "q47_interval_join",
-    "q60_explode_vocab",
-    "q62_moving_frame",
-    "q66_nation_volume",
-    "q67_market_share",
-    "q70_multi_distinct",
-    "q71_first_nth_value",
-    "q73_quality_checks",
-    "q74_funnel",
-    "q85_session_window",
-    "q91_multimodal_features",
-    "q96_stream_sessionize",
-    "q97_batch_inference",
-    "q141_group_trend",
-    "q142_dedup_impact",
-    "q143_histogram",
-    "q144_event_pmi",
-    "q146_pivot_lang",
-    "q147_retention_cohorts",
-    "q148_markov_transitions",
-    "q240_bloom_incremental_dedup",
-    "q244_cms_brand_frequencies",
-    "q246_nightly_maintenance",
-    "q252_ivf_index_maintenance",
-    "q253_join_view_deletes",
-    "q254_moments_state",
-    # (d) two oldest-first r10-era fill lanes — the next
-    # evidence-rotation cohort (q86 displaced to the r17 queue by the
-    # q301 addition)
-    "q01_pricing_summary",
-    "q42_sessionize",
-]
-
-_missing = [n for n in PRIORITY if n not in _ALL_QUERIES]
-if _missing:
-    raise RuntimeError(f"PRIORITY names not registered: {_missing}")
-
-QUERIES = {name: _ALL_QUERIES[name] for name in PRIORITY}
-QUERIES.update(
-    {name: fn for name, fn in _ALL_QUERIES.items() if name not in QUERIES}
+from patientdataintegration_spark.suite import (  # noqa: F401 - registers the lanes
+    core,
+    ext,
+    ext2,
+    ext3,
+    ext4,
+    ext5,
+    ext6,
+    ext7,
+    ext8,
+    ext9,
+    ext10,
+    ext11,
+    ext12,
 )
-ORACLES = dict(_ALL_ORACLES)
+from patientdataintegration_spark.suite.registry import ORACLES, QUERIES  # noqa: F401

@@ -35,19 +35,7 @@ from patientdataintegration_spark.operators.sampling import sample_per_group
 from patientdataintegration_spark.operators.scoring import group_scores
 from patientdataintegration_spark.operators.splits import assign_folds, balance_audit, fold_to_set
 from patientdataintegration_spark.sources.catalog import load_table
-
-QUERIES: dict = {}
-ORACLES: dict = {}
-
-
-def _register(name: str, sql: str | None = None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if sql is not None:
-            ORACLES[name] = sql
-        return fn
-
-    return deco
+from patientdataintegration_spark.suite.registry import register
 
 
 def dsum(col: Column, alias: str) -> Column:
@@ -136,7 +124,7 @@ def grouped_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- S1/Ext scan + A5 grouped mean + F3 threshold (flagship) ----------------
 
 
-@_register(
+@register(
     "q02_group_scores",
     GROUPED_SQL + "SELECT group_id, group_score, label, cohort, fold, n_items, pred FROM gp",
 )
@@ -152,7 +140,7 @@ def q02_group_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- TPC-H Q1 style pricing summary (A5/A12/A13, decimal-exact) -------------
 
 
-@_register(
+@register(
     "q01_pricing_summary",
     """
     SELECT l_returnflag, l_linestatus,
@@ -197,7 +185,7 @@ def q01_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- A9 balanced accuracy (macro recall) ------------------------------------
 
 
-@_register(
+@register(
     "q03_balanced_accuracy",
     GROUPED_SQL
     + """,
@@ -222,7 +210,7 @@ def q03_balanced_accuracy(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- A10 AUROC via Mann-Whitney rank statistic ------------------------------
 
 
-@_register(
+@register(
     "q04_auroc",
     GROUPED_SQL
     + """,
@@ -252,7 +240,7 @@ def q04_auroc(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- A11 mean ± population std over folds -----------------------------------
 
 
-@_register(
+@register(
     "q05_mean_std_over_folds",
     GROUPED_SQL
     + """,
@@ -303,7 +291,7 @@ def _impute_base(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_register(
+@register(
     "q06_impute_mean",
     f"""
     WITH base AS ({IMPUTE_BASE_SQL}),
@@ -329,7 +317,7 @@ def q06_impute_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- A2/A3 mode imputation (tie -> lowest value) ----------------------------
 
 
-@_register(
+@register(
     "q07_impute_mode",
     f"""
     WITH base AS ({IMPUTE_BASE_SQL}),
@@ -351,7 +339,7 @@ def q07_impute_mode(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- E1 min-max scaling ------------------------------------------------------
 
 
-@_register(
+@register(
     "q08_scale01",
     f"""
     WITH base AS ({IMPUTE_BASE_SQL}),
@@ -377,7 +365,7 @@ def q08_scale01(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- E2 one-hot --------------------------------------------------------------
 
 
-@_register(
+@register(
     "q09_onehot",
     """
     SELECT l_orderkey, l_linenumber,
@@ -402,7 +390,7 @@ def q09_onehot(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- E3/E4 bucketize ---------------------------------------------------------
 
 
-@_register(
+@register(
     "q10_bucketize",
     """
     SELECT c_custkey,
@@ -438,7 +426,7 @@ FOLDS_SQL = f"""
 """
 
 
-@_register(
+@register(
     "q11_fold_assignment",
     f"""
     WITH f AS ({FOLDS_SQL})
@@ -464,7 +452,7 @@ def q11_fold_assignment(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- A4 fold balance audit ---------------------------------------------------
 
 
-@_register(
+@register(
     "q12_balance_audit",
     f"""
     WITH f AS ({FOLDS_SQL}),
@@ -490,7 +478,7 @@ def q12_balance_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- W1 seeded per-group sampling -------------------------------------------
 
 
-@_register(
+@register(
     "q13_sample_per_group",
     f"""
     WITH r AS (
@@ -521,7 +509,7 @@ def q13_sample_per_group(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- U1/P1 cohort union with provenance -------------------------------------
 
 
-@_register(
+@register(
     "q14_union_cohorts",
     """
     WITH u AS (
@@ -555,7 +543,7 @@ def q14_union_cohorts(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- O1 top-1 per group ------------------------------------------------------
 
 
-@_register(
+@register(
     "q15_topk_per_group",
     """
     WITH r AS (
@@ -626,7 +614,7 @@ def _fused(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_register(
+@register(
     "q16_naive_fusion",
     FUSION_SQL + "SELECT group_id, cnn_score, cnn_pred, rf_pred, label, fused_pred FROM fused",
 )
@@ -644,7 +632,7 @@ def q16_naive_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- C2/C8/A14 threshold sweep ----------------------------------------------
 
 
-@_register(
+@register(
     "q17_threshold_sweep",
     GROUPED_SQL
     + """
@@ -681,7 +669,7 @@ def q17_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- join family: semi / anti ------------------------------------------------
 
 
-@_register(
+@register(
     "q18_semi_anti_join",
     """
     SELECT c_custkey, c_name FROM customer c
@@ -712,7 +700,7 @@ def q18_semi_anti_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- set operations ----------------------------------------------------------
 
 
-@_register(
+@register(
     "q19_set_ops",
     """
     SELECT o_custkey FROM orders WHERE o_orderstatus = 'O'
@@ -735,7 +723,7 @@ def q19_set_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- rollup ------------------------------------------------------------------
 
 
-@_register(
+@register(
     "q20_rollup",
     """
     SELECT l_returnflag, l_linestatus, COUNT(*) AS n,
@@ -759,7 +747,7 @@ def q20_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- window lag / running best (events; SURVEY §2.6 extension) --------------
 
 
-@_register(
+@register(
     "q21_window_lag",
     """
     SELECT event_id, user_id, value,
@@ -783,7 +771,7 @@ def q21_window_lag(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_register(
+@register(
     "q22_running_best",
     """
     SELECT event_id, user_id,
@@ -809,7 +797,7 @@ def q22_running_best(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- A7 distinct aggregates --------------------------------------------------
 
 
-@_register(
+@register(
     "q23_distinct_agg",
     """
     SELECT l_returnflag,
@@ -834,7 +822,7 @@ def q23_distinct_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- TPC-H Q3-style shipping priority (scalar-subquery segment filter) ------
 
 
-@_register(
+@register(
     "q24_shipping_priority",
     """
     WITH seg AS (SELECT MIN(c_mktsegment) AS s FROM customer)
@@ -883,7 +871,7 @@ def q24_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- TPC-H Q5-style local supplier volume (multi-join + broadcast dims) -----
 
 
-@_register(
+@register(
     "q25_local_volume",
     """
     SELECT n.n_name,
@@ -926,7 +914,7 @@ def q25_local_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- P2/P3 path parsing ------------------------------------------------------
 
 
-@_register(
+@register(
     "q26_path_parsing",
     r"""
     WITH paths AS (
@@ -972,7 +960,7 @@ def q26_path_parsing(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- conditional-agg status matrix (A4 pivot-style) -------------------------
 
 
-@_register(
+@register(
     "q27_status_matrix",
     """
     SELECT c.c_mktsegment,
@@ -1009,7 +997,7 @@ def q27_status_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- as-of join (temporal; beyond-reference join family) ---------------------
 
 
-@_register(
+@register(
     "q28_asof_join",
     """
     SELECT e.event_id, e.user_id, e.value,
@@ -1046,7 +1034,7 @@ def q28_asof_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- JSON extraction (semi-structured props column) --------------------------
 
 
-@_register(
+@register(
     "q29_json_props",
     """
     SELECT event_type,
@@ -1076,7 +1064,7 @@ def q29_json_props(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- gap-based sessionization (event analytics) -----------------------------
 
 
-@_register(
+@register(
     "q42_sessionize",
     """
     WITH e AS (SELECT user_id, event_id, epoch_us(ts) AS us FROM events),
@@ -1115,7 +1103,7 @@ def q42_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- exact percentiles (order statistics) -----------------------------------
 
 
-@_register(
+@register(
     "q43_percentiles",
     """
     SELECT l_returnflag,
@@ -1143,7 +1131,7 @@ def q43_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- cube / grouping sets ----------------------------------------------------
 
 
-@_register(
+@register(
     "q44_cube",
     """
     SELECT o_orderpriority, o_orderstatus,
@@ -1233,7 +1221,7 @@ FULL_PIPE_SQL = f"""
 """
 
 
-@_register(
+@register(
     "q45_full_pipeline",
     f"""
     WITH {FULL_PIPE_SQL},
@@ -1346,7 +1334,7 @@ def q45_full_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- interval (range) join ---------------------------------------------------
 
 
-@_register(
+@register(
     "q47_interval_join",
     """
     SELECT e.event_id AS error_id, c.event_id AS click_id, e.user_id,
@@ -1389,7 +1377,7 @@ def q47_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- map-typed metric dict (SURVEY §1.4 metric_dict analogue) ---------------
 
 
-@_register(
+@register(
     "q48_metric_map",
     """
     WITH m AS (
@@ -1425,7 +1413,7 @@ def q48_metric_map(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- global top-k (TakeOrderedAndProject, no full sort) ---------------------
 
 
-@_register(
+@register(
     "q49_global_topk",
     """
     SELECT o_orderkey, o_totalprice FROM orders
@@ -1457,7 +1445,7 @@ def _as_views(spark: SparkSession, sf_dir: str, *tables: str) -> None:
         load_table(spark, sf_dir, t).createOrReplaceTempView(t)
 
 
-@_register(
+@register(
     "q50_exists_correlated",
     """
     SELECT o_orderpriority, COUNT(*) AS n_orders
@@ -1494,7 +1482,7 @@ def q50_exists_correlated(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_register(
+@register(
     "q51_scalar_subquery",
     """
     SELECT CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,6))) AS DOUBLE) / 7.0
@@ -1534,7 +1522,7 @@ def q51_scalar_subquery(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- unpivot / melt (wide -> long reshaping) --------------------------------
 
 
-@_register(
+@register(
     "q52_unpivot",
     """
     SELECT p_partkey, 'size' AS metric, CAST(p_size AS DOUBLE) AS value
@@ -1561,7 +1549,7 @@ def q52_unpivot(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- HAVING + join-back (TPC-H Q18 large-volume groups) ---------------------
 
 
-@_register(
+@register(
     "q53_having_join_back",
     """
     SELECT c_name, o.o_orderkey, o_totalprice, t.sum_qty
@@ -1600,7 +1588,7 @@ def q53_having_join_back(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- ntile / percent_rank deciles -------------------------------------------
 
 
-@_register(
+@register(
     "q54_spend_deciles",
     """
     SELECT decile,
@@ -1657,7 +1645,7 @@ def q54_spend_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- quantile binning (the 100 TB spelling of decile bucketing) -------------
 
 
-@_register(
+@register(
     "q55_quantile_binning",
     """
     WITH e AS (
@@ -1709,7 +1697,7 @@ def q55_quantile_binning(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- pivot (long -> wide reshaping, q52's inverse) --------------------------
 
 
-@_register(
+@register(
     "q56_pivot_status",
     """
     SELECT o_orderpriority,
@@ -1741,7 +1729,7 @@ def q56_pivot_status(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- anti join via NOT EXISTS (complement of q50) ---------------------------
 
 
-@_register(
+@register(
     "q57_not_exists_anti",
     """
     SELECT c_nationkey, COUNT(*) AS n_customers,
@@ -1775,7 +1763,7 @@ def q57_not_exists_anti(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- full outer join of two aggregates --------------------------------------
 
 
-@_register(
+@register(
     "q58_full_outer",
     """
     SELECT COALESCE(a.nk, b.nk) AS nationkey, a.n_cust, b.n_supp
@@ -1815,7 +1803,7 @@ def q58_full_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- grouping sets (the general form of rollup/cube) ------------------------
 
 
-@_register(
+@register(
     "q59_grouping_sets",
     """
     SELECT o_orderpriority, o_orderstatus,
@@ -1849,7 +1837,7 @@ def q59_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- calendar arithmetic battery --------------------------------------------
 
 
-@_register(
+@register(
     "q61_date_battery",
     """
     WITH o AS (SELECT CAST(o_orderdate AS DATE) AS od FROM orders)
@@ -1887,7 +1875,7 @@ def q61_date_battery(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- CDC latest-per-key dedup (upsert compaction) ---------------------------
 
 
-@_register(
+@register(
     "q63_latest_per_key",
     """
     SELECT user_id, event_id, epoch_us(ts) AS ts_us, event_type
@@ -1924,7 +1912,7 @@ def q63_latest_per_key(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- string-function battery -------------------------------------------------
 
 
-@_register(
+@register(
     "q64_string_battery",
     """
     SELECT p_brand,
@@ -1970,7 +1958,7 @@ def q64_string_battery(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- exact per-label embedding centroids ------------------------------------
 
 
-@_register(
+@register(
     "q65_label_centroids",
     """
     WITH dims AS (
@@ -2011,7 +1999,7 @@ def q65_label_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- TPC-H Q7 shape: bi-nation shipping volume ------------------------------
 
 
-@_register(
+@register(
     "q66_nation_volume",
     """
     SELECT n1.n_name AS supp_nation, n2.n_name AS cust_nation,
@@ -2074,7 +2062,7 @@ def q66_nation_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- TPC-H Q8 shape: market share ratio -------------------------------------
 
 
-@_register(
+@register(
     "q67_market_share",
     """
     WITH vol AS (
@@ -2147,7 +2135,7 @@ def q67_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- array-function battery --------------------------------------------------
 
 
-@_register(
+@register(
     "q68_array_battery",
     """
     WITH t AS (
@@ -2201,7 +2189,7 @@ def q68_array_battery(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- forward fill (last non-null, IGNORE NULLS window) ----------------------
 
 
-@_register(
+@register(
     "q69_forward_fill",
     """
     WITH e AS (
@@ -2241,7 +2229,7 @@ def q69_forward_fill(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- multiple DISTINCT aggregates in one pass -------------------------------
 
 
-@_register(
+@register(
     "q70_multi_distinct",
     """
     SELECT o_orderpriority,
@@ -2275,7 +2263,7 @@ def q70_multi_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- first_value / nth_value windows ----------------------------------------
 
 
-@_register(
+@register(
     "q71_first_nth_value",
     """
     SELECT user_id,
@@ -2315,7 +2303,7 @@ def q71_first_nth_value(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- declarative data-quality gate ------------------------------------------
 
 
-@_register(
+@register(
     "q73_quality_checks",
     """
     WITH base AS (
@@ -2382,7 +2370,7 @@ def q73_quality_checks(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- funnel analysis (ordered multi-step conversion) ------------------------
 
 
-@_register(
+@register(
     "q74_funnel",
     """
     WITH per_user AS (
@@ -2431,7 +2419,7 @@ def q74_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- retention cohorts -------------------------------------------------------
 
 
-@_register(
+@register(
     "q75_retention_cohorts",
     """
     WITH firsts AS (
@@ -2480,7 +2468,7 @@ def q75_retention_cohorts(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- deterministic stratified sampling (fraction per stratum) ---------------
 
 
-@_register(
+@register(
     "q76_stratified_sample",
     """
     WITH s AS (
@@ -2555,7 +2543,7 @@ _GROUPING_BATTERY_SQL = """
     """
 
 
-@_register("q78_grouping_battery", _GROUPING_BATTERY_SQL)
+@register("q78_grouping_battery", _GROUPING_BATTERY_SQL)
 def q78_grouping_battery(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ROLLUP + CUBE + GROUPING SETS over orders in one result (A4
     family, q20/q44/q59 consolidated). Each arm is a single Expand-
@@ -2571,7 +2559,7 @@ def q78_grouping_battery(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_register(
+@register(
     "q79_subquery_battery",
     """
     SELECT 'exists' AS battery, o_orderpriority AS key,

@@ -4,10 +4,9 @@ BASELINE.json) over `documents` / `embeddings` / `events`.
 
 Oracle twins are generated alongside (md5-derived hashes and pure
 integer/sequential-fold arithmetic keep them bit-exact — see
-suite/__init__). Queries that are NOT SQL-expressible (structured
-streaming, pandas-UDF multimodal lane) are registered without an
-oracle — the driver then applies its weaker rows-only check, and
-pytest covers their semantics instead.
+suite/__init__). Every lane registers with one, the structured-
+streaming and pandas-UDF multimodal lanes included: their twins
+replay the engine's micro-batch and decode semantics in SQL.
 
 Scale stance (100 TB): the dedup/similarity lanes never enumerate
 the quadratic pair space (banded LSH bucket joins, blocked jaccard
@@ -41,19 +40,7 @@ from patientdataintegration_spark.operators.textops import (
     tokens,
 )
 from patientdataintegration_spark.sources.catalog import load_table
-
-QUERIES: dict = {}
-ORACLES: dict = {}
-
-
-def _register(name: str, sql: str | None = None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if sql is not None:
-            ORACLES[name] = sql
-        return fn
-
-    return deco
+from patientdataintegration_spark.suite.registry import register
 
 
 HEX_HASH_SQL = "CAST(('0x' || substr(md5({col}), 1, 14)) AS BIGINT)"
@@ -62,7 +49,7 @@ HEX_HASH_SQL = "CAST(('0x' || substr(md5({col}), 1, 14)) AS BIGINT)"
 # --- text analysis -----------------------------------------------------------
 
 
-@_register(
+@register(
     "q30_token_stats",
     """
     WITH t AS (SELECT doc_id, string_split(text, ' ') AS toks, text FROM documents)
@@ -111,7 +98,7 @@ def _lang_sql() -> str:
     """
 
 
-@_register("q31_lang_id", _lang_sql())
+@register("q31_lang_id", _lang_sql())
 def q31_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     """N-gram-heuristic language ID (the fasttext-free lane):
     per-language stopword/marker scores from one tokenization, argmax
@@ -127,7 +114,7 @@ def q31_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- exact dedup -------------------------------------------------------------
 
 
-@_register(
+@register(
     "q32_exact_dedup",
     r"""
     WITH fp AS (
@@ -165,7 +152,7 @@ NGRAM_SH_SQL = """
 """
 
 
-@_register(
+@register(
     "q33_ngram_jaccard",
     f"""
     WITH {NGRAM_SH_SQL},
@@ -217,7 +204,7 @@ def _minhash_sql(k: int = 8, seed: int = 42) -> str:
     """
 
 
-@_register("q34_minhash_signatures", _minhash_sql())
+@register("q34_minhash_signatures", _minhash_sql())
 def q34_minhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash signatures (k=8) over word-shingle sets —
     stage 1 of the LSH near-dup pipeline (`operators/dedup.
@@ -254,7 +241,7 @@ def _simhash_sql(bits: int = 16) -> str:
     """
 
 
-@_register("q35_simhash", _simhash_sql())
+@register("q35_simhash", _simhash_sql())
 def q35_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """16-bit SimHash per document (`operators/dedup.simhash`):
     sign-aggregated per-bit votes over token hashes. Scale: computed
@@ -337,7 +324,7 @@ def _rh_sig_sql(vec: str, dim: int, n_planes: int, seed: int) -> str:
 _Q36_PLANES = 4
 
 
-@_register(
+@register(
     "q36_cosine_topk",
     f"""
     WITH v AS (
@@ -381,7 +368,7 @@ def q36_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- event-time tumbling window ---------------------------------------------
 
 
-@_register(
+@register(
     "q37_events_tumbling",
     """
     SELECT CAST(FLOOR(epoch(ts) / 300) AS BIGINT) * 300 AS bucket,
@@ -410,7 +397,7 @@ def q37_events_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- quality-gate filter (curation pipeline) --------------------------------
 
 
-@_register(
+@register(
     "q38_quality_filter",
     """
     WITH t AS (SELECT doc_id, lang, text, string_split(text, ' ') AS toks FROM documents),
@@ -448,10 +435,10 @@ def q38_quality_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# --- rows-only lanes (not SQL-expressible; pytest covers semantics) ---------
+# --- structured-streaming event-time tumbling window -------------------------
 
 
-@_register(
+@register(
     "q90_stream_tumbling",
     """
     SELECT CAST(FLOOR(epoch(ts) / 300) AS BIGINT) * 300 AS bucket,
@@ -499,7 +486,7 @@ _Q91_SQL = """
     """
 
 
-@_register("q91_multimodal_features", _Q91_SQL)
+@register("q91_multimodal_features", _Q91_SQL)
 def q91_multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Multimodal decode lane: synthetic binary tiles from `part` →
     Arrow-batched mapInPandas feature extraction. The tile payloads
@@ -829,7 +816,7 @@ def cached_stream_seed_positions(
     return cached_parquet(spark, "positions_seed0", [docs_path], build)
 
 
-@_register("q92_minhash_lsh_pairs", _lsh_pairs_sql())
+@register("q92_minhash_lsh_pairs", _lsh_pairs_sql())
 def q92_minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash-LSH candidate near-dup pairs (bands=4, rows=2).
     Oracle-checkable end-to-end because every stage (shingle hash,
@@ -864,7 +851,7 @@ def _q93_sql() -> str:
     """
 
 
-@_register("q93_lsh_cosine_topk", _q93_sql())
+@register("q93_lsh_cosine_topk", _q93_sql())
 def q93_lsh_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Random-hyperplane-bucketed approximate cosine top-k at a finer
     bucketing than q36 (6 planes → 64 buckets vs 16): the higher-
@@ -881,7 +868,7 @@ def q93_lsh_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- sliding event-time windows ---------------------------------------------
 
 
-@_register(
+@register(
     "q39_events_sliding",
     """
     WITH b AS (
@@ -940,7 +927,7 @@ def _q40_sql() -> str:
     """
 
 
-@_register("q40_embedding_neardup", _q40_sql())
+@register("q40_embedding_neardup", _q40_sql())
 def q40_embedding_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Embedding-cosine near-dup candidates with the SCALE-CORRECT
     blocking key: a random-hyperplane LSH bucket (32 buckets), so the
@@ -965,7 +952,7 @@ def q40_embedding_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- winnowing fingerprints --------------------------------------------------
 
 
-@_register(
+@register(
     "q41_winnowing_fp",
     """
     WITH toks AS (
@@ -1013,7 +1000,7 @@ def _q94_sql() -> str:
     return deterministic_forest_oracle_sql()
 
 
-@_register("q94_random_forest", _q94_sql())
+@register("q94_random_forest", _q94_sql())
 def q94_random_forest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """RF train+score on customer tabular features — the reference's
     hyperparameters (numTrees=121, maxDepth=5, ipynb cell 10:37-41)
@@ -1040,10 +1027,10 @@ def q94_random_forest(spark: SparkSession, sf_dir: str) -> DataFrame:
     return deterministic_forest_scores(spark, sf_dir)
 
 
-# --- approximate distinct sketch (rows-only) --------------------------------
+# --- approximate distinct sketch ---------------------------------------------
 
 
-@_register(
+@register(
     "q95_approx_distinct",
     """
     SELECT event_type,
@@ -1079,10 +1066,10 @@ def q95_approx_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# --- stateful streaming sessionization (rows-only) --------------------------
+# --- stateful streaming sessionization ---------------------------------------
 
 
-@_register(
+@register(
     "q96_stream_sessionize",
     """
     WITH e AS (SELECT user_id, event_id, epoch_us(ts) AS us FROM events),
@@ -1166,7 +1153,7 @@ _Q97_SQL = """
     """
 
 
-@_register("q97_batch_inference", _Q97_SQL)
+@register("q97_batch_inference", _Q97_SQL)
 def q97_batch_inference(spark: SparkSession, sf_dir: str) -> DataFrame:
     """M2 analogue: load-once model scoring over binary tiles via
     mapInPandas (stub model; the Spark-side amortization shape is
@@ -1232,7 +1219,7 @@ def _q98_sql(k: int = 3, n_cells: int = 16, n_probe: int = 4,
     """
 
 
-@_register("q98_ivf_cosine_topk", _q98_sql())
+@register("q98_ivf_cosine_topk", _q98_sql())
 def q98_ivf_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """FAISS-style IVF ANN: kmeans coarse quantizer + n_probe cells
     + exact rerank (the sibling scale path to q93's hyperplane LSH).
@@ -1286,7 +1273,7 @@ def q98_ivf_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).withColumnRenamed("rank", "rnk")
 
 
-@_register(
+@register(
     "q46_tfidf_top_terms",
     """
     WITH toks AS (
@@ -1322,7 +1309,7 @@ def q46_tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     return tfidf_top_terms(d, k=3)
 
 
-@_register(
+@register(
     "q99_stream_stream_join",
     """
     SELECT e.event_id AS error_id, c.event_id AS click_id, e.user_id,
@@ -1352,7 +1339,7 @@ def q99_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- lateral explode + re-aggregation ---------------------------------------
 
 
-@_register(
+@register(
     "q60_explode_vocab",
     """
     SELECT lang,
@@ -1382,7 +1369,7 @@ def q60_explode_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- moving row-frame window over event time --------------------------------
 
 
-@_register(
+@register(
     "q62_moving_frame",
     """
     SELECT event_id, event_type,
@@ -1417,7 +1404,7 @@ def q62_moving_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_register(
+@register(
     "q88_stream_static_enrich",
     """
     SELECT c_mktsegment, event_type,
@@ -1442,7 +1429,7 @@ def q88_stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     return enrich_stream_static(spark, sf_dir)
 
 
-@_register(
+@register(
     "q89_stream_dedup",
     """
     SELECT event_id, epoch_us(ts) AS ts_us, user_id, event_type, value
@@ -1476,7 +1463,7 @@ def q89_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- BPE-ish regex tokenizer (subword-style token counting) -----------------
 
 
-@_register(
+@register(
     "q72_regex_tokens",
     r"""
     WITH t AS (
@@ -1547,7 +1534,7 @@ def _q86_sql() -> str:
     """
 
 
-@_register("q86_dedup_clusters", _q86_sql())
+@register("q86_dedup_clusters", _q86_sql())
 def q86_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Full near-dup pipeline tail: LSH candidate pairs → connected
     components → canonical selection. Emits one row per document
@@ -1574,7 +1561,7 @@ def q86_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select("doc_id", "cluster", "rank_in_cluster", "is_canonical")
 
 
-@_register(
+@register(
     "q85_session_window",
     """
     WITH e AS (SELECT user_id, event_id, epoch_us(ts) AS us FROM events),
@@ -1667,7 +1654,7 @@ def _fusion_battery_sql() -> str:
     """
 
 
-@_register("q77_fusion_battery", _fusion_battery_sql())
+@register("q77_fusion_battery", _fusion_battery_sql())
 def q77_fusion_battery(spark: SparkSession, sf_dir: str) -> DataFrame:
     """C5/C6/C7 in one scan — the paper's three fusion approaches as
     column expressions over the embeddings table (channels simulated
@@ -1733,7 +1720,7 @@ def q77_fusion_battery(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- window-function battery (moving frame / ffill / journey) ---------------
 
 
-@_register(
+@register(
     "q80_window_battery",
     """
     WITH mov AS (
@@ -1843,7 +1830,7 @@ CHUNKING_ORACLE_SQL = """
     """
 
 
-@_register("q81_chunking", CHUNKING_ORACLE_SQL)
+@register("q81_chunking", CHUNKING_ORACLE_SQL)
 def q81_chunking(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sliding-window chunking (64-token windows, 16-token overlap) —
     the LLM context-window prep step as pure array expressions."""
@@ -1853,7 +1840,7 @@ def q81_chunking(spark: SparkSession, sf_dir: str) -> DataFrame:
     return chunk_documents(d, chunk_size=64, overlap=16)
 
 
-@_register(
+@register(
     "q82_token_rarity",
     """
     WITH toks AS (
@@ -1882,7 +1869,7 @@ def q82_token_rarity(spark: SparkSession, sf_dir: str) -> DataFrame:
     return token_rarity(d)
 
 
-@_register(
+@register(
     "q83_contamination",
     f"""
     WITH {NGRAM_SH_SQL},
@@ -1912,7 +1899,7 @@ def q83_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     return contamination_check(cand, bench)
 
 
-@_register(
+@register(
     "q84_quantize_embeddings",
     """
     WITH q AS (
@@ -1959,7 +1946,7 @@ def q84_quantize_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- multi-resolution time rollup + PII redaction ---------------------------
 
 
-@_register(
+@register(
     "q87_multires_rollup",
     """
     SELECT CAST(epoch(date_trunc('day', ts)) AS BIGINT) AS day_s,
@@ -2001,7 +1988,7 @@ def q87_multires_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_register(
+@register(
     "q100_redaction",
     r"""
     WITH aug AS (
@@ -2052,7 +2039,7 @@ def q100_redaction(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- CDC upsert merge + time-weighted average -------------------------------
 
 
-@_register(
+@register(
     "q101_upsert_merge",
     """
     WITH base AS (
@@ -2125,7 +2112,7 @@ def q101_upsert_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_register(
+@register(
     "q102_time_weighted_avg",
     """
     WITH t AS (
@@ -2188,7 +2175,7 @@ def q102_time_weighted_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- VARIANT (semi-structured) battery --------------------------------------
 
 
-@_register(
+@register(
     "q103_variant_battery",
     """
     WITH j AS (
@@ -2288,7 +2275,7 @@ def _q104_sql() -> str:
     """
 
 
-@_register("q104_audio_metadata", _q104_sql())
+@register("q104_audio_metadata", _q104_sql())
 def q104_audio_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Audio modality lane end-to-end: deterministic RIFF/WAVE
     payloads (synthetic_wavs over the part table) through the REAL
@@ -2332,7 +2319,7 @@ def q104_audio_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- within-document repetition signals (Gopher-rule family) ----------------
 
 
-@_register(
+@register(
     "q105_repetition_signals",
     """
     WITH toks AS (
@@ -2400,7 +2387,7 @@ def _q106_sql() -> str:
     """
 
 
-@_register("q106_token_budget_sample", _q106_sql())
+@register("q106_token_budget_sample", _q106_sql())
 def q106_token_budget_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Downsample the corpus to a deterministic 1500-token budget per
     source — the "N tokens per source" mixing step of training-set
@@ -2420,7 +2407,7 @@ _TOKENS_SQL = (
 )
 
 
-@_register(
+@register(
     "q107_jsonl_roundtrip",
     f"""
     SELECT source,
@@ -2488,7 +2475,7 @@ def _q108_sql(seq_len: int = 512) -> str:
     """
 
 
-@_register("q108_sequence_packing", _q108_sql())
+@register("q108_sequence_packing", _q108_sql())
 def q108_sequence_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Concat-and-chop packing manifest: each document's pack id,
     offset, and straddle count for 512-token training sequences,
@@ -2503,7 +2490,7 @@ def q108_sequence_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- shard manifest ----------------------------------------------------------
 
 
-@_register(
+@register(
     "q109_shard_manifest",
     f"""
     WITH s AS (
@@ -2534,7 +2521,7 @@ def q109_shard_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- inverted index ----------------------------------------------------------
 
 
-@_register(
+@register(
     "q110_inverted_index",
     """
     WITH t AS (
@@ -2601,7 +2588,7 @@ def _q111_sql() -> str:
     """
 
 
-@_register("q111_zorder_layout", _q111_sql())
+@register("q111_zorder_layout", _q111_sql())
 def q111_zorder_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Z-order clustering audit: events bucketed by the top bits of
     the Morton code of (user_id, value). Each bucket's min/max spans
@@ -2642,7 +2629,7 @@ def q111_zorder_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- winsorization -----------------------------------------------------------
 
 
-@_register(
+@register(
     "q112_winsorize",
     """
     WITH r AS (
@@ -2678,7 +2665,7 @@ def q112_winsorize(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- skew-neutralized join ---------------------------------------------------
 
 
-@_register(
+@register(
     "q113_salted_join",
     """
     SELECT c.c_mktsegment AS c_mktsegment,
@@ -2714,7 +2701,7 @@ def q113_salted_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- incremental rollup maintenance ------------------------------------------
 
 
-@_register(
+@register(
     "q114_incremental_rollup",
     """
     SELECT o_orderpriority,
@@ -2784,7 +2771,7 @@ def _q115_sql() -> str:
     """
 
 
-@_register("q115_components_star", _q115_sql())
+@register("q115_components_star", _q115_sql())
 def q115_components_star(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-dup clusters via the O(log n)-round large-star/small-star
     algorithm (`dedup.connected_components_star`) over MinHash-LSH
@@ -2806,7 +2793,7 @@ def q115_components_star(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- bucketed co-located join (shuffle paid once, at write time) -------------
 
 
-@_register(
+@register(
     "q116_bucketed_join",
     """
     SELECT c.c_mktsegment AS c_mktsegment,
@@ -2854,7 +2841,7 @@ def q116_bucketed_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- incremental dedup against a fingerprint store ---------------------------
 
 
-@_register(
+@register(
     "q117_incremental_dedup",
     r"""
     WITH fp AS (
@@ -2921,7 +2908,7 @@ def _q118_profile_sql() -> str:
     return " UNION ALL ".join(parts)
 
 
-@_register("q118_profile", _q118_profile_sql())
+@register("q118_profile", _q118_profile_sql())
 def q118_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Admission-gate profiling: stats for 4 lineitem columns in ONE
     scan + one hash aggregate (`operators/profiling.profile`); the
@@ -2960,7 +2947,7 @@ def _q119_sql(bands: int = 4, rows_per_band: int = 2, seed: int = 42) -> str:
     """
 
 
-@_register("q119_crosscorpus_neardup", _q119_sql())
+@register("q119_crosscorpus_neardup", _q119_sql())
 def q119_crosscorpus_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Decontamination-shaped LSH: near-dup candidates BETWEEN the
     'training' slice (70% of docs, playing the persisted banded-key
@@ -2981,7 +2968,7 @@ def q119_crosscorpus_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- source-mixture reweighting ----------------------------------------------
 
 
-@_register(
+@register(
     "q120_mixture_weights",
     """
     WITH per AS (
@@ -3015,7 +3002,7 @@ def q120_mixture_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- time-grid resample with linear interpolation ----------------------------
 
 
-@_register(
+@register(
     "q121_resample_interp",
     """
     WITH obs AS (
@@ -3116,7 +3103,7 @@ def _q122_sql() -> str:
     """
 
 
-@_register("q122_realize_mixture", _q122_sql())
+@register("q122_realize_mixture", _q122_sql())
 def q122_realize_mixture(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Materialized curriculum: every doc appears floor(weight)
     times plus a fractional epoch drawn by the engine-portable
@@ -3138,7 +3125,7 @@ def q122_realize_mixture(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- vocabulary coverage curve ----------------------------------------------
 
 
-@_register(
+@register(
     "q123_vocab_coverage",
     """
     WITH tok AS (SELECT unnest(string_split(text, ' ')) AS token FROM documents),
@@ -3169,7 +3156,7 @@ def q123_vocab_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- forward / nearest as-of joins ------------------------------------------
 
 
-@_register(
+@register(
     "q124_asof_forward",
     """
     SELECT e.event_id, e.user_id, e.value,
@@ -3208,7 +3195,7 @@ def q124_asof_forward(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_register(
+@register(
     "q125_asof_nearest",
     """
     WITH e AS (SELECT * FROM events WHERE event_type = 'error'),
@@ -3271,7 +3258,7 @@ def q125_asof_nearest(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- sparse tf-idf cosine similarity join -----------------------------------
 
 
-@_register(
+@register(
     "q126_sparse_cosine_pairs",
     """
     WITH toks AS (
@@ -3352,7 +3339,7 @@ def _q127_sql() -> str:
     """
 
 
-@_register("q127_weighted_sample", _q127_sql())
+@register("q127_weighted_sample", _q127_sql())
 def q127_weighted_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic weighted sampling without replacement (5 docs per
     language, weight = n_chars) via the Efraimidis-Spirakis A-ES
@@ -3372,7 +3359,7 @@ def q127_weighted_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- SCD2 history build / robust stats / PageRank ---------------------------
 
 
-@_register(
+@register(
     "q128_scd2_history",
     """
     SELECT user_id,
@@ -3395,7 +3382,7 @@ def q128_scd2_history(spark: SparkSession, sf_dir: str) -> DataFrame:
     return scd2_intervals(e)
 
 
-@_register(
+@register(
     "q129_robust_stats",
     """
     WITH med AS (
@@ -3473,7 +3460,7 @@ def _q130_sql(iterations: int = 3) -> str:
     """
 
 
-@_register("q130_pagerank", _q130_sql())
+@register("q130_pagerank", _q130_sql())
 def q130_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Fixed-iteration PageRank (3 rounds, d=0.85) over the MinHash-
     LSH candidate near-dup graph (`operators/graph.pagerank`): each
@@ -3503,7 +3490,7 @@ def q130_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- paragraph-level dedup signals ------------------------------------------
 
 
-@_register(
+@register(
     "q131_paragraph_dedup",
     """
     WITH t AS (SELECT doc_id, string_split(lower(trim(text)), ' ') AS tk FROM documents),
@@ -3560,7 +3547,7 @@ def _q132_sql(k: int = 8, iterations: int = 2, dim: int = 64) -> str:
     """
 
 
-@_register("q132_kmeans_assign", _q132_sql())
+@register("q132_kmeans_assign", _q132_sql())
 def q132_kmeans_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic Lloyd's k-means (k=8, 2 rounds + final assign)
     over the embeddings table (`operators/clustering.kmeans_assign`)
@@ -3579,7 +3566,7 @@ def q132_kmeans_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- EWMA smoothing / source KL divergence ----------------------------------
 
 
-@_register(
+@register(
     "q133_ewma",
     """
     WITH w AS (
@@ -3634,7 +3621,7 @@ def q133_ewma(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_register(
+@register(
     "q134_source_kl",
     """
     WITH toks AS (
@@ -3696,7 +3683,7 @@ def q134_source_kl(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- sessionized funnel / growth accounting ---------------------------------
 
 
-@_register(
+@register(
     "q135_session_funnel",
     """
     WITH e AS (SELECT user_id, event_id, event_type, epoch_us(ts) AS us FROM events),
@@ -3774,7 +3761,7 @@ def q135_session_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_register(
+@register(
     "q136_growth_accounting",
     """
     WITH wk AS (
@@ -3827,7 +3814,7 @@ def q136_growth_accounting(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- blocked fuzzy (edit-distance) join -------------------------------------
 
 
-@_register(
+@register(
     "q137_fuzzy_join",
     """
     WITH names AS (SELECT DISTINCT p_name AS name FROM part),
@@ -3880,7 +3867,7 @@ _Q138_SELECT = """
     """
 
 
-@_register(
+@register(
     "q138_reachability",
     f"WITH RECURSIVE pairs AS ({_lsh_pairs_sql()}),\n"
     f"{_q138_reach_ctes('pairs')}{_Q138_SELECT}",
@@ -3941,7 +3928,7 @@ def _q139_sql() -> str:
     return "WITH agg AS (SELECT " + ", ".join(sums) + " FROM lineitem)\n" + "\nUNION ALL ".join(pair_rows)
 
 
-@_register("q139_correlation_matrix", _q139_sql())
+@register("q139_correlation_matrix", _q139_sql())
 def q139_correlation_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pairwise Pearson correlation across the numeric lineitem
     columns in ONE scan + one single-row aggregate: all sums
@@ -3998,7 +3985,7 @@ def q139_correlation_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- categorical mutual information -----------------------------------------
 
 
-@_register(
+@register(
     "q140_mutual_information",
     """
     WITH joint AS (
@@ -4052,7 +4039,7 @@ def q140_mutual_information(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- per-group OLS trend ----------------------------------------------------
 
 
-@_register(
+@register(
     "q141_group_trend",
     """
     WITH base AS (
@@ -4132,7 +4119,7 @@ def q141_group_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- dedup impact report ----------------------------------------------------
 
 
-@_register(
+@register(
     "q142_dedup_impact",
     f"""
     WITH comp AS ({_q115_sql()}),
@@ -4176,7 +4163,7 @@ def q142_dedup_impact(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- equi-width histogram / event co-occurrence PMI -------------------------
 
 
-@_register(
+@register(
     "q143_histogram",
     """
     WITH b AS (
@@ -4226,7 +4213,7 @@ def q143_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_register(
+@register(
     "q144_event_pmi",
     """
     WITH ut AS (SELECT DISTINCT user_id, event_type FROM events),

@@ -39,19 +39,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from patientdataintegration_spark.sources.catalog import load_table
-
-QUERIES: dict = {}
-ORACLES: dict = {}
-
-
-def _register(name: str, sql: str | None = None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if sql is not None:
-            ORACLES[name] = sql
-        return fn
-
-    return deco
+from patientdataintegration_spark.suite.registry import register
 
 
 # shared CRUD schedule (the q283 shape): the store seeds from the
@@ -232,7 +220,7 @@ def _q285_sql(k: int = 5) -> str:
     """
 
 
-@_register("q285_bm25_from_store", _q285_sql())
+@register("q285_bm25_from_store", _q285_sql())
 def q285_bm25_from_store(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BM25 top-k SERVED FROM THE MAINTAINED STORE
     (`operators/indexing.bm25_from_store`) — the r13 verdict's lead
@@ -327,7 +315,7 @@ def _q286_sql(top_n: int = 10) -> str:
     """
 
 
-@_register("q286_phrase_from_store", _q286_sql())
+@register("q286_phrase_from_store", _q286_sql())
 def q286_phrase_from_store(spark: SparkSession, sf_dir: str) -> DataFrame:
     """N-term PHRASES served from the MAINTAINED positional satellite
     (`operators/indexing.phrase_retrieval_nterm` over the store's
@@ -432,7 +420,7 @@ def _q287_sql(top_n: int = 10) -> str:
     """
 
 
-@_register("q287_index_time_travel", _q287_sql())
+@register("q287_index_time_travel", _q287_sql())
 def q287_index_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TIME-TRAVEL retrieval serving (r13 verdict item 6): a
     conjunctive query answered AT A PINNED HISTORICAL VERSION of the
@@ -501,7 +489,7 @@ def _q288_sql() -> str:
     return _q283_sql()
 
 
-@_register("q288_offline_compaction", _q288_sql())
+@register("q288_offline_compaction", _q288_sql())
 def q288_offline_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Compaction as a SCHEDULED MAINTENANCE JOB (r13 verdict item
     5): q283 folds generations INLINE every `compact_every` batches —
@@ -551,7 +539,7 @@ def _q289_sql(k: int = 5) -> str:
     """
 
 
-@_register("q289_bm25_drift_certificate", _q289_sql())
+@register("q289_bm25_drift_certificate", _q289_sql())
 def q289_bm25_drift_certificate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The BM25 DRIFT CERTIFICATE (r13 verdict stretch item 7) — the
     q274 certificate pattern applied to the serving store: after the
@@ -668,7 +656,7 @@ def _q290_sql(k: int = 5) -> str:
     """
 
 
-@_register("q290_bm25_pruned_serving", _q290_sql())
+@register("q290_bm25_pruned_serving", _q290_sql())
 def q290_bm25_pruned_serving(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BM25 served from the BUCKETED SERVING EXPORT with partition
     pruning (`streaming/index.export_serving_layout` +
@@ -713,8 +701,7 @@ def _pruned_bm25_serve(
     from patientdataintegration_spark.operators.textops import tokens
     from patientdataintegration_spark.streaming.index import (
         collect_pruning_terms,
-        read_serving_relation,
-        read_serving_stats,
+        read_serving_relations,
     )
 
     d = load_table(spark, sf_dir, "documents")
@@ -726,8 +713,9 @@ def _pruned_bm25_serve(
             F.explode(F.array_distinct(tokens(F.col("text")))).alias("term")
         ).filter(F.col("term") != "")
     )
-    tf_pruned = read_serving_relation(spark, out, "tf", terms)
-    stats = read_serving_stats(spark, out)
+    tf_pruned, stats = read_serving_relations(
+        spark, out, ["tf", "stats"], terms
+    )
     return bm25_from_store(tf_pruned, stats, queries, k=k, k1=1.2, b=0.75)
 
 
@@ -738,7 +726,7 @@ def _q291_sql(top_n: int = 10) -> str:
     return _q286_sql(top_n)
 
 
-@_register("q291_phrase_pruned_serving", _q291_sql())
+@register("q291_phrase_pruned_serving", _q291_sql())
 def q291_phrase_pruned_serving(spark: SparkSession, sf_dir: str) -> DataFrame:
     """N-term phrases from the BUCKETED POSITIONAL EXPORT with
     partition pruning — q290's serving-tier treatment applied to the

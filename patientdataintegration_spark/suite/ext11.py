@@ -53,19 +53,7 @@ from patientdataintegration_spark.suite.ext10 import (
     _pruned_bm25_serve,
     _stream_crud_store,
 )
-
-QUERIES: dict = {}
-ORACLES: dict = {}
-
-
-def _register(name: str, sql: str | None = None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if sql is not None:
-            ORACLES[name] = sql
-        return fn
-
-    return deco
+from patientdataintegration_spark.suite.registry import register
 
 
 def _refresh_store(spark: SparkSession, sf_dir: str) -> str:
@@ -244,7 +232,7 @@ def _q292_sql(k: int = 5) -> str:
     """
 
 
-@_register("q292_refreshed_pruned_serving", _q292_sql())
+@register("q292_refreshed_pruned_serving", _q292_sql())
 def q292_refreshed_pruned_serving(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -351,7 +339,7 @@ def _q293_sql(top_n: int = 10) -> str:
     """
 
 
-@_register("q293_conjunctive_pruned_serving", _q293_sql())
+@register("q293_conjunctive_pruned_serving", _q293_sql())
 def q293_conjunctive_pruned_serving(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -380,12 +368,13 @@ def q293_conjunctive_pruned_serving(
         conjunctive_retrieval,
     )
     from patientdataintegration_spark.streaming.index import (
-        read_serving_relation,
+        read_serving_relations,
     )
 
     out, pairs, terms = _hot_pair_plan(spark, sf_dir)
-    idx_pruned = read_serving_relation(spark, out, "index", terms)
-    of_pruned = read_serving_relation(spark, out, "overflow", terms)
+    idx_pruned, of_pruned = read_serving_relations(
+        spark, out, ["index", "overflow"], terms
+    )
     hits = conjunctive_retrieval(idx_pruned, of_pruned, pairs)
     return hits.groupBy("term_a", "term_b").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_docs"),
@@ -404,7 +393,7 @@ def _q294_sql() -> str:
     return _q284_sql()
 
 
-@_register("q294_ivf_pruned_serving", _q294_sql())
+@register("q294_ivf_pruned_serving", _q294_sql())
 def q294_ivf_pruned_serving(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ANN top-k served from the IVF SERVING EXPORT with partition
     pruning (`streaming/ivf.export_ivf_serving_layout` +
@@ -471,7 +460,7 @@ def _q295_sql(k: int = 5) -> str:
     """
 
 
-@_register("q295_time_travel_export_serving", _q295_sql())
+@register("q295_time_travel_export_serving", _q295_sql())
 def q295_time_travel_export_serving(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -567,7 +556,7 @@ def _q296_sql() -> str:
     return _q284_sql()
 
 
-@_register("q296_ivf_refreshed_serving", _q296_sql())
+@register("q296_ivf_refreshed_serving", _q296_sql())
 def q296_ivf_refreshed_serving(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ANN top-k served from an INCREMENTALLY REFRESHED IVF export
     (`streaming/ivf.refresh_ivf_serving_layout`) — q292's row-grain
@@ -670,7 +659,7 @@ def _q297_sql(top_n: int = 10, k: int = 5) -> str:
     """
 
 
-@_register("q297_proximity_pruned_serving", _q297_sql())
+@register("q297_proximity_pruned_serving", _q297_sql())
 def q297_proximity_pruned_serving(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -746,7 +735,7 @@ def _q298_sql(cap: int = 16) -> str:
     """
 
 
-@_register("q298_export_erasure_sla", _q298_sql())
+@register("q298_export_erasure_sla", _q298_sql())
 def q298_export_erasure_sla(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The ERASURE-SLA certificate EXTENDED TO THE SERVING EXPORTS —
     q278's question one hop further out: the store retracted the
@@ -944,7 +933,7 @@ def _q299_sql(k: int = 5) -> str:
     """
 
 
-@_register("q299_continuous_serving", _q299_sql())
+@register("q299_continuous_serving", _q299_sql())
 def q299_continuous_serving(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CONTINUOUS SERVING — the streaming loop keeps the point-read
     layout fresh itself (`index_stream(serving_out=...)`): each
@@ -1045,7 +1034,7 @@ def _q300_sql() -> str:
     return _q284_sql()
 
 
-@_register("q300_ivf_continuous_serving", _q300_sql())
+@register("q300_ivf_continuous_serving", _q300_sql())
 def q300_ivf_continuous_serving(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CONTINUOUS SERVING for the ANN store — q299's geometric twin
     (`ivf_stream(serving_out=...)`): each micro-batch, after

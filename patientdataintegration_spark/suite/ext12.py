@@ -24,18 +24,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-QUERIES: dict = {}
-ORACLES: dict = {}
-
-
-def _register(name: str, sql: str | None = None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if sql is not None:
-            ORACLES[name] = sql
-        return fn
-
-    return deco
+from patientdataintegration_spark.suite.registry import register
 
 
 def _q301_sql() -> str:
@@ -46,7 +35,7 @@ def _q301_sql() -> str:
     return training_curve_oracle_sql()
 
 
-@_register("q301_training_curve", _q301_sql())
+@register("q301_training_curve", _q301_sql())
 def q301_training_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The 3-phase training loop as a hash-oracled lane (M4 analogue
     — reference `functions_v2.py:222-403`): six epochs of exact batch

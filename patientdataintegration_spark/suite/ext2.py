@@ -20,25 +20,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from patientdataintegration_spark.sources.catalog import load_table
-
-QUERIES: dict = {}
-ORACLES: dict = {}
-
-
-def _register(name: str, sql: str | None = None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if sql is not None:
-            ORACLES[name] = sql
-        return fn
-
-    return deco
+from patientdataintegration_spark.suite.registry import register
 
 
 # --- ROLLUP / grouping sets --------------------------------------------------
 
 
-@_register(
+@register(
     "q145_equidepth_histogram",
     """
     WITH r AS (
@@ -94,7 +82,7 @@ def q145_equidepth_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
 _Q146_LANGS = ("de", "en", "es", "fr", "zh")
 
 
-@_register(
+@register(
     "q146_pivot_lang",
     "SELECT source, "
     + ", ".join(
@@ -121,7 +109,7 @@ def q146_pivot_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- retention cohorts -------------------------------------------------------
 
 
-@_register(
+@register(
     "q147_retention_cohorts",
     """
     WITH w AS (
@@ -164,7 +152,7 @@ def q147_retention_cohorts(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- event transition matrix (first-order Markov) ---------------------------
 
 
-@_register(
+@register(
     "q148_markov_transitions",
     """
     WITH s AS (
@@ -219,7 +207,7 @@ def q148_markov_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- exact interpolated percentiles -----------------------------------------
 
 
-@_register(
+@register(
     "q149_percentiles",
     """
     SELECT event_type,
@@ -250,7 +238,7 @@ def q149_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- referential-integrity audit --------------------------------------------
 
 
-@_register(
+@register(
     "q150_orphan_audit",
     """
     SELECT 'lineitem->orders' AS fk, CAST(COUNT(*) AS BIGINT) AS n_orphans
@@ -314,7 +302,7 @@ def q150_orphan_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- gaps-and-islands activity streaks --------------------------------------
 
 
-@_register(
+@register(
     "q151_activity_streaks",
     """
     WITH d AS (
@@ -364,7 +352,7 @@ def q151_activity_streaks(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- week-over-week deltas ---------------------------------------------------
 
 
-@_register(
+@register(
     "q152_wow_change",
     """
     WITH w AS (
@@ -429,7 +417,7 @@ def q152_wow_change(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- snapshot diff (CDC between table versions) -----------------------------
 
 
-@_register(
+@register(
     "q153_snapshot_diff",
     """
     WITH old_s AS (
@@ -500,7 +488,7 @@ def q153_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- A/B comparison (Welch z-score) -----------------------------------------
 
 
-@_register(
+@register(
     "q154_abtest_zscore",
     """
     WITH g AS (
@@ -586,7 +574,7 @@ def q154_abtest_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- categorical column entropy ---------------------------------------------
 
 
-@_register(
+@register(
     "q155_column_entropy",
     """
     WITH u AS (
@@ -647,7 +635,7 @@ def q155_column_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- composite quality-gate verdict -----------------------------------------
 
 
-@_register(
+@register(
     "q156_quality_verdict",
     """
     WITH t AS (SELECT doc_id, text, string_split(text, ' ') AS toks FROM documents),
@@ -719,7 +707,7 @@ def _q157_sql() -> str:
     """
 
 
-@_register("q157_semantic_dedup", _q157_sql())
+@register("q157_semantic_dedup", _q157_sql())
 def q157_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Semantic dedup report: deterministic k-means over the
     embedding space (q132's operator) → one canonical vector per
@@ -793,7 +781,7 @@ def _q158_sql() -> str:
     """
 
 
-@_register("q158_best_split", _q158_sql())
+@register("q158_best_split", _q158_sql())
 def q158_best_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Best univariate split per feature by information gain — the
     decision-stump search (feature screening, the deterministic
@@ -875,7 +863,7 @@ def q158_best_split(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- XML interchange roundtrip ----------------------------------------------
 
 
-@_register(
+@register(
     "q159_xml_roundtrip",
     """
     SELECT source,

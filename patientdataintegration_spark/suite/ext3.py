@@ -29,19 +29,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window, functions as F
 
 from patientdataintegration_spark.sources.catalog import load_table
-
-QUERIES: dict = {}
-ORACLES: dict = {}
-
-
-def _register(name: str, sql: str | None = None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if sql is not None:
-            ORACLES[name] = sql
-        return fn
-
-    return deco
+from patientdataintegration_spark.suite.registry import register
 
 
 from patientdataintegration_spark.suite.core import dsum as _dsum  # noqa: E402
@@ -55,7 +43,7 @@ _REV = "CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(18,6))"
 # --- TPC-H Q2 shape: min-cost supplier (correlated MIN) ----------------------
 
 
-@_register(
+@register(
     "q160_min_cost_supplier",
     """
     WITH offer AS (
@@ -145,7 +133,7 @@ def q160_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- TPC-H Q14 shape: promo revenue share (conditional ratio) ----------------
 
 
-@_register(
+@register(
     "q161_promo_revenue",
     f"""
     SELECT
@@ -198,7 +186,7 @@ def q161_promo_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- TPC-H Q9 shape: product profit by nation x year -------------------------
 
 
-@_register(
+@register(
     "q162_product_profit",
     """
     SELECT n.n_name AS nation,
@@ -256,7 +244,7 @@ def q162_product_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- TPC-H Q10 shape: returned-item ranking ----------------------------------
 
 
-@_register(
+@register(
     "q163_returned_items",
     f"""
     SELECT c.c_custkey, c.c_name,
@@ -309,7 +297,7 @@ def q163_returned_items(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- TPC-H Q13 shape: order-count distribution (outer join + re-group) -------
 
 
-@_register(
+@register(
     "q164_order_count_distribution",
     """
     WITH per_cust AS (
@@ -349,7 +337,7 @@ def q164_order_count_distribution(spark: SparkSession, sf_dir: str) -> DataFrame
 # --- TPC-H Q17 shape: small-quantity revenue (correlated AVG) ----------------
 
 
-@_register(
+@register(
     "q165_small_qty_revenue",
     """
     SELECT CAST(SUM(CAST(l.l_extendedprice AS DECIMAL(18,6))) AS DOUBLE) / 7.0
@@ -406,7 +394,7 @@ def q165_small_qty_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- TPC-H Q18 shape: large-volume orders (IN over HAVING) -------------------
 
 
-@_register(
+@register(
     "q166_large_volume_orders",
     """
     SELECT c.c_name, c.c_custkey, o.o_orderkey, o.o_orderdate,
@@ -454,7 +442,7 @@ def q166_large_volume_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- TPC-H Q19 shape: disjunctive join predicate -----------------------------
 
 
-@_register(
+@register(
     "q167_disjunctive_join",
     f"""
     SELECT CAST(SUM({_REV}) AS DOUBLE) AS revenue, COUNT(*) AS n_lines
@@ -501,7 +489,7 @@ def q167_disjunctive_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- TPC-H Q15 shape: top supplier (CTE + scalar-MAX subquery) ---------------
 
 
-@_register(
+@register(
     "q168_top_supplier",
     f"""
     WITH r AS (
@@ -548,7 +536,7 @@ def q168_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- TPC-H Q11 shape: share-above-global-fraction (HAVING vs scalar) ---------
 
 
-@_register(
+@register(
     "q169_important_share",
     """
     WITH pp AS (
@@ -618,7 +606,7 @@ def q169_important_share(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- TPC-H Q21 shape: sole-fault supplier (EXISTS + NOT EXISTS) --------------
 
 
-@_register(
+@register(
     "q170_lonely_returner",
     """
     SELECT s.s_suppkey, s.s_name,
@@ -688,7 +676,7 @@ def q170_lonely_returner(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- TPC-H Q22 shape: dormant high-balance customers -------------------------
 
 
-@_register(
+@register(
     "q171_dormant_customers",
     """
     WITH ab AS (
@@ -807,7 +795,7 @@ def _degree_orient(e: DataFrame, deg: DataFrame) -> DataFrame:
     )
 
 
-@_register(
+@register(
     "q172_triangle_count",
     """
     WITH so AS (
@@ -932,7 +920,7 @@ def q172_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_register(
+@register(
     "q185_local_clustering",
     """
     WITH so AS (
@@ -1037,7 +1025,7 @@ def q185_local_clustering(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- profiling: Benford first-digit distribution -----------------------------
 
 
-@_register(
+@register(
     "q173_benford_digits",
     """
     WITH d AS (
@@ -1086,7 +1074,7 @@ def q173_benford_digits(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- CDC apply with deletes (MERGE semantics over a change log) --------------
 
 
-@_register(
+@register(
     "q174_cdc_apply",
     """
     WITH base AS (
@@ -1170,7 +1158,7 @@ def q174_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- spatial: grid-bucketed radius join --------------------------------------
 
 
-@_register(
+@register(
     "q175_grid_radius_join",
     """
     WITH cl AS (
@@ -1249,7 +1237,7 @@ def q175_grid_radius_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- marketing attribution: last-touch within lookback -----------------------
 
 
-@_register(
+@register(
     "q176_last_touch_attribution",
     """
     WITH ev AS (
@@ -1332,7 +1320,7 @@ def q176_last_touch_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- rolling correlation of two event series ---------------------------------
 
 
-@_register(
+@register(
     "q177_rolling_correlation",
     """
     WITH daily AS (
@@ -1423,7 +1411,7 @@ def q177_rolling_correlation(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- Pareto frontier (skyline) -----------------------------------------------
 
 
-@_register(
+@register(
     "q178_pareto_frontier",
     """
     WITH pts AS (
@@ -1488,7 +1476,7 @@ def q178_pareto_frontier(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- ordered string aggregation ----------------------------------------------
 
 
-@_register(
+@register(
     "q179_ordered_stringagg",
     """
     WITH ranked AS (
@@ -1538,10 +1526,10 @@ def q179_ordered_stringagg(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# --- streaming CDC upsert (rows-only: streaming execution lane) --------------
+# --- streaming CDC upsert ----------------------------------------------------
 
 
-@_register(
+@register(
     "q180_stream_cdc_upsert",
     """
     WITH ranked AS (
@@ -1595,7 +1583,7 @@ def q180_stream_cdc_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     return current_cdc_state(spark, f"{base}/table")
 
 
-# --- video modality lane (rows-only: pandas-UDF binary lane) -----------------
+# --- video modality lane (pandas-UDF binary lane) ----------------------------
 
 
 def _q181_sql() -> str:
@@ -1633,7 +1621,7 @@ def _q181_sql() -> str:
     """
 
 
-@_register("q181_video_frames", _q181_sql())
+@register("q181_video_frames", _q181_sql())
 def q181_video_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Video modality end-to-end with REAL decode: deterministic
     uncompressed AVI containers (synthetic_avis over the part table)
@@ -1684,7 +1672,7 @@ from patientdataintegration_spark.suite.ext import (  # noqa: E402
 )
 
 
-@_register("q182_udtf_chunking", _CHUNKING_ORACLE_SQL)
+@register("q182_udtf_chunking", _CHUNKING_ORACLE_SQL)
 def q182_udtf_chunking(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The Spark 4 Python-UDTF surface: per-row TABLE function
     consumed via a LATERAL join — one document row fans out to its
@@ -1712,7 +1700,7 @@ def q182_udtf_chunking(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- hierarchical percent-of-parent shares -----------------------------------
 
 
-@_register(
+@register(
     "q183_hierarchical_shares",
     """
     WITH base AS (
@@ -1783,7 +1771,7 @@ def q183_hierarchical_shares(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- top session paths -------------------------------------------------------
 
 
-@_register(
+@register(
     "q184_top_session_paths",
     """
     WITH ev AS (

@@ -29,25 +29,13 @@ from patientdataintegration_spark.suite.ext import (
     _lsh_pairs_sql,
     _minhash_sql,
 )
-
-QUERIES: dict = {}
-ORACLES: dict = {}
-
-
-def _register(name: str, sql: str | None = None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if sql is not None:
-            ORACLES[name] = sql
-        return fn
-
-    return deco
+from patientdataintegration_spark.suite.registry import register
 
 
 # --- market-basket association rules -----------------------------------------
 
 
-@_register(
+@register(
     "q186_market_basket",
     """
     WITH items AS (
@@ -137,7 +125,7 @@ def q186_market_basket(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- k-anonymity audit -------------------------------------------------------
 
 
-@_register(
+@register(
     "q187_k_anonymity",
     """
     WITH qi AS (
@@ -205,7 +193,7 @@ def _adjacent_pairs(tk):
 
 
 
-@_register(
+@register(
     "q188_bpe_pair_counts",
     """
     WITH t AS (
@@ -278,7 +266,7 @@ def _kcore_round_sql(i: int, k: int) -> str:
     )"""
 
 
-@_register(
+@register(
     "q189_kcore",
     "WITH "
     + _KCORE_EDGE_SQL
@@ -337,7 +325,7 @@ _MH_EQ_SQL = " + ".join(
 )
 
 
-@_register(
+@register(
     "q190_minhash_error",
     f"""
     WITH pairs AS ({_lsh_pairs_sql()}),
@@ -448,7 +436,7 @@ def q190_minhash_error(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- bigram-LM surprisal -----------------------------------------------------
 
 
-@_register(
+@register(
     "q191_bigram_surprisal",
     """
     WITH t AS (
@@ -566,7 +554,7 @@ def _srp_sql() -> str:
     """
 
 
-@_register("q192_random_projection", _srp_sql())
+@register("q192_random_projection", _srp_sql())
 def q192_random_projection(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Signed random projection — the SimHash of dense embeddings:
     project each vector onto k=8 deterministic +/-1 hyperplanes
@@ -665,7 +653,7 @@ def _q193_sql() -> str:
     """
 
 
-@_register("q193_image_dhash", _q193_sql())
+@register("q193_image_dhash", _q193_sql())
 def q193_image_dhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Perceptual difference-hash over a synthetic REAL-PNG corpus
     (`multimodal.image_dhash`): per-image 64-bit dHash with explicit
@@ -719,7 +707,7 @@ def _q194_sql() -> str:
     """
 
 
-@_register("q194_dhash_neardup", _q194_sql())
+@register("q194_dhash_neardup", _q194_sql())
 def q194_dhash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-duplicate image pairs by banded dHash hamming distance
     (`multimodal.dhash_neardup_pairs`): 8-bit pigeonhole bands ->
@@ -760,7 +748,7 @@ def _q195_sql() -> str:
     """
 
 
-@_register("q195_python_datasource", _q195_sql())
+@register("q195_python_datasource", _q195_sql())
 def q195_python_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Aggregation over the custom Python DataSource
     (`sources/pysource.SynthDocsDataSource`) — the Spark 4 DataSource
@@ -796,7 +784,7 @@ def q195_python_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_register(
+@register(
     "q196_python_stream_source",
     """
     WITH ids AS (SELECT unnest(range(0, 300)) AS i),
@@ -870,7 +858,7 @@ def q196_python_stream_source(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- sanctioned Python-UDF API surfaces (vectorized, oracle-checked) ---------
 
 
-@_register(
+@register(
     "q197_pandas_udf_scalar",
     """
     SELECT l_orderkey, l_linenumber,
@@ -902,7 +890,7 @@ def q197_pandas_udf_scalar(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_register(
+@register(
     "q198_grouped_agg_pandas",
     """
     SELECT c_nationkey,
@@ -941,7 +929,7 @@ def q198_grouped_agg_pandas(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_register(
+@register(
     "q199_apply_in_pandas",
     """
     WITH s AS (
@@ -1102,7 +1090,7 @@ def _q200_sql() -> str:
     """
 
 
-@_register("q200_corpus_curation", _q200_sql())
+@register("q200_corpus_curation", _q200_sql())
 def q200_corpus_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The flagship composite: a COMPLETE training-corpus curation
     pipeline as ONE lazy DAG, with per-source survivor accounting at
@@ -1192,7 +1180,7 @@ def q200_corpus_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out
 
 
-@_register(
+@register(
     "q201_stream_outer_join",
     """
     WITH e AS (SELECT event_id AS error_id, user_id, epoch_us(ts) AS e_us
@@ -1282,7 +1270,7 @@ def _q202_sql(k: int = 3) -> str:
     """
 
 
-@_register("q202_bruteforce_topk", _q202_sql())
+@register("q202_bruteforce_topk", _q202_sql())
 def q202_bruteforce_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """EXHAUSTIVE cosine top-k — the ground-truth baseline of the ANN
     family (`similarity.cosine_topk`): every query scored against
@@ -1325,7 +1313,7 @@ def _q203_sql() -> str:
     """
 
 
-@_register("q203_ann_recall", _q203_sql())
+@register("q203_ann_recall", _q203_sql())
 def q203_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Recall@3 of the IVF ANN (q98) against the exhaustive baseline
     (q202), per query — the measurement a pipeline owner runs before
@@ -1369,7 +1357,7 @@ def q203_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- distribution drift: two-sample Kolmogorov-Smirnov ------------------------
 
 
-@_register(
+@register(
     "q204_ks_drift",
     """
     WITH ref AS (
@@ -1463,7 +1451,7 @@ def q204_ks_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- audio metadata, closed-form oracle --------------------------------------
 
 
-@_register(
+@register(
     "q205_audio_metadata_exact",
     """
     WITH m AS (
@@ -1512,7 +1500,7 @@ def q205_audio_metadata_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_register(
+@register(
     "q206_image_decode_exact",
     """
     WITH px AS (

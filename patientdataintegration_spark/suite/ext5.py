@@ -25,19 +25,7 @@ from pyspark.sql.window import Window
 
 from patientdataintegration_spark.sources.catalog import load_table
 from patientdataintegration_spark.suite.ext4 import _srp_signs
-
-QUERIES: dict = {}
-ORACLES: dict = {}
-
-
-def _register(name: str, sql: str | None = None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if sql is not None:
-            ORACLES[name] = sql
-        return fn
-
-    return deco
+from patientdataintegration_spark.suite.registry import register
 
 
 # --- embedding-cosine near-duplicate dedup (planted-dup pipeline) -----------
@@ -152,7 +140,7 @@ def _neardup_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     return base.unionByName(planted)
 
 
-@_register("q207_embedding_neardup_clusters", _q207_sql())
+@register("q207_embedding_neardup_clusters", _q207_sql())
 def q207_embedding_neardup_clusters(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -207,7 +195,7 @@ def q207_embedding_neardup_clusters(
 # --- TPC-H Q21 shape: sole late supplier in multi-supplier orders -----------
 
 
-@_register(
+@register(
     "q208_sole_late_supplier",
     """
     WITH per_supp AS (
@@ -298,7 +286,7 @@ def q208_sole_late_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- TPC-H Q22 shape: rich customers with no orders -------------------------
 
 
-@_register(
+@register(
     "q209_rich_idle_customers",
     """
     WITH avg_bal AS (
@@ -366,7 +354,7 @@ def q209_rich_idle_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- exact grouped median (token counts per language) -----------------------
 
 
-@_register(
+@register(
     "q210_token_count_median",
     """
     WITH t AS (
@@ -434,7 +422,7 @@ def q210_token_count_median(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- join-key skew audit -----------------------------------------------------
 
 
-@_register(
+@register(
     "q211_join_key_skew",
     """
     WITH per_key AS (
@@ -498,7 +486,7 @@ def q211_join_key_skew(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- native pivot API --------------------------------------------------------
 
 
-@_register(
+@register(
     "q212_status_pivot",
     """
     SELECT o_orderpriority,
@@ -540,7 +528,7 @@ def q212_status_pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- TPC-H Q17 shape: small-quantity-order revenue --------------------------
 
 
-@_register(
+@register(
     "q213_small_qty_revenue",
     """
     WITH slice_parts AS (
@@ -606,7 +594,7 @@ def q213_small_qty_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- SCD Type-2 dimension history from an event log -------------------------
 
 
-@_register(
+@register(
     "q214_scd2_history",
     """
     WITH e AS (
@@ -678,7 +666,7 @@ def q214_scd2_history(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- sweep-line maximum concurrency ------------------------------------------
 
 
-@_register(
+@register(
     "q215_max_concurrency",
     """
     WITH iv AS (
@@ -741,7 +729,7 @@ def q215_max_concurrency(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- blocked fuzzy string join (edit distance) -------------------------------
 
 
-@_register(
+@register(
     "q216_fuzzy_name_match",
     """
     WITH names AS (
@@ -825,7 +813,7 @@ def q216_fuzzy_name_match(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- TPC-H Q7 shape: bilateral trade volume ----------------------------------
 
 
-@_register(
+@register(
     "q217_nation_trade_matrix",
     """
     SELECT n1.n_name AS supp_nation, n2.n_name AS cust_nation,
@@ -901,7 +889,7 @@ def q217_nation_trade_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- TPC-H Q8 shape: market share -------------------------------------------
 
 
-@_register(
+@register(
     "q218_market_share",
     """
     WITH base AS (
@@ -981,7 +969,7 @@ def q218_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- time-weighted average ---------------------------------------------------
 
 
-@_register(
+@register(
     "q219_time_weighted_avg",
     """
     WITH seq AS (
@@ -1045,7 +1033,7 @@ def q219_time_weighted_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- native session_window batch aggregation ---------------------------------
 
 
-@_register(
+@register(
     "q220_native_session_window",
     """
     WITH seq AS (
@@ -1109,7 +1097,7 @@ def q220_native_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- salted skew join equivalence --------------------------------------------
 
 
-@_register(
+@register(
     "q221_salted_join",
     """
     SELECT c.c_mktsegment,
@@ -1157,7 +1145,7 @@ def q221_salted_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- mapInArrow lane ----------------------------------------------------------
 
 
-@_register(
+@register(
     "q222_arrow_byte_stats",
     """
     SELECT lang,
@@ -1219,7 +1207,7 @@ def q222_arrow_byte_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_register(
+@register(
     "q223_stream_session_window",
     """
     WITH seq AS (
@@ -1282,7 +1270,7 @@ def q223_stream_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- RF quality verdict (the q95 partial-oracle pattern for MLlib) -----------
 
 
-@_register(
+@register(
     "q224_rf_quality_verdict",
     """
     SELECT CAST(COUNT(*) AS BIGINT) AS n_scored,
@@ -1295,8 +1283,8 @@ def q223_stream_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q224_rf_quality_verdict(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MLlib quality gate with the q95 partial-oracle pattern: the
     random-forest scores themselves are model internals no other
-    engine can replay (q94 stays the rows-only per-customer score
-    lane), but the PROPERTIES a pipeline gates deployment on are
+    engine can replay (q94 scores the deterministic forest instead,
+    operators/forest.py), but the PROPERTIES a pipeline gates deployment on are
     hash-checkable verdicts — every customer scored exactly once,
     accuracy strictly above chance, probabilities inside [0, 1],
     predictions binary. The oracle pins all four TRUE + the exact
@@ -1327,7 +1315,7 @@ def q224_rf_quality_verdict(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- TPC-H Q11 shape: concentrated suppliers ---------------------------------
 
 
-@_register(
+@register(
     "q225_revenue_concentration",
     """
     WITH per_supp AS (
@@ -1380,7 +1368,7 @@ def q225_revenue_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- TPC-H Q18 shape: large-volume orders ------------------------------------
 
 
-@_register(
+@register(
     "q226_large_volume_orders",
     """
     WITH big AS (
@@ -1437,7 +1425,7 @@ def q226_large_volume_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- TPC-H Q19 shape: disjunctive predicate revenue --------------------------
 
 
-@_register(
+@register(
     "q227_disjunctive_revenue",
     """
     SELECT CAST(COUNT(*) AS BIGINT) AS n_lines,
@@ -1497,7 +1485,7 @@ def q227_disjunctive_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- trailing event-time RANGE frame -----------------------------------------
 
 
-@_register(
+@register(
     "q228_trailing_hour_frame",
     """
     SELECT event_id,
@@ -1543,7 +1531,7 @@ def q228_trailing_hour_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- SQL UDFs (CREATE FUNCTION ... RETURN) ------------------------------------
 
 
-@_register(
+@register(
     "q229_sql_udf_macros",
     """
     SELECT CASE WHEN p.p_size <= 10 THEN 'small'
@@ -1611,7 +1599,7 @@ _Q230_SQL = """
 """
 
 
-@_register("q230_lateral_topk", _Q230_SQL)
+@register("q230_lateral_topk", _Q230_SQL)
 def q230_lateral_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Correlated LATERAL subquery with ORDER BY + LIMIT — per-nation
     top-2 suppliers by balance, spelled the way an analyst writes it
@@ -1635,7 +1623,7 @@ def q230_lateral_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_register(
+@register(
     "q231_stream_full_outer_join",
     """
     WITH e AS (SELECT event_id AS error_id, user_id, epoch_us(ts) AS e_us
@@ -1703,7 +1691,7 @@ def q231_stream_full_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- approx-percentile bucket edges (the sketch path for q54/q145) ----------
 
 
-@_register(
+@register(
     "q232_decile_edges_approx",
     """
     SELECT CAST(COUNT(*) AS BIGINT) AS n_total,
@@ -1751,7 +1739,7 @@ def q232_decile_edges_approx(spark: SparkSession, sf_dir: str) -> DataFrame:
     return approx_equidepth_verdict(c, "c_acctbal", 10, "sum_bal")
 
 
-@_register(
+@register(
     "q233_equidepth_approx",
     """
     SELECT CAST(COUNT(*) AS BIGINT) AS n_total,
@@ -1797,7 +1785,7 @@ _Q234_ROW = f"""concat_ws(chr(31),
            coalesce(CAST(CAST(o_totalprice AS DECIMAL(18,4)) AS VARCHAR), {_Q234_NULLTOK}))"""
 
 
-@_register(
+@register(
     "q234_table_checksum",
     f"""
     SELECT CAST(o_orderkey % 16 AS INT) AS shard,
@@ -1847,7 +1835,7 @@ def q234_table_checksum(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_register(
+@register(
     "q235_topk_per_group",
     """
     SELECT o_orderpriority, rnk,

@@ -29,25 +29,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from patientdataintegration_spark.sources.catalog import load_table
-
-QUERIES: dict = {}
-ORACLES: dict = {}
-
-
-def _register(name: str, sql: str | None = None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if sql is not None:
-            ORACLES[name] = sql
-        return fn
-
-    return deco
+from patientdataintegration_spark.suite.registry import register
 
 
 # --- streaming state-store introspection ------------------------------------
 
 
-@_register(
+@register(
     "q236_statestore_audit",
     """
     WITH agg AS (
@@ -94,7 +82,7 @@ def q236_statestore_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- mergeable sketches ------------------------------------------------------
 
 
-@_register(
+@register(
     "q237_hll_distinct_rollup",
     """
     SELECT 'group' AS grain,
@@ -134,7 +122,7 @@ def q237_hll_distinct_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     return hll_rollup(o, "m", "o_custkey", tol_pct=10)
 
 
-@_register(
+@register(
     "q238_theta_set_algebra",
     """
     WITH a AS (SELECT DISTINCT o_custkey AS v FROM orders
@@ -188,7 +176,7 @@ def q238_theta_set_algebra(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_register(
+@register(
     "q239_sharded_topk_brands",
     """
     SELECT p_brand AS item, CAST(COUNT(*) AS BIGINT) AS cnt
@@ -221,7 +209,7 @@ def q239_sharded_topk_brands(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- Bloom-prefiltered incremental dedup -------------------------------------
 
 
-@_register(
+@register(
     "q240_bloom_incremental_dedup",
     r"""
     WITH fp AS (
@@ -274,7 +262,7 @@ def q240_bloom_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- incremental DISTINCT maintenance (sketch-state store) ------------------
 
 
-@_register(
+@register(
     "q241_incremental_distinct",
     """
     SELECT strftime(CAST(o_orderdate AS DATE), '%Y-%m') AS bucket,
@@ -336,7 +324,7 @@ def q241_incremental_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- round-8 batch 3: exact bitmap distinct, join-view deltas, CMS ----------
 
 
-@_register(
+@register(
     "q242_join_view_maintenance",
     """
     SELECT c_mktsegment,
@@ -396,7 +384,7 @@ def q242_join_view_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_register(
+@register(
     "q243_bitmap_exact_distinct",
     """
     SELECT strftime(CAST(o_orderdate AS DATE), '%Y-%m') AS bucket,
@@ -444,7 +432,7 @@ def q243_bitmap_exact_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     return bitmap_distinct_readout(state, ["bucket"])
 
 
-@_register(
+@register(
     "q244_cms_brand_frequencies",
     """
     SELECT p_brand AS item,

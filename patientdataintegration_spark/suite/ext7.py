@@ -27,25 +27,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from patientdataintegration_spark.sources.catalog import load_table
-
-QUERIES: dict = {}
-ORACLES: dict = {}
-
-
-def _register(name: str, sql: str | None = None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if sql is not None:
-            ORACLES[name] = sql
-        return fn
-
-    return deco
+from patientdataintegration_spark.suite.registry import register
 
 
 # --- sessionizer state-store audit -------------------------------------------
 
 
-@_register(
+@register(
     "q245_sessionizer_state_audit",
     """
     WITH e AS (SELECT user_id, event_id, epoch_us(ts) AS us FROM events),
@@ -120,7 +108,7 @@ def q245_sessionizer_state_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- nightly-maintenance flagship --------------------------------------------
 
 
-@_register(
+@register(
     "q246_nightly_maintenance",
     r"""
     WITH m AS (
@@ -380,7 +368,7 @@ def q246_nightly_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- persisted Bloom store across delta generations ---------------------------
 
 
-@_register(
+@register(
     "q247_bloom_store_replay",
     r"""
     WITH fp AS (
@@ -466,7 +454,7 @@ def q247_bloom_store_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- rollup maintenance under retractions (CDC deletes) ----------------------
 
 
-@_register(
+@register(
     "q248_rollup_retractions",
     """
     SELECT strftime(CAST(o_orderdate AS DATE), '%Y-%m') AS m,
@@ -538,7 +526,7 @@ def q248_rollup_retractions(spark: SparkSession, sf_dir: str) -> DataFrame:
 _Q249_CUT_US = 1_706_140_800_000_000
 
 
-@_register(
+@register(
     "q249_incremental_sessionize",
     """
     WITH e AS (SELECT user_id, event_id, epoch_us(ts) AS us FROM events),
@@ -606,7 +594,7 @@ _Q250_COLS_DOC = (
 )
 
 
-@_register(
+@register(
     "q250_divergence_drill",
     """
     WITH mm AS (SELECT MIN(o_orderkey) AS kmin, MAX(o_orderkey) AS kmax
@@ -693,7 +681,7 @@ def q250_divergence_drill(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- plan-time skew advisor ----------------------------------------------------
 
 
-@_register(
+@register(
     "q251_skew_advisor",
     """
     WITH c AS (SELECT event_type, COUNT(*) AS cnt FROM events
@@ -750,7 +738,7 @@ def _q252_sql(n_cells: int = 16, iterations: int = 2, dim: int = 64) -> str:
     """
 
 
-@_register("q252_ivf_index_maintenance", _q252_sql())
+@register("q252_ivf_index_maintenance", _q252_sql())
 def q252_ivf_index_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF index maintenance under inserts — the ANN piece of the
     maintenance family: the coarse quantizer TRAINS ONCE on history
@@ -823,7 +811,7 @@ def q252_ivf_index_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- join-view maintenance under deletes ---------------------------------------
 
 
-@_register(
+@register(
     "q253_join_view_deletes",
     """
     SELECT c_mktsegment,
@@ -884,7 +872,7 @@ def q253_join_view_deletes(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- mergeable second-moment (variance) state ----------------------------------
 
 
-@_register(
+@register(
     "q254_moments_state",
     """
     WITH st AS (
@@ -987,7 +975,7 @@ def _q255_sql() -> str:
     """
 
 
-@_register("q255_histogram_quantile_state", _q255_sql())
+@register("q255_histogram_quantile_state", _q255_sql())
 def q255_histogram_quantile_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The quantile member of the maintenance family (`operators/
     incremental.histogram_state`): percentile_approx answers one

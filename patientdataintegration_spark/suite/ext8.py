@@ -37,25 +37,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from patientdataintegration_spark.sources.catalog import load_table
-
-QUERIES: dict = {}
-ORACLES: dict = {}
-
-
-def _register(name: str, sql: str | None = None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if sql is not None:
-            ORACLES[name] = sql
-        return fn
-
-    return deco
+from patientdataintegration_spark.suite.registry import register
 
 
 # --- late-data session repair ---------------------------------------------------
 
 
-@_register(
+@register(
     "q256_sessionize_late_repair",
     """
     WITH e AS (SELECT user_id, event_id, epoch_us(ts) AS us FROM events),
@@ -116,7 +104,7 @@ def q256_sessionize_late_repair(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- join-view maintenance under UPDATES (upsert CDC) ---------------------------
 
 
-@_register(
+@register(
     "q257_join_view_updates",
     """
     WITH post AS (
@@ -197,7 +185,7 @@ def q257_join_view_updates(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- advisor-driven salted join --------------------------------------------------
 
 
-@_register(
+@register(
     "q258_profiled_salted_join",
     """
     WITH dim AS (
@@ -265,7 +253,7 @@ def q258_profiled_salted_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- maintained per-key top-k ----------------------------------------------------
 
 
-@_register(
+@register(
     "q259_topk_state",
     """
     SELECT o_custkey, CAST(rk AS BIGINT) AS rank, o_orderkey, o_totalprice
@@ -329,7 +317,7 @@ def q259_topk_state(spark: SparkSession, sf_dir: str) -> DataFrame:
 _Q260_LO, _Q260_W, _Q260_B = 5000.0, 1000.0, 64
 
 
-@_register(
+@register(
     "q260_histogram_domain_audit",
     f"""
     SELECT l_returnflag,
@@ -392,7 +380,7 @@ def q260_histogram_domain_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- exact integer-grain moments (money measures) --------------------------------
 
 
-@_register(
+@register(
     "q261_moments_exact_money",
     """
     WITH st AS (
@@ -468,7 +456,7 @@ def q261_moments_exact_money(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- top-k maintenance under DELETES ---------------------------------------------
 
 
-@_register(
+@register(
     "q262_topk_retractions",
     """
     SELECT o_custkey, CAST(rk AS BIGINT) AS rank, o_orderkey, o_totalprice
@@ -528,7 +516,7 @@ def _q263_sql() -> str:
     return _lsh_pairs_sql()
 
 
-@_register("q263_incremental_lsh_pairs", _q263_sql())
+@register("q263_incremental_lsh_pairs", _q263_sql())
 def q263_incremental_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Maintained MinHash-LSH candidate-pair VIEW under corpus growth
     (`operators/dedup.maintain_lsh_pairs`) — the NEAR-dup member of
@@ -612,7 +600,7 @@ def _q264_sql(n_merges: int = 4, where: str = "") -> str:
     return "WITH " + ",\n    ".join(ctes) + "\n    " + "\n    UNION ALL ".join(finals)
 
 
-@_register("q264_bpe_merges", _q264_sql(4))
+@register("q264_bpe_merges", _q264_sql(4))
 def q264_bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BPE merge TRAINING over the documents corpus (`operators/
     textops.bpe_merges`, 4 merges) — the iterative tokenizer-building
@@ -682,7 +670,7 @@ def _q265_sql() -> str:
 _Q255LO, _Q255W = 900.0, 1626.5625
 
 
-@_register("q265_histogram_retractions", _q265_sql())
+@register("q265_histogram_retractions", _q265_sql())
 def q265_histogram_retractions(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Histogram-quantile maintenance under DELETES (`operators/
     incremental.histogram_state_signed/apply_histogram_retractions`)
@@ -727,7 +715,7 @@ def q265_histogram_retractions(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- rollup maintenance under UPDATES ----------------------------------------------
 
 
-@_register(
+@register(
     "q266_rollup_updates",
     """
     SELECT strftime(CAST(o_orderdate AS DATE), '%Y-%m') AS m,
@@ -827,7 +815,7 @@ def _q267_sql(n_merges: int = 4, top_k: int = 20) -> str:
     """
 
 
-@_register("q267_bpe_token_frequencies", _q267_sql(4, 20))
+@register("q267_bpe_token_frequencies", _q267_sql(4, 20))
 def q267_bpe_token_frequencies(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BPE APPLY (`operators/textops.bpe_token_frequencies`) — the
     other half of q264: tokenize the corpus with the learned 4-merge

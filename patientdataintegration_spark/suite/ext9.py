@@ -83,19 +83,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from patientdataintegration_spark.sources.catalog import load_table
-
-QUERIES: dict = {}
-ORACLES: dict = {}
-
-
-def _register(name: str, sql: str | None = None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if sql is not None:
-            ORACLES[name] = sql
-        return fn
-
-    return deco
+from patientdataintegration_spark.suite.registry import register
 
 
 # --- incremental connected components ----------------------------------------------
@@ -111,7 +99,7 @@ def _q268_sql() -> str:
     return _q115_sql()
 
 
-@_register("q268_maintain_components", _q268_sql())
+@register("q268_maintain_components", _q268_sql())
 def q268_maintain_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Connected-components maintenance under EDGE INSERTS
     (`operators/dedup.maintain_components`) — the graph member the
@@ -191,7 +179,7 @@ def _q269_sql(n_merges: int = 4) -> str:
     """
 
 
-@_register("q269_bpe_vocab_drift", _q269_sql(4))
+@register("q269_bpe_vocab_drift", _q269_sql(4))
 def q269_bpe_vocab_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BPE vocab-DRIFT audit — the q260 domain-drift pattern applied
     to tokenization, making the q264-trained merge table maintainable
@@ -251,7 +239,7 @@ def q269_bpe_vocab_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- streaming maintained top-k ------------------------------------------------------
 
 
-@_register(
+@register(
     "q270_streaming_topk",
     """
     SELECT CAST(o_custkey AS BIGINT) AS key,
@@ -301,7 +289,7 @@ def q270_streaming_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- top-k maintenance under UPDATES ------------------------------------------------
 
 
-@_register(
+@register(
     "q271_topk_updates",
     """
     SELECT o_custkey, CAST(rk AS BIGINT) AS "rank", o_orderkey,
@@ -392,7 +380,7 @@ def _q272_sql(mod: int = 7, rem: int = 2) -> str:
     """
 
 
-@_register("q272_retract_documents", _q272_sql())
+@register("q272_retract_documents", _q272_sql())
 def q272_retract_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Decremental dedup — DOCUMENT TAKEDOWNS (`operators/dedup.
     retract_documents`), the r11 verdict's #1 missing family member:
@@ -437,7 +425,7 @@ def q272_retract_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- streaming maintained dedup loop ------------------------------------------------
 
 
-@_register("q273_streaming_components", _q268_sql())
+@register("q273_streaming_components", _q268_sql())
 def q273_streaming_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The WHOLE nightly dedup loop — maintained pairs (q263) +
     maintained components (q268) — run under the streaming
@@ -549,7 +537,7 @@ def _q274_sql(mod: int = 7, rem: int = 2) -> str:
     """
 
 
-@_register("q274_takedown_certificate", _q274_sql())
+@register("q274_takedown_certificate", _q274_sql())
 def q274_takedown_certificate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The TAKEDOWN certificate — q246's nightly-maintenance
     certificate pattern applied to the new decremental verbs: ONE
@@ -695,7 +683,7 @@ def q274_takedown_certificate(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- streaming takedowns (full-CRUD dedup stream) ------------------------------------
 
 
-@_register("q275_streaming_takedowns", _q272_sql())
+@register("q275_streaming_takedowns", _q272_sql())
 def q275_streaming_takedowns(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The dedup loop as a FULL-CRUD stream — q273's streamed
     maintenance plus q272's takedowns riding the SAME exactly-once
@@ -846,7 +834,7 @@ def _q276_sql(
     """
 
 
-@_register("q276_retract_ivf", _q276_sql())
+@register("q276_retract_ivf", _q276_sql())
 def q276_retract_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ANN-index ERASURE (`operators/similarity.retract_ivf`) — the
     r12 verdict's #1 missing family member: the dedup family honors
@@ -913,7 +901,7 @@ def _q277_sql(mod: int = 7, rem: int = 2) -> str:
     """
 
 
-@_register("q277_retract_inverted_index", _q277_sql())
+@register("q277_retract_inverted_index", _q277_sql())
 def q277_retract_inverted_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Inverted-index ERASURE (`operators/indexing.
     retract_inverted_index`) — the r12 verdict's missing item 4: a
@@ -1010,7 +998,7 @@ def _q278_sql(mod: int = 7, rem: int = 2) -> str:
     """
 
 
-@_register("q278_erasure_sla_certificate", _q278_sql())
+@register("q278_erasure_sla_certificate", _q278_sql())
 def q278_erasure_sla_certificate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The ERASURE-SLA certificate — the r12 verdict's stretch 7:
     after a takedown batch (doc_id % 7 == 2; the embedding-side twin
@@ -1200,7 +1188,7 @@ def _q279_sql(top_n: int = 10) -> str:
     """
 
 
-@_register("q279_conjunctive_retrieval", _q279_sql())
+@register("q279_conjunctive_retrieval", _q279_sql())
 def q279_conjunctive_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Boolean-AND retrieval SERVED from the maintained capped index
     (`operators/indexing.conjunctive_retrieval`) — the read-side
@@ -1301,7 +1289,7 @@ def _q280_sql(k: int = 5, k1: str = "1.2", b: str = "0.75") -> str:
     """
 
 
-@_register("q280_bm25_topk", _q280_sql())
+@register("q280_bm25_topk", _q280_sql())
 def q280_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BM25 top-k retrieval (`operators/indexing.bm25_topk`) — the
     ranking function the inverted-index family exists to serve
@@ -1369,7 +1357,7 @@ def _q281_sql() -> str:
     """
 
 
-@_register("q281_extend_inverted_index", _q281_sql())
+@register("q281_extend_inverted_index", _q281_sql())
 def q281_extend_inverted_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Inverted-index INSERTS (`operators/indexing.
     extend_inverted_index`) — the verb that completes the index
@@ -1456,7 +1444,7 @@ def _q282_sql(top_n: int = 10) -> str:
     """
 
 
-@_register("q282_phrase_retrieval", _q282_sql())
+@register("q282_phrase_retrieval", _q282_sql())
 def q282_phrase_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact PHRASE retrieval (`operators/indexing.phrase_retrieval`
     over `positional_postings`) — the query class the doc-grain
@@ -1536,7 +1524,7 @@ def _q283_sql() -> str:
     """
 
 
-@_register("q283_streaming_index", _q283_sql())
+@register("q283_streaming_index", _q283_sql())
 def q283_streaming_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The maintained inverted index as a FULL-CRUD STREAM
     (`streaming/index.index_stream`) — the q273/q275 treatment
@@ -1672,7 +1660,7 @@ def _q284_sql(
     """
 
 
-@_register("q284_streaming_ivf", _q284_sql())
+@register("q284_streaming_ivf", _q284_sql())
 def q284_streaming_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The maintained IVF (ANN) index as a FULL-CRUD STREAM
     (`streaming/ivf.ivf_stream`) — with q273/q275 (dedup) and q283

@@ -197,20 +197,12 @@ def verify_query(
     spark: SparkSession, sf_dir: str, name: str, con=None
 ) -> dict:
     """Run one named suite query and its oracle; return a result dict
-    {name, rows, match, problems, rows_only}."""
+    {name, rows, match, problems}."""
     from patientdataintegration_spark.suite import ORACLES, QUERIES
 
     if name not in QUERIES:
         raise KeyError(f"unknown query {name!r}")
     sdf = QUERIES[name](spark, sf_dir).toPandas()
-    if name not in ORACLES:
-        return {
-            "name": name,
-            "rows": len(sdf),
-            "match": None,
-            "problems": [],
-            "rows_only": True,
-        }
     own_con = con is None
     if own_con:
         con = duckdb_connection(sf_dir)
@@ -225,5 +217,4 @@ def verify_query(
         "rows": len(sdf),
         "match": not problems,
         "problems": problems,
-        "rows_only": False,
     }

@@ -85,8 +85,7 @@ def test_streaming_reader_accepts_every_ts_encoding(spark, tmp_path, unit):
 def test_oracle_backed_outputs_are_scalar_columns(spark):
     """Every query with a SQL oracle is value-hashed by the harness
     via a pandas canonicalizer, which cannot hash array/map cells.
-    Assert no oracle-backed query emits one (rows-only lanes —
-    streaming/ML/binary — are exempt: they are never value-hashed).
+    Assert no oracle-backed query emits one.
 
     Schema-only check: builds each lazy plan, no execution."""
     from patientdataintegration_spark.suite import ORACLES, QUERIES
@@ -144,34 +143,3 @@ def test_complex_operators_survive_empty_input(spark):
     assert pagerank(empty_pairs).count() == 0
     assert fuzzy_name_pairs(empty_names, name_col="p_name").count() == 0
     assert kmeans_assign(empty_vecs, k=2, iterations=1).count() == 0
-
-
-def test_every_query_is_oracle_backed_or_documented_rows_only():
-    """Registry invariant: a query either carries a DuckDB oracle
-    (value-hashed by the driver) or is on the EXPLICIT rows-only
-    list below with a reason-class. A new query silently missing its
-    oracle fails here instead of silently downgrading to the weaker
-    rows-only driver check."""
-    from patientdataintegration_spark.suite import ORACLES, QUERIES
-
-    # EMPTY since r16. History of graduations: streaming lanes
-    # left in r8 (complete-mode finals q88/q90, single-batch
-    # dedup q89, eager INNER stream-stream join q99, custom
-    # sessionizer q96 with its timeout-eviction frontier replayed
-    # in SQL, CDC last-writer-wins q180, outer-emission frontiers
-    # q201/q231, generator-replay q196 — the q223 pattern); the
-    # binary decode lanes graduated to closed-form hash oracles
-    # (q91/q97 r5, q104 PCM + q181 video frames r6); the sketch
-    # lane q95 took a partial oracle in r6 (exact counts hashed,
-    # error-bound verdict pinned TRUE); and the last holdout —
-    # q94's ML ensemble — was re-expressed in r16 as the
-    # deterministic totally-random-split forest
-    # (operators/forest.py), whose train+score DuckDB replays
-    # bit-for-bit. Every registered query is now hash-oracled.
-    ROWS_ONLY: set[str] = set()
-    missing = set(QUERIES) - set(ORACLES) - ROWS_ONLY
-    stale = ROWS_ONLY - set(QUERIES)
-    over = ROWS_ONLY & set(ORACLES)
-    assert not missing, f"queries with neither oracle nor rows-only entry: {sorted(missing)}"
-    assert not stale, f"rows-only entries for unregistered queries: {sorted(stale)}"
-    assert not over, f"rows-only entries that HAVE oracles (remove): {sorted(over)}"

@@ -631,8 +631,9 @@ def test_plan_audit_flags_real_cartesians_only(spark, sf_dir):
     must NOT flag the sanctioned crossJoin-of-a-global-aggregate
     pattern this suite uses for scalar thresholds."""
     import sys
+    from pathlib import Path
 
-    sys.path.insert(0, "/root/repo/tools")
+    sys.path.insert(0, str(Path(__file__).resolve().parents[1] / "tools"))
     from plan_audit import _unsanctioned_nested_loops
 
     from patientdataintegration_spark.plans.inspect import explain_str

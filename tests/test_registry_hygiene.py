@@ -1,8 +1,8 @@
-"""Registry-hygiene contract (r6/r7 verdict stretch item): every
-registered query must carry (a) real documentation, (b) an oracle or
-an ENUMERATED rows-only reason, and (c) a current plan-audit entry
-with zero flags. A ratchet keeps per-query scale notes from
-regressing.
+"""Registry-hygiene contract: every registered query must carry (a)
+real documentation, (b) a DuckDB oracle, and (c) a current plan-audit
+entry with zero flags. A ratchet keeps per-query scale notes from
+regressing. The correctness harness's 50-lane prefix is the committed
+rotation manifest's sample.
 
 Process note: (c) means PLAN_AUDIT.json must be refreshed
 (`python tools/plan_audit.py`) whenever queries are added — which is
@@ -34,33 +34,22 @@ SCALE_NOTE_FLOOR = 185  # 190/240 as of r8; raise as docstrings improve
 def test_every_query_documented():
     undocumented = [
         n
-        for n, fn in suite._ALL_QUERIES.items()
+        for n, fn in suite.QUERIES.items()
         if len((fn.__doc__ or "").strip()) < 80
     ]
     assert undocumented == [], f"undocumented queries: {undocumented}"
 
 
-def test_every_query_has_oracle_or_enumerated_reason():
-    missing = [
-        n
-        for n in suite._ALL_QUERIES
-        if n not in suite._ALL_ORACLES and n not in suite.ROWS_ONLY_REASONS
-    ]
-    assert missing == [], (
-        f"queries with neither oracle nor ROWS_ONLY_REASONS entry: {missing}"
-    )
-    stale = [n for n in suite.ROWS_ONLY_REASONS if n not in suite._ALL_QUERIES]
-    assert stale == [], f"ROWS_ONLY_REASONS names not registered: {stale}"
-    both = [n for n in suite.ROWS_ONLY_REASONS if n in suite._ALL_ORACLES]
-    assert both == [], f"ROWS_ONLY_REASONS entries that HAVE oracles: {both}"
-    empty = [n for n, r in suite.ROWS_ONLY_REASONS.items() if len(r) < 40]
-    assert empty == [], f"rows-only reasons too thin to audit: {empty}"
+def test_every_query_has_oracle():
+    """Every lane is value-hashed against its DuckDB twin; a lane
+    without one would silently fall back to a row-count check."""
+    assert set(suite.QUERIES) == set(suite.ORACLES)
 
 
 def test_every_query_plan_audited():
     audit = json.loads((REPO / "PLAN_AUDIT.json").read_text())
     assert audit["flags"] == [], f"plan audit flags outstanding: {audit['flags']}"
-    unaudited = sorted(set(suite._ALL_QUERIES) - set(audit["report"]))
+    unaudited = sorted(set(suite.QUERIES) - set(audit["report"]))
     assert unaudited == [], (
         f"queries missing from PLAN_AUDIT.json (run tools/plan_audit.py): "
         f"{unaudited}"
@@ -70,7 +59,7 @@ def test_every_query_plan_audited():
 def test_scale_note_ratchet():
     with_note = [
         n
-        for n, fn in suite._ALL_QUERIES.items()
+        for n, fn in suite.QUERIES.items()
         if SCALE_RE.search(fn.__doc__ or "")
     ]
     assert len(with_note) >= SCALE_NOTE_FLOOR, (
@@ -90,17 +79,19 @@ def test_scale_note_ratchet():
 
 
 def test_priority_window_shape():
-    """The driver checks a 50-name prefix; every name must be
-    registered and hash-checkable (rows-only lanes stay out of the
-    window per the r6 verdict)."""
-    assert len(suite.PRIORITY) == 50
-    assert len(set(suite.PRIORITY)) == 50
-    unregistered = [n for n in suite.PRIORITY if n not in suite._ALL_QUERIES]
-    assert unregistered == []
-    rows_only_in_window = [
-        n for n in suite.PRIORITY if n in suite.ROWS_ONLY_REASONS
-    ]
-    assert rows_only_in_window == []
+    """The correctness harness certifies the first 50 lanes of
+    `queries()`. They are the committed rotation manifest's sample: 50
+    distinct registered lanes, every lane changed since its last
+    certification among them."""
+    import __spark_entry__
+
+    manifest = json.loads((REPO / "tools" / "rotation_manifest.json").read_text())
+    prefix = list(__spark_entry__.queries())[:50]
+    assert prefix == manifest["recommended_sample"]
+    assert len(set(prefix)) == 50
+    assert set(prefix) <= set(suite.QUERIES)
+    missing = set(manifest["changed_this_round"]) - set(prefix)
+    assert missing == set(), f"changed lanes outside the certified prefix: {missing}"
 
 
 def _streaming_imports():
@@ -180,3 +171,20 @@ def test_store_layout_and_commit_evidence_live_only_in_store_py():
                     evidence.append((path.name, node.lineno))
     assert paths == [], f"generation paths built outside store.py: {paths}"
     assert evidence == [], f"commit files named outside store.py: {evidence}"
+
+
+def test_serving_meta_file_named_only_in_serving_py():
+    """`streaming/serving.py` alone knows the serving layout's meta
+    file. Another `streaming/` module that names `serving_meta.json`
+    reads or tests the layout's state behind serving.py's back."""
+    pkg = REPO / "patientdataintegration_spark" / "streaming"
+    named = [
+        (path.name, node.lineno)
+        for path in sorted(pkg.glob("*.py"))
+        if path.name != "serving.py"
+        for node in ast.walk(ast.parse(path.read_text()))
+        if isinstance(node, ast.Constant)
+        and isinstance(node.value, str)
+        and "serving_meta.json" in node.value
+    ]
+    assert named == [], f"serving meta file named outside serving.py: {named}"

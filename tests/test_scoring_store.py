@@ -1351,3 +1351,47 @@ def test_refresh_crash_before_flip_leaves_old_layout_intact(
     assert untouched, "test needs untouched buckets to witness"
     for p, s in untouched.items():
         assert after.get(p) == s, f"untouched bucket not carried over: {p}"
+
+
+@pytest.mark.parametrize("lane", [
+    "q290_bm25_pruned_serving",
+    "q292_refreshed_pruned_serving",
+    "q293_conjunctive_pruned_serving",
+    "q295_time_travel_export_serving",
+])
+def test_serving_lanes_read_the_meta_once(spark, sf_dir, tmp_path, monkeypatch, lane):
+    """A serve pairs relations (tf with its stats, index with its
+    overflow) that must come from one layout version: each lane build
+    reads the serving meta exactly once. The lanes serve a stand-in
+    layout of empty relation directories, so no store is built."""
+    from patientdataintegration_spark.streaming import index, serving
+    from patientdataintegration_spark.suite import QUERIES, ext10, ext11
+
+    out = str(tmp_path / "export")
+    rels = ("tf", "index", "overflow", "stats")
+    for rel in rels:
+        os.makedirs(os.path.join(out, f"{rel}_v1"))
+    serving.write_serving_meta(out, {
+        "version": 1, "n_buckets": 4, "relations": list(rels[:3]),
+        "dirs": {rel: f"{rel}_v1" for rel in rels},
+    })
+    pairs = spark.createDataFrame([("a", "b")], "term_a string, term_b string")
+    monkeypatch.setattr(ext10, "_shared_serving_export", lambda s, d: out)
+    monkeypatch.setattr(ext11, "_refreshed_serving_export", lambda s, d: out)
+    monkeypatch.setattr(ext11, "_ttravel_serving_export", lambda s, d: out)
+    monkeypatch.setattr(
+        ext11, "_hot_pair_plan", lambda s, d: (out, pairs, ["a", "b"])
+    )
+    monkeypatch.setattr(index, "collect_pruning_terms", lambda df: ["a", "b"])
+
+    calls = []
+    real = serving.read_serving_meta
+
+    def counting(out_dir):
+        calls.append(out_dir)
+        return real(out_dir)
+
+    for mod in (serving, index):
+        monkeypatch.setattr(mod, "read_serving_meta", counting)
+    QUERIES[lane](spark, sf_dir)
+    assert calls == [out], f"{len(calls)} serving meta reads"

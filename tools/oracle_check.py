@@ -42,9 +42,7 @@ def main() -> int:
             failures += 1
             continue
         dt = time.time() - t0
-        if res["rows_only"]:
-            print(f"ok?  {name}: rows-only ({res['rows']} rows, {dt:.1f}s)")
-        elif res["match"]:
+        if res["match"]:
             print(f"PASS {name} ({res['rows']} rows, {dt:.1f}s)")
         else:
             failures += 1

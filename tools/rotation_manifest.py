@@ -1,26 +1,26 @@
-"""CORRECTNESS rotation manifest (r16 verdict item 5 / r17 item 6).
+"""The lane rotation of the correctness harness, computed by one rule.
 
-Scans every committed CORRECTNESS_r*.json and emits, per declared
-query, the LAST round the driver's oracle gate certified it — the
-staleness signal the 50-lane sample pick should feed on, so a lane
-whose semantics-relevant code changed in round N is never left
-uncertified for several rounds by rotation luck (the r17 gap:
-q272/q274/q278/q268/q263 changed and were not in the sample).
+The harness certifies only the first 50 lanes of `queries()`, and
+`__spark_entry__.queries()` puts this manifest's `recommended_sample`
+first. The rule: the lanes whose code changed (`--changed`) first,
+then the stalest — never certified, then by the last round whose
+committed CORRECTNESS_r*.json matched rows, schema and hash, then by
+name — so a touched lane is certified by the next harness run, not
+by rotation luck.
 
-Usage:
-    python tools/rotation_manifest.py [--repo /root/repo] \
-        [--changed q272_x q278_y ...] [--pick 50]
+Rerun it at the end of every change with `--changed` set to the lanes
+the change touched, and commit the manifest:
+
+    python tools/rotation_manifest.py --changed q272_x q278_y ... [--pick 50]
 
 Writes tools/rotation_manifest.json:
     {"last_checked": {lane: round | null, ...},
      "never_checked": [...],
-     "recommended_sample": [...]}   # --pick lanes: changed-this-round
-                                    # first, then by max staleness
+     "changed_this_round": [...],
+     "recommended_sample": [...]}
 
-The recommendation also drives the builder's own in-round oracle runs
-(tools/oracle_check.py <recommended lanes>) so every touched lane is
-re-certified against DuckDB before the round closes even when the
-driver's rotation misses it.
+`tools/oracle_check.py <recommended lanes>` certifies the same sample
+locally before the change closes.
 """
 
 from __future__ import annotations
@@ -32,7 +32,8 @@ import os
 import re
 import sys
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 
 def build_manifest(repo: str) -> dict[str, int | None]:
@@ -60,28 +61,31 @@ def build_manifest(repo: str) -> dict[str, int | None]:
             )
             if ok and (last[lane] is None or rnd > last[lane]):
                 last[lane] = rnd
-
-
     return last
 
 
 def main() -> None:
     ap = argparse.ArgumentParser()
-    ap.add_argument("--repo", default=os.path.dirname(
-        os.path.dirname(os.path.abspath(__file__))))
+    ap.add_argument("--repo", default=REPO)
     ap.add_argument("--changed", nargs="*", default=[],
-                    help="lanes whose code changed this round — always "
-                         "first in the recommended sample")
+                    help="lanes whose code changed — always first in the "
+                         "recommended sample")
     ap.add_argument("--pick", type=int, default=50)
     args = ap.parse_args()
 
     last = build_manifest(args.repo)
+    changed = list(dict.fromkeys(args.changed))
+    unknown = [l for l in changed if l not in last]
+    if unknown:
+        ap.error(f"--changed names unregistered lanes: {unknown}")
+    if len(changed) > args.pick:
+        ap.error(f"{len(changed)} changed lanes do not fit a sample of "
+                 f"{args.pick}")
     never = sorted(l for l, r in last.items() if r is None)
     # staleness order: never-checked first, then oldest round, then name
     by_staleness = sorted(
         last, key=lambda l: (last[l] if last[l] is not None else -1, l)
     )
-    changed = [l for l in args.changed if l in last]
     rest = [l for l in by_staleness if l not in set(changed)]
     rec = (changed + rest)[: args.pick]
 
