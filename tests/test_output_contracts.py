@@ -143,3 +143,20 @@ def test_complex_operators_survive_empty_input(spark):
     assert pagerank(empty_pairs).count() == 0
     assert fuzzy_name_pairs(empty_names, name_col="p_name").count() == 0
     assert kmeans_assign(empty_vecs, k=2, iterations=1).count() == 0
+
+
+def test_every_query_is_oracle_backed_or_documented_rows_only():
+    """The harness value-hashes each `queries()` lane against the
+    same-named `oracle_sql()` entry. No lane is documented as
+    rows-only any more, so the entry adapter must hand out a
+    non-blank oracle for every lane and none for an unknown name."""
+    import __spark_entry__
+
+    lanes = set(__spark_entry__.queries())
+    oracles = __spark_entry__.oracle_sql()
+    missing = lanes - set(oracles)
+    stale = set(oracles) - lanes
+    blank = sorted(n for n, sql in oracles.items() if not sql.strip())
+    assert not missing, f"lanes without an oracle: {sorted(missing)}"
+    assert not stale, f"oracles for unregistered lanes: {sorted(stale)}"
+    assert not blank, f"blank oracle SQL: {blank}"
