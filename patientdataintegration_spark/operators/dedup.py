@@ -745,6 +745,18 @@ def _star_labels_bounded(
     return connected_components_star(e, id_a="a", id_b="b", max_rounds=max_rounds)
 
 
+def star_labels(pairs: DataFrame) -> DataFrame:
+    """`connected_components_star`'s (node, label) relation of a
+    (doc_a, doc_b) edge relation through the bounded labeler: driver
+    union-find under `spark.pdi.star.driverMaxEdges` distinct edges,
+    the distributed star above it. For seed labelings, which are
+    written once (`cached_parquet`)."""
+    labels = _star_labels_bounded(pairs)
+    if labels is None:
+        return pairs.sparkSession.createDataFrame([], "node bigint, label bigint")
+    return labels
+
+
 def _contracted_star(
     labels_old: DataFrame,
     new_edges: DataFrame,

@@ -25,6 +25,11 @@ hardened per the round-4 ADVICE findings:
   marker (`_SUCCESS`) is resolved through the session's Hadoop
   FileSystem API, so the check works for hdfs:// / s3a:// checkpoint
   locations, not only local paths.
+- **Job-free reads**: `read_parquet` is the engine's parquet read
+  (the catalog, this cache and the delta-generation store use it); a
+  schema memo keyed on the content fingerprint spares the
+  schema-inference job for every relation the session wrote or has
+  read before.
 """
 
 from __future__ import annotations
@@ -33,10 +38,13 @@ import hashlib
 import logging
 import os
 import tempfile
+import threading
 import uuid
+from collections import OrderedDict
 from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import ArrayType, DataType, MapType, StructField, StructType
 
 
 def corpus_fingerprint(*paths: str) -> str:
@@ -44,7 +52,14 @@ def corpus_fingerprint(*paths: str) -> str:
     size, mtime_ns) triples, plus the absolute path itself. Local
     filesystem only; for remote inputs (no os.stat) the stat portion
     degrades to path-only — still never weaker than the old scheme."""
+    return _fingerprint(paths)[0]
+
+
+def _fingerprint(paths) -> tuple[str, bool]:
+    """(`corpus_fingerprint`, whether every input was a local file or
+    directory whose whole inventory was stat'ed)."""
     h = hashlib.md5()
+    statted = True
     for p in paths:
         ap = os.path.abspath(p)
         h.update(ap.encode())
@@ -63,7 +78,10 @@ def corpus_fingerprint(*paths: str) -> str:
                         )
                 for rel, size, mt in sorted(entries):
                     h.update(f"|{rel}|{size}|{mt}".encode())
+            else:
+                statted = False
         except OSError as e:
+            statted = False
             # Degrading to a path-only key mid-walk weakens cache
             # invalidation (an in-place corpus regen may be missed) —
             # that must leave a signal, not happen silently.
@@ -73,7 +91,104 @@ def corpus_fingerprint(*paths: str) -> str:
                 ap,
                 e,
             )
-    return h.hexdigest()[:16]
+    return h.hexdigest()[:16], statted
+
+
+# In-process schema memo behind `read_parquet`. A parquet read without
+# a schema runs one footer-inference job (~70 ms against ~9 ms with
+# the schema given); the engine reads back relations it wrote itself
+# and catalog tables it has read before, so the schema is usually
+# known. Keyed on the path's `corpus_fingerprint` (an overwritten or
+# appended relation never reuses a stale schema) plus the session
+# confs that change what inference returns; process-wide because an
+# entry is a function of its key alone, so every session and thread
+# may share it. LRU-bounded: a long session writes a delta per batch.
+_INFER_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+)
+_SCHEMAS: OrderedDict = OrderedDict()
+_SCHEMAS_MAX = 4096
+_SCHEMAS_LOCK = threading.Lock()
+
+
+def _schema_key(spark: SparkSession, path: str) -> tuple | None:
+    # None: the path cannot be stat'ed (a non-local URI, a missing
+    # path), so nothing proves a remembered schema still holds
+    fp, statted = _fingerprint([path])
+    if not statted:
+        return None
+    return (fp, tuple(spark.conf.get(k) for k in _INFER_CONFS))
+
+
+def known_schema(spark: SparkSession, path: str) -> StructType | None:
+    """The memoized schema of the parquet relation at `path` as it is
+    now on disk, or None when the memo does not hold it."""
+    return _lookup(_schema_key(spark, path))
+
+
+def _lookup(key: tuple | None) -> StructType | None:
+    if key is None:
+        return None
+    with _SCHEMAS_LOCK:
+        schema = _SCHEMAS.get(key)
+        if schema is not None:
+            _SCHEMAS.move_to_end(key)
+        return schema
+
+
+def _memoize(key: tuple, schema: StructType) -> None:
+    with _SCHEMAS_LOCK:
+        _SCHEMAS[key] = schema
+        _SCHEMAS.move_to_end(key)
+        while len(_SCHEMAS) > _SCHEMAS_MAX:
+            _SCHEMAS.popitem(last=False)
+
+
+def _as_read_back(dt: DataType) -> DataType:
+    # Spark reads every parquet field, array element and map value
+    # back as nullable, whatever the written schema declared
+    if isinstance(dt, StructType):
+        return StructType([
+            StructField(f.name, _as_read_back(f.dataType), True, f.metadata)
+            for f in dt.fields
+        ])
+    if isinstance(dt, ArrayType):
+        return ArrayType(_as_read_back(dt.elementType), True)
+    if isinstance(dt, MapType):
+        return MapType(
+            _as_read_back(dt.keyType), _as_read_back(dt.valueType), True
+        )
+    return dt
+
+
+def remember_schema(spark: SparkSession, path: str, schema: StructType) -> None:
+    """Seed the memo for an UNPARTITIONED parquet relation just written
+    at `path` from `schema`, the written DataFrame's schema — call
+    after the write returned, so the fingerprint covers its files."""
+    key = _schema_key(spark, path)
+    if key is not None:
+        _memoize(key, _as_read_back(schema))
+
+
+def read_parquet(
+    spark: SparkSession, path: str, schema: str | StructType | None = None
+) -> DataFrame:
+    """The engine's parquet read. With `schema`, or when the memo knows
+    the relation's schema, the read plans without a Spark job; a miss
+    runs Spark's inferring read once and memoizes its schema."""
+    if schema is not None:
+        return spark.read.schema(schema).parquet(path)
+    key = _schema_key(spark, path)
+    known = _lookup(key)
+    if known is not None:
+        return spark.read.schema(known).parquet(path)
+    df = spark.read.parquet(path)
+    if key is not None:
+        _memoize(key, df.schema)
+    return df
 
 
 def _user_cache_root() -> str:
@@ -133,11 +248,14 @@ def ensure_materialized(
     rename it into place. Two racing cache-miss writers each write
     their own tmp; exactly one rename wins, the loser deletes its tmp
     and reads the winner's (identical — the relation is a pure
-    function of the inputs the cache key fingerprints)."""
+    function of the inputs the cache key fingerprints). The winner
+    seeds the schema memo, so the cache read plans without a job."""
     if is_materialized(spark, final_dir):
         return final_dir
     tmp = f"{final_dir}.tmp-{os.getpid()}-{uuid.uuid4().hex[:8]}"
-    producer().write.mode("overwrite").parquet(tmp)
+    df = producer()
+    df.write.mode("overwrite").parquet(tmp)
+    won = False
     try:
         fs, jfinal, jvm = _hadoop_fs(spark, final_dir)
         jtmp = jvm.org.apache.hadoop.fs.Path(tmp)
@@ -175,13 +293,18 @@ def ensure_materialized(
             )
             if fs.exists(nested):
                 fs.delete(nested, True)
+            else:
+                won = True
     except Exception:
         if is_materialized(spark, final_dir):
             pass  # a concurrent writer completed; our tmp is garbage
         elif os.path.isdir(tmp) and not os.path.exists(final_dir):
             os.rename(tmp, final_dir)  # local-path fallback
+            won = True
         else:
             raise
+    if won:
+        remember_schema(spark, final_dir, df.schema)
     return final_dir
 
 
@@ -195,4 +318,4 @@ def cached_parquet(
     location + idempotent materialization + parquet scan."""
     final_dir = cache_path(kind, *input_paths)
     ensure_materialized(spark, final_dir, producer)
-    return spark.read.parquet(final_dir)
+    return read_parquet(spark, final_dir)

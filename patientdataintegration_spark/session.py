@@ -69,6 +69,11 @@ def build_session(
         .config("spark.sql.files.maxPartitionBytes", "134217728")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
+        # a session compiles many more distinct whole-stage plans than
+        # Spark's default cache of 100 holds (store reads and repairs
+        # re-plan per micro-batch); 1024 keeps them, 4096 compiles no
+        # fewer
+        .config("spark.sql.codegen.cache.maxEntries", "1024")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

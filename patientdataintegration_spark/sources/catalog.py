@@ -13,6 +13,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.types import TimestampNTZType
 
+from patientdataintegration_spark.plans.materialize import read_parquet
+
 TABLES = (
     "region",
     "nation",
@@ -75,7 +77,9 @@ def normalize_timestamps(df: DataFrame) -> DataFrame:
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Lazy parquet scan of one catalog table.
+    """Lazy parquet scan of one catalog table; after the first read of
+    a table the scan plans without a schema-inference job
+    (`materialize.read_parquet`).
 
     Timestamp columns are normalized to `TimestampType` regardless of
     the on-disk encoding (nanos-as-bigint or TIMESTAMP_NTZ) — see
@@ -85,7 +89,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; catalog has {TABLES}")
     enable_nanos_read(spark)
-    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    df = read_parquet(spark, f"{sf_dir}/{name}.parquet")
     return normalize_timestamps(df)
 
 

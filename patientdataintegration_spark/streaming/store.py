@@ -39,6 +39,9 @@ below, crash remnants included. Disk is therefore bounded by
 2×base + 2×compact_every×delta (`store_disk_report`). Removal is a
 local `shutil.rmtree`; on an object store it is a prefix delete issued
 by the same rule.
+
+Reads plan without a Spark job: each write memoizes the relation's
+schema (`materialize.remember_schema`) for `materialize.read_parquet`.
 """
 
 from __future__ import annotations
@@ -50,6 +53,11 @@ from concurrent.futures import ThreadPoolExecutor
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from patientdataintegration_spark.plans.materialize import (
+    read_parquet,
+    remember_schema,
+)
 
 _GEN_RE = re.compile(r"^(base|delta)_g(\d+)$")
 _SENTINEL = "_COMMITTED"
@@ -75,13 +83,17 @@ def parallel_actions(fns: list) -> list:
 
 def overwrite(df: DataFrame, path: str, *partition_by: str):
     """The parquet overwrite of `df` at `path` (hive-partitioned by
-    `partition_by`, if given) as a closure for `parallel_actions`."""
+    `partition_by`, if given) as a closure for `parallel_actions`. An
+    unpartitioned relation's schema is memoized once the write
+    returned, so reading it back plans without a job."""
 
     def write() -> None:
         w = df.write.mode("overwrite")
         if partition_by:
             w = w.partitionBy(*partition_by)
         w.parquet(path)
+        if not partition_by:
+            remember_schema(df.sparkSession, path, df.schema)
 
     return write
 
@@ -261,11 +273,6 @@ def base_relations(store_dir: str) -> set[str]:
     return {e for e in os.listdir(d) if os.path.isdir(os.path.join(d, e))}
 
 
-def _reader(spark: SparkSession, schema: str | None):
-    # an explicit schema reads without a schema-inference job
-    return spark.read if schema is None else spark.read.schema(schema)
-
-
 def read_base(
     spark: SparkSession,
     store_dir: str,
@@ -274,7 +281,7 @@ def read_base(
     schema: str | None = None,
 ) -> DataFrame:
     """Relation `name` of base_g{gen} (`resolve`'s base)."""
-    return _reader(spark, schema).parquet(base_path(store_dir, gen, name))
+    return read_parquet(spark, base_path(store_dir, gen, name), schema)
 
 
 def read_deltas(
@@ -288,8 +295,8 @@ def read_deltas(
     with its generation (`_gen`). Delta-sized by design."""
     out: DataFrame | None = None
     for g in gens:
-        df = _reader(spark, schema).parquet(
-            delta_path(store_dir, g, name)
+        df = read_parquet(
+            spark, delta_path(store_dir, g, name), schema
         ).withColumn("_gen", F.lit(g).cast("bigint"))
         out = df if out is None else out.unionByName(df)
     return out
@@ -314,7 +321,7 @@ def read_newest(
     )
     if not os.path.isdir(path):
         return None
-    return spark.read.schema(schema).parquet(path)
+    return read_parquet(spark, path, schema)
 
 
 def tombs_by_id(

@@ -569,18 +569,17 @@ def cached_minhash_sigs(spark: SparkSession, sf_dir: str) -> DataFrame:
 def cached_star_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The star labeling of `cached_lsh_pairs` — the persisted LABEL
     table the decremental lanes (q272/q274) maintain. Building it is
-    q115's measured job; lanes whose verb is RETRACTION read it as
-    stored state, content-keyed on the corpus."""
-    from patientdataintegration_spark.operators.dedup import (
-        connected_components_star,
-    )
+    q115's relation; lanes whose verb is RETRACTION read it as stored
+    state, content-keyed on the corpus, and it is labeled once through
+    the bounded labeler (`dedup.star_labels`)."""
+    from patientdataintegration_spark.operators.dedup import star_labels
     from patientdataintegration_spark.plans.materialize import cached_parquet
 
     return cached_parquet(
         spark,
         "star_labels_b4r2",
         [f"{sf_dir}/documents.parquet"],
-        lambda: connected_components_star(cached_lsh_pairs(spark, sf_dir)),
+        lambda: star_labels(cached_lsh_pairs(spark, sf_dir)),
     )
 
 

@@ -458,8 +458,8 @@ def q273_streaming_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     production, and this lane measures the STREAMED maintenance, not
     rebuilding yesterday's state per invocation."""
     from patientdataintegration_spark.operators.dedup import (
-        connected_components_star,
         lsh_candidate_pairs,
+        star_labels,
     )
     from patientdataintegration_spark.plans.materialize import cached_parquet
     from patientdataintegration_spark.scratch import scratch_dir
@@ -482,7 +482,7 @@ def q273_streaming_components(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark,
         "star_labels_hist70",
         [docs_path],
-        lambda: connected_components_star(pairs0),
+        lambda: star_labels(pairs0),
     )
     root = scratch_dir("stream_components", sf_dir)
     src, store, ckpt = (f"{root}/{p}" for p in ("src", "store", "ckpt"))
@@ -714,8 +714,8 @@ def q275_streaming_takedowns(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
 
     from patientdataintegration_spark.operators.dedup import (
-        connected_components_star,
         lsh_candidate_pairs,
+        star_labels,
     )
     from patientdataintegration_spark.plans.materialize import cached_parquet
     from patientdataintegration_spark.scratch import scratch_dir
@@ -738,7 +738,7 @@ def q275_streaming_takedowns(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark,
         "star_labels_hist70",
         [docs_path],
-        lambda: connected_components_star(pairs0),
+        lambda: star_labels(pairs0),
     )
     root = scratch_dir("stream_takedowns", sf_dir)
     src, store, ckpt = (f"{root}/{p}" for p in ("src", "store", "ckpt"))

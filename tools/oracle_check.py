@@ -27,7 +27,11 @@ def main() -> int:
     from patientdataintegration_spark.suite import QUERIES
     from patientdataintegration_spark.verify import duckdb_connection, verify_query
 
-    spark = build_session("oracle-check")
+    # no console progress bar: it writes onto the PASS/FAIL lines
+    # when stderr and stdout share one log
+    spark = build_session(
+        "oracle-check", extra_conf={"spark.ui.showConsoleProgress": "false"}
+    )
     con = duckdb_connection(sf_dir)
 
     failures = 0
