@@ -235,9 +235,10 @@ def test_unstattable_path_takes_the_inferring_read(spark, tmp_path):
 
 def test_concurrent_writers_leave_the_memo_consistent(spark, tmp_path):
     paths = [str(tmp_path / f"rel{i}") for i in range(6)]
+    types = ["bigint", "string", "double"]
     frames = [
         spark.range(4).select(
-            *(F.col("id").cast(t).alias(f"c{j}") for j, t in enumerate(["bigint", "string", "double"][: 1 + i % 3])),
+            *(F.col("id").cast(t).alias(f"c{j}") for j, t in enumerate(types[: 1 + i % 3])),
             F.array(F.col("id")).alias(f"arr{i}"),
         )
         for i in range(len(paths))
